@@ -17,13 +17,15 @@ object BlockResult {
   def bytes(b: Array[Byte]): BlockResult = BlockResult(Seq(b))
 }
 
-/** Execution placement of a block's per-row work. */
+/** Whether a block's per-row work is pure. In the [[Runner]] it only
+  * picks fan-out concurrency; [[BulkRunner]] runs only Distributed
+  * blocks and rejects DriverSide ones. */
 sealed trait ExecMode extends Serializable
-/** Pure compute — rows run distributed via mapPartitions (media) or as
-  * Column expressions (text); Spark owns the parallelism. */
+/** Pure compute — the Runner runs fan-out rows concurrently; BulkRunner
+  * runs them as Column expressions (text) or via mapPartitions. */
 case object Distributed extends ExecMode
-/** Side-effecting (external clients, moderation) — ordered driver loop;
-  * `parallel: true` fan-out uses driver futures, mirroring the
+/** Side-effecting (external clients, moderation) — ordered loop in the
+  * Runner; `parallel: true` fan-out uses futures, mirroring the
   * reference's goroutine-per-row (pipeline.go:607-625). */
 case object DriverSide extends ExecMode
 
@@ -56,8 +58,7 @@ trait BlockOp extends Serializable {
     * block, config/config.yaml — e.g. false for fetch_moderation_tg):
     * `input_config.parallel` only takes effect when the block allows
     * it. Meaningful for DriverSide blocks where side-effect order
-    * matters; pure Distributed compute is safely parallel under
-    * Spark's task model regardless. */
+    * matters; pure Distributed blocks always fan out in parallel. */
   def parallelAvailable: Boolean = true
   /** Availability detector (block Detector trait); unavailable blocks
     * halt the run (the reference would transfer to a peer — E15,
@@ -103,9 +104,10 @@ trait BlockOp extends Serializable {
   }
 }
 
-/** A block whose body is a pure Column expression over its string
-  * inputs — the "functions, not UDFs" path: the Runner executes these
-  * as one DataFrame select over all fan-out rows, fully codegen'd. */
+/** A block whose body is also a pure Column expression over its string
+  * inputs — the "functions, not UDFs" form that [[BulkRunner]] and the
+  * gate queries run as one codegen'd select; the Runner calls
+  * `process`. */
 trait ExprBlockOp extends BlockOp {
   /** Output value as a Column over the input property columns. */
   def outputColumn(in: String => Column): Column

@@ -6,8 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-gate queries that put the pipeline BLOCK semantics under the
-  * DuckDB hash-compare: the exact `outputColumn` expressions the Runner
-  * executes (text_replace/wrap_text — reference blocks #17/#18) and the
+  * DuckDB hash-compare: the exact `outputColumn` expressions BulkRunner
+  * executes (text_replace/wrap_text — reference blocks #17/#18; specs
+  * pin them to the `process` form the Runner calls) and the
   * JsonPathExtract Catalyst expression behind E2 wiring, applied
   * corpus-wide. One parquet scan, zero shuffles, fully codegen'd — at
   * 100 TB these are embarrassingly parallel map stages. */

@@ -1,29 +1,26 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.SparkSession
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.Try
 
 /** Pipeline execution engine: the reference's PipelineData.Process loop
-  * (types/dataclasses/pipeline.go:146-640) re-expressed driver-side,
-  * with each stage's data plane executed by Spark.
+  * (types/dataclasses/pipeline.go:146-640) re-expressed driver-side.
   *
   * Engine ops covered here (SURVEY §2.1): E6 input priority, E7
   * parallel/sequential fan-out, E8 conditional stop, E9 retry, E10
   * regeneration, E11-E13 checkpoint/resume/collapse, E14 run-ledger.
   * E1-E5 live in [[Wiring]].
   *
-  * Execution placement per block:
-  *  - [[ExprBlockOp]] → ONE DataFrame select over all fan-out rows
-  *    (codegen'd Column expressions — "functions, not UDFs");
-  *  - Distributed → `mapPartitions` over the fan-out rows (pure media
-  *    compute scales with the cluster);
-  *  - DriverSide → ordered loop (side-effecting client stages), with
-  *    `parallel: true` fan-out via futures, mirroring the reference's
-  *    goroutine-per-row (pipeline.go:607-627).
+  * Every block runs in-process through `BlockOp.process`, one call per
+  * fan-out row, like the reference's per-row processor calls over
+  * driver-held output buffers (pipeline.go:607-627); no Spark job is
+  * launched. The block's [[ExecMode]] only picks fan-out concurrency:
+  *  - Distributed (pure compute) → rows run concurrently on futures;
+  *  - DriverSide (side effects) → ordered loop with early abort, or
+  *    futures when `parallel: true` and the block allows it.
+  * Data-scale fan-out runs on Spark through [[BulkRunner]] instead.
   */
 object Runner {
 
@@ -57,10 +54,7 @@ object Runner {
       spark: SparkSession,
       registry: BlockRegistry,
       checkpoint: CheckpointStore,
-      ctx: BlockCtx,
-      /** Follow a regeneration request synchronously (the reference
-        * re-enters Process in a goroutine, pipeline.go:458-505). */
-      followRegeneration: Boolean = true)
+      ctx: BlockCtx)
 
   def newProcessingId(): String = java.util.UUID.randomUUID().toString
 
@@ -190,21 +184,12 @@ object Runner {
         }
       }
 
-      // Execute.
+      // Execute. E7: pure blocks always fan out in parallel; side-effecting
+      // ones only with `parallel: true` and the `parallel_available` gate.
       val t0 = now()
-      val results: Seq[(Int, Try[BlockResult])] = op match {
-        case e: ExprBlockOp if prepared.nonEmpty =>
-          Try(runExpr(e, prepared.toSeq, conf)) match {
-            case scala.util.Success(rs) => rs.map { case (i, r) => (i, scala.util.Success(r)) }
-            case scala.util.Failure(ex) => prepared.map(r => (r.idx, scala.util.Failure(ex))).toSeq
-          }
-        case _ if op.mode == Distributed =>
-          runDistributed(op, prepared.toSeq, conf)
-        case _ =>
-          // E7 with the per-block `parallel_available` gate
-          runDriverSide(op, prepared.toSeq, ic.parallel && op.parallelAvailable,
-            conf, processingId, blockSpec, ledger)
-      }
+      val results = runRows(op, prepared.toSeq,
+        parallel = op.mode == Distributed || (ic.parallel && op.parallelAvailable),
+        conf.ctx.copy(processingId = processingId, blockSlug = blockSpec.slug))
 
       // Commit results in idx order: stop/error/regenerate handling +
       // E13 collapse + E11 checkpoint.
@@ -257,10 +242,12 @@ object Runner {
               ledger += LedgerEntry(blockSpec.slug, idx, status, 1, t0, now())
               commitPartial()
               if (res.targetSlug.nonEmpty && res.targetIdx >= 0) {
-                // E10: replay the resolved input of the target row.
+                // E10: replay the resolved input of the target row,
+                // synchronously (the reference re-enters Process in a
+                // goroutine, pipeline.go:458-505).
                 val replay = blockInputsData.get(res.targetSlug)
                   .flatMap(_.lift(res.targetIdx)).getOrElse(Map.empty)
-                if (conf.followRegeneration && depth < 8)
+                if (depth < 8)
                   return runLoop(spec,
                     StartInput(res.targetSlug, replay, res.targetIdx),
                     conf, processingId, ledger, depth + 1)
@@ -291,74 +278,20 @@ object Runner {
     RunReport(processingId, Completed, outputs.toMap, ledger.toSeq)
   }
 
-  // ------------------------------------------------------ exec paths
-  private def sparkType(t: PType): DataType = t match {
-    case TString | TUrl | TColor => StringType
-    case TFile                   => BinaryType
-    case TNumber                 => DoubleType
-    case TInt                    => LongType
-    case TBool                   => BooleanType
-    case TArr(e)                 => ArrayType(sparkType(e))
-    case TObj                    => StringType // JSON-rendered
-  }
-
-  private def toAny(t: PType, v: PValue): Any = (t, v) match {
-    case (_, PNull)       => null
-    case (TFile, x)       => x.asBytes
-    case (TNumber, x)     => x.asDouble
-    case (TInt, x)        => x.asLong
-    case (TBool, x)       => x.asBool
-    case (TArr(e), PArr(xs)) => xs.map(toAny(e, _))
-    case (TArr(e), x)     => Seq(toAny(e, x))
-    case (TObj, x)        => Json.render(x)
-    case (_, x)           => x.asString
-  }
-
-  /** ExprBlockOp path: one codegen'd select over every fan-out row. */
-  private def runExpr(op: ExprBlockOp, rows: Seq[InputRow],
-      conf: RunConfig): Seq[(Int, BlockResult)] = {
-    val fields = StructField("__graft_idx", IntegerType) +:
-      op.props.map(p => StructField(p.name, sparkType(p.typ), nullable = true))
-    val data = rows.map { r =>
-      Row.fromSeq(r.idx +: op.props.map(p =>
-        r.props.get(p.name).map(toAny(p.typ, _)).orNull))
-    }
-    val df = conf.spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(data).asJava),
-      StructType(fields))
-    val out = df.select(col("__graft_idx"),
-      op.outputColumn(name => col(name)).cast("string").as("value"))
-    out.collect().map(r =>
-      (r.getInt(0), BlockResult.text(Option(r.getString(1)).getOrElse("")))).toSeq
-  }
-
-  /** Distributed path: fan-out rows as one Spark stage (mapPartitions
-    * over the row RDD — media compute with cluster parallelism). */
-  private def runDistributed(op: BlockOp, rows: Seq[InputRow],
-      conf: RunConfig): Seq[(Int, Try[BlockResult])] = {
-    if (rows.isEmpty) return Nil
-    val ctx = conf.ctx
-    val slices = math.min(rows.size,
-      math.max(1, conf.spark.sparkContext.defaultParallelism))
-    conf.spark.sparkContext.parallelize(rows, slices)
-      .map(r => (r.idx, Try(op.process(r, ctx))))
-      .collect().toSeq
-  }
-
-  /** DriverSide path: retry loop per row (E9, processing.go:188-296);
-    * sequential mode aborts at the first error/stop (pipeline.go:
-    * 613-624), parallel mode mirrors goroutine-per-row. */
-  private def runDriverSide(op: BlockOp, rows: Seq[InputRow], parallel: Boolean,
-      conf: RunConfig, processingId: String, blockSpec: BlockSpec,
-      ledger: scala.collection.mutable.ArrayBuffer[LedgerEntry]): Seq[(Int, Try[BlockResult])] = {
+  // ------------------------------------------------------ execution
+  /** Runs a block over its fan-out rows with a retry loop per row (E9,
+    * processing.go:188-296); sequential mode aborts at the first
+    * error/stop (pipeline.go:613-624), parallel mode mirrors
+    * goroutine-per-row. */
+  private def runRows(op: BlockOp, rows: Seq[InputRow], parallel: Boolean,
+      ctx: BlockCtx): Seq[(Int, Try[BlockResult])] = {
 
     def runOne(r: InputRow): Try[BlockResult] = {
       val retries = r.props.get("retry_count").map(_.asLong.toInt)
         .getOrElse(op.retryCount)
       val interval = r.props.get("retry_interval_ms").map(_.asLong)
         .getOrElse(op.retryIntervalMs)
-      val rowCtx = conf.ctx.copy(processingId = processingId,
-        blockSlug = blockSpec.slug, inputIndex = r.idx)
+      val rowCtx = ctx.copy(inputIndex = r.idx)
       var attempt = 0
       var last: Try[BlockResult] = null
       while (attempt <= retries) {
@@ -377,7 +310,9 @@ object Runner {
       last
     }
 
-    if (parallel) {
+    // One row runs on the caller's thread: it never waits for a pool
+    // thread behind other runs' fan-out or image compute.
+    if (parallel && rows.size > 1) {
       implicit val ec: ExecutionContext = ExecutionContext.global
       val fs = rows.map(r => Future((r.idx, runOne(r))))
       Await.result(Future.sequence(fs), Duration.Inf)

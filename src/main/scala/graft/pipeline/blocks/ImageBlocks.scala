@@ -7,9 +7,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
 /** Image operators (#6-8) over java.awt (headless, no external deps —
-  * offline build). Pure per-row compute → Distributed: the Runner ships
-  * rows through mapPartitions, so a million-image fan-out runs as a
-  * normal Spark stage.
+  * offline build). Pure per-row compute → Distributed: the Runner runs
+  * fan-out rows concurrently in-process, and BulkRunner ships them
+  * through mapPartitions, so a million-image fan-out runs as a normal
+  * Spark stage.
   *
   * Pixel parity note: the reference resizes with Lanczos and blurs with
   * gg's gaussian (block_image_resize.go:52-89, block_image_blur.go:

@@ -7,10 +7,10 @@ import java.nio.file.{Files, Path}
   *
   * The reference shells to ffmpeg with temp files per block
   * (e.g. block_video_from_image.go:100-130); we do the same inside the
-  * block body, which the Runner executes via mapPartitions — each Spark
-  * task runs its own ffmpeg over its rows, so a fan-out of N clips
-  * encodes with cluster parallelism while argv/tempfile handling stays
-  * byte-compatible with the reference.
+  * block body. The Runner calls it once per fan-out row, concurrently;
+  * under BulkRunner each Spark task runs its own ffmpeg over its rows,
+  * so a fan-out of N clips encodes with cluster parallelism. Either way
+  * argv/tempfile handling stays byte-compatible with the reference.
   *
   * Availability: a Detector probes the binary (`ffmpeg -version`), like
   * the reference's detector conditions; absent binary ⇒ block

@@ -5,10 +5,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Pure-text operators (reference blocks #17-20) — each implemented
-  * twice on purpose: `process` is the exact Scala port (used per-row
-  * and in property tests), `outputColumn` the codegen'd Column form the
-  * Runner uses to execute ALL fan-out rows in one distributed select
-  * ("functions, not UDFs"). A spec asserts the two agree.
+  * twice on purpose: `process` is the exact Scala port the Runner calls
+  * per row, `outputColumn` the codegen'd Column form that BulkRunner
+  * and the `pl_text_ops` gate query run over whole DataFrames
+  * ("functions, not UDFs"). Specs assert the two agree.
   */
 object TextBlocks {
 
@@ -17,6 +17,16 @@ object TextBlocks {
     * block_text_replace.go:66-76). */
   private def trimLeftSpaces(s: String): String = s.dropWhile(_ == ' ')
   private def ltrimSp(c: Column): Column = ltrim(c, " ")
+
+  /** Go strings.ReplaceAll: an empty `old` matches at the start and
+    * after every rune (Java's replace would split surrogate pairs). */
+  private def replaceAll(s: String, old: String, rep: String): String =
+    if (old.nonEmpty) s.replace(old, rep)
+    else {
+      val sb = new java.lang.StringBuilder(rep)
+      s.codePoints.forEach { cp => sb.appendCodePoint(cp).append(rep) }
+      sb.toString
+    }
 
   /** #17 text_replace (block_text_replace.go:49-79). */
   object TextReplace extends ExprBlockOp {
@@ -34,12 +44,19 @@ object TextBlocks {
       val old = trimLeftSpaces(row.str("old"))
       val nw = trimLeftSpaces(row.str("new"))
       val wrapped = trimLeftSpaces(row.str("prefix")) + nw + trimLeftSpaces(row.str("suffix"))
-      BlockResult.text(text.replace(old, wrapped))
+      BlockResult.text(replaceAll(text, old, wrapped))
     }
 
-    override def outputColumn(in: String => Column): Column =
-      replace(ltrimSp(in("text")), ltrimSp(in("old")),
-        concat(ltrimSp(in("prefix")), ltrimSp(in("new")), ltrimSp(in("suffix"))))
+    override def outputColumn(in: String => Column): Column = {
+      val text = ltrimSp(in("text"))
+      val old = ltrimSp(in("old"))
+      val wrapped = concat(ltrimSp(in("prefix")), ltrimSp(in("new")), ltrimSp(in("suffix")))
+      // Spark's replace returns the text unchanged for an empty `old`;
+      // split(text, "") yields one element per code point.
+      val everyRune = when(text === "", wrapped).otherwise(concat(wrapped,
+        array_join(transform(split(text, ""), c => concat(c, wrapped)), "")))
+      when(old === "", everyRune).otherwise(replace(text, old, wrapped))
+    }
   }
 
   /** #18 wrap_text / BlockTextAddPrefixOrSuffix (block_wrap_text.go:49-74). */

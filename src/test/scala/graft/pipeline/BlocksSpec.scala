@@ -29,6 +29,17 @@ class BlocksSpec extends AnyFunSuite {
     assert(new String(r.outputs.head, "UTF-8") == "hello <Ada>, <Ada>!")
   }
 
+  test("text_replace with an empty old follows Go's strings.ReplaceAll") {
+    def replaced(text: String, old: String): String = new String(
+      runPrepared(TextBlocks.TextReplace, "text" -> PStr(text),
+        "old" -> PStr(old), "new" -> PStr("X")).outputs.head, "UTF-8")
+    assert(replaced("ab", "") == "XaXbX")
+    assert(replaced("ab", "  ") == "XaXbX") // left-trimmed to empty
+    assert(replaced("", "") == "X")
+    // a non-BMP character is one rune: its surrogate pair stays whole
+    assert(replaced("a\uD83D\uDE00b", "") == "XaX\uD83D\uDE00XbX")
+  }
+
   test("wrap_text concatenates prefix + text + suffix") {
     val r = runPrepared(TextBlocks.WrapText,
       "text" -> PStr("  body"), "prefix" -> PStr(" A "), "suffix" -> PStr(" Z"))
@@ -53,6 +64,14 @@ class BlocksSpec extends AnyFunSuite {
       TextBlocks.TextReplace -> row("text" -> PStr(" a b a"),
         "old" -> PStr("a"), "new" -> PStr("X"),
         "prefix" -> PStr("("), "suffix" -> PStr(")")),
+      TextBlocks.TextReplace -> row("text" -> PStr("ab"),
+        "old" -> PStr(""), "new" -> PStr("X")),
+      TextBlocks.TextReplace -> row("text" -> PStr(" abc"),
+        "old" -> PStr("  "), "new" -> PStr("-")),
+      TextBlocks.TextReplace -> row("text" -> PStr("a\uD83D\uDE00b"),
+        "old" -> PStr(""), "new" -> PStr("X")),
+      TextBlocks.TextReplace -> row("text" -> PStr(""),
+        "old" -> PStr(""), "new" -> PStr("X")),
       TextBlocks.WrapText -> row("text" -> PStr("mid"),
         "prefix" -> PStr("<<"), "suffix" -> PStr(">>")),
       TextBlocks.JoinStrings -> row(

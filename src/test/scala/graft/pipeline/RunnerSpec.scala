@@ -3,7 +3,21 @@ package graft.pipeline
 import graft.SparkTestSession
 import graft.pipeline.Clients.{MockLLMClient, MockModerationClient, ModerationUpdate}
 import graft.pipeline.Runner._
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+
+/** A text block that throws on fan-out row 2 and records the rows it ran. */
+private class FailOnRow2(override val id: String, override val mode: ExecMode)
+    extends BlockOp {
+  val invoked = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  override val props = Seq(PropSpec("text", TString, required = true))
+  override def process(row: InputRow, ctx: BlockCtx): BlockResult = {
+    invoked.add(row.idx)
+    if (row.idx == 2) throw new IllegalStateException("boom at row 2")
+    BlockResult.text(row.str("text"))
+  }
+}
 
 /** End-to-end engine scenarios, mirroring the reference functional
   * suite (test/functional/pipeline_test.go): fan-out from a
@@ -414,5 +428,81 @@ class RunnerSpec extends AnyFunSuite {
     val rows = report.outputs("chunk").sortBy(_._1).map(r => new String(r._2, "UTF-8"))
     assert(rows == Seq("ID3chunk-0", "ID3chunk-1", "ID3chunk-2"))
     java.nio.file.Files.delete(stub)
+  }
+
+  test("a run launches no Spark job: every block runs through process()") {
+    val textSpec = parse(
+      """{"slug":"no-jobs-text","title":"t","description":"d","blocks":[
+        |{"id":"text_replace","slug":"replace","description":"replace a word of the request text",
+        | "input":{"old":"cat","new":"dog"}},
+        |{"id":"wrap_text","slug":"wrap","description":"wrap the replaced text",
+        | "input":{"prefix":"<","suffix":">"},
+        | "input_config":{"property":{"text":{"origin":"replace"}}}},
+        |{"id":"join_strings","slug":"join","description":"join the wrapped text",
+        | "input":{"separator":"+"},
+        | "input_config":{"property":{"strings":{"origin":"wrap","array_input":true}}}},
+        |{"id":"format_string_from_object","slug":"format","description":"format the joined text",
+        | "input":{"template":"out={body}"},
+        | "input_config":{"property":{"body":{"origin":"join"}}}}
+        |]}""".stripMargin)
+    val imageSpec = parse(
+      """{"slug":"no-jobs-image","title":"t","description":"d","blocks":[
+        |{"id":"upload_file","slug":"upload","description":"accept the uploaded image bytes"},
+        |{"id":"image_resize","slug":"resize","description":"resize the upload to a square",
+        | "input":{"width":16,"height":16,"keep_aspect_ratio":false},
+        | "input_config":{"property":{"image":{"origin":"upload"}}}}
+        |]}""".stripMargin)
+    val (conf, _, _, _) = freshConf()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc) // jobs of earlier tests are not counted
+    sc.addSparkListener(listener)
+    try {
+      val text = process(textSpec,
+        StartInput(input = Map("text" -> PStr("the cat sat"))), conf)
+      assert(text.status == Completed)
+      assert(str(text, "format") == "out=<the dog sat>")
+      val image = process(imageSpec, StartInput(input = Map(
+        "file" -> PBytes(MockLLMClient.pngBytes("no-jobs")))), conf)
+      assert(image.status == Completed)
+      val resized = javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(image.outputs("resize").head._2))
+      assert((resized.getWidth, resized.getHeight) == ((16, 16)))
+      ListenerBusDrain(sc)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs launched by pipeline runs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a block throwing on fan-out row 2 of 4 fails the run; rows 0-1 survive") {
+    val pure = new FailOnRow2("fail_pure", Distributed)
+    val ordered = new FailOnRow2("fail_ordered", DriverSide)
+    val reg = new BlockRegistry(registry.byId.values.toSeq ++ Seq(pure, ordered))
+    Seq(pure, ordered).foreach { op =>
+      val spec = PipelineSpec.parse(
+        s"""{"slug":"${op.id}","title":"t","description":"d","blocks":[
+           |{"id":"openai_transcription_request","slug":"tr","description":"transcribe the uploaded audio bytes",
+           | "input":{"audio":"fake-audio"}},
+           |{"id":"${op.id}","slug":"boom","description":"throw on the third segment",
+           | "input_config":{"type":"array","property":{
+           |   "text":{"origin":"tr","json_path":"$$.segments[*].text"}}}}
+           |]}""".stripMargin, reg.ids).fold(e => fail(e.mkString("; ")), identity)
+      val (conf0, _, _, _) = freshConf()
+      val conf = conf0.copy(registry = reg)
+      val report = process(spec, StartInput(), conf)
+      assert(report.status.isInstanceOf[Failed], op.id)
+      assert(report.ledger.exists(e => e.block == "boom" && e.idx == 2 && e.status == "failed"))
+      assert(report.ledger.filter(e => e.block == "boom" && e.status == "completed")
+        .map(_.idx).sorted == Seq(0, 1), op.id)
+      // rows 0-1 are committed and checkpointed; row 3 is not committed
+      assert(report.outputs("boom").map(_._1).sorted == Seq(0, 1), op.id)
+      val saved = conf.checkpoint.loadOutput(spec.slug, report.processingId, "boom")
+      assert(saved.map(_.map(_._1).sorted).contains(Seq(0, 1)), op.id)
+    }
+    // the sequential side-effecting block aborts before row 3
+    assert(scala.jdk.CollectionConverters.CollectionHasAsScala(ordered.invoked)
+      .asScala.toSeq == Seq(0, 1, 2))
   }
 }

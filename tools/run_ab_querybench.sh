@@ -2,8 +2,8 @@
 # Interleaved cross-build QueryBench A/B — the round-14 adjudicator
 # protocol's instrument: any per-query BENCH_r* row moving >10%
 # round-over-round is not citable until both builds run ALTERNATING
-# under the same host conditions. Whole invocations alternate
-# A,B,A,B,... (each internally warmup + min-of-<iters>), so a load
+# under the same host conditions. Whole invocations run in ABBA order
+# (A,B then B,A; each internally warmup + min-of-<iters>), so a load
 # drift hits both sides symmetrically instead of biasing whichever
 # build happened to run second.
 #
@@ -26,8 +26,8 @@ done
 # vanished into 2>/dev/null and set -e aborted the run in silence, on
 # the very instrument designated as the adjudicator of record.
 ERRLOG="${AB_ERRLOG:-target/ab_querybench.err}"
-mkdir -p "$(dirname "$ERRLOG")"; : > "$ERRLOG"
-echo "stderr (Spark logging + any failure) -> $ERRLOG"
+mkdir -p "$(dirname "$ERRLOG")"
+echo "stderr (Spark logging + any failure) -> $ERRLOG.<label>.<round>"
 
 OPENS=(
   java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect
@@ -39,18 +39,24 @@ OPENS=(
 JAVA_ARGS=()
 for p in "${OPENS[@]}"; do JAVA_ARGS+=(--add-opens "$p=ALL-UNNAMED"); done
 
-run_one() { # classes-dir label
+run_one() { # classes-dir label round
+  local err="$ERRLOG.$2.$3"
   local cp="$1:$(echo /opt/spark/jars/*.jar | tr ' ' ':')"
   echo "== $2 ($1)  loadavg $(cut -d' ' -f1 /proc/loadavg)"
   java "${JAVA_ARGS[@]}" -Dspark.ui.enabled=false \
     -Dspark.sql.session.timeZone=UTC "-Xmx${SPARK_DRIVER_MEM:-8g}" \
-    -cp "$cp" graft.QueryBench "$ITERS" "$QUERIES" 2>>"$ERRLOG" ||
-    { echo "QueryBench FAILED for $2 — tail of $ERRLOG:" >&2
-      tail -5 "$ERRLOG" >&2; exit 3; }
+    -cp "$cp" graft.QueryBench "$ITERS" "$QUERIES" 2>"$err" ||
+    { echo "QueryBench FAILED for $2 — tail of $err:" >&2
+      tail -5 "$err" >&2; exit 3; }
 }
 
 for r in $(seq 1 "$ROUNDS"); do
   echo "=== interleave round $r/$ROUNDS"
-  run_one "$A" "A"
-  run_one "$B" "B"
+  # ABBA: odd rounds run A first, even rounds B first, so warmup and
+  # drift land on both builds equally.
+  if (( r % 2 )); then
+    run_one "$A" "A" "$r"; run_one "$B" "B" "$r"
+  else
+    run_one "$B" "B" "$r"; run_one "$A" "A" "$r"
+  fi
 done

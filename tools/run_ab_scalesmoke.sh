@@ -20,8 +20,8 @@ for d in "$A" "$B"; do
 done
 
 ERRLOG="${AB_ERRLOG:-target/ab_scalesmoke.err}"
-mkdir -p "$(dirname "$ERRLOG")"; : > "$ERRLOG"
-echo "stderr (Spark logging + any failure) -> $ERRLOG"
+mkdir -p "$(dirname "$ERRLOG")"
+echo "stderr (Spark logging + any failure) -> $ERRLOG.<label>.<round>"
 
 OPENS=(
   java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect
@@ -33,18 +33,24 @@ OPENS=(
 JAVA_ARGS=()
 for p in "${OPENS[@]}"; do JAVA_ARGS+=(--add-opens "$p=ALL-UNNAMED"); done
 
-run_one() { # classes-dir label
+run_one() { # classes-dir label round
+  local err="$ERRLOG.$2.$3"
   local cp="$1:$(echo /opt/spark/jars/*.jar | tr ' ' ':')"
   echo "== $2 ($1)  loadavg $(cut -d' ' -f1 /proc/loadavg)"
   SCALE_SMOKE_REUSE=1 java "${JAVA_ARGS[@]}" -Dspark.ui.enabled=false \
     -Dspark.sql.session.timeZone=UTC "-Xmx${SPARK_DRIVER_MEM:-8g}" \
-    -cp "$cp" graft.ScaleSmoke "$FACTOR" "$OPS" 2>>"$ERRLOG" ||
-    { echo "ScaleSmoke FAILED for $2 — tail of $ERRLOG:" >&2
-      tail -5 "$ERRLOG" >&2; exit 3; }
+    -cp "$cp" graft.ScaleSmoke "$FACTOR" "$OPS" 2>"$err" ||
+    { echo "ScaleSmoke FAILED for $2 — tail of $err:" >&2
+      tail -5 "$err" >&2; exit 3; }
 }
 
 for r in $(seq 1 "$ROUNDS"); do
   echo "=== interleave round $r/$ROUNDS"
-  run_one "$A" "A"
-  run_one "$B" "B"
+  # ABBA: odd rounds run A first, even rounds B first, so warmup and
+  # drift land on both builds equally.
+  if (( r % 2 )); then
+    run_one "$A" "A" "$r"; run_one "$B" "B" "$r"
+  else
+    run_one "$B" "B" "$r"; run_one "$A" "A" "$r"
+  fi
 done
