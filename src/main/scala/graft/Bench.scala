@@ -23,43 +23,21 @@ object Bench {
       try Tables.t(spark, sfDir, t).limit(1).count()
       catch { case _: Throwable => () }
     }
-    // THREE full passes, per-query min: a concurrent job on the host
-    // inflates some passes, and min-of-2 proved fragile (round 6: both
-    // passes ran hot and the artifact shipped 35.3 s for code that
-    // measures 21.1 s exclusive — corrupting the trend the driver gates
-    // on). Three passes make an all-hot artifact much rarer, and the
-    // "sentinel" field makes one visible when it happens anyway: the
-    // fixed warmup aggregate is re-timed before each pass, so a reader
-    // comparing sentinel values sees exactly which passes ran contended
-    // (the aggregate is constant work — its time varies only with host
-    // load). Reading the artifact: "sentinel" has FOUR entries
-    // bracketing the three passes — sentinel[i]/sentinel[i+1] bound
-    // pass i, and pass_totals[i] is that pass's wall total, so a hot
-    // pass shows as an inflated total between two inflated sentinels;
-    // contention arriving MID-pass can still surface only in the
-    // trailing sentinel (advisory signal, not a proof).
-    //
-    // THRESHOLD for consumers (driver, judge, future rounds): the
-    // artifact's "calib" block records the measured idle band for THIS
-    // run (5 pre-attempt sentinel samples + 1-min loadavg) and the
-    // derived sentinel_max the contention rule used — read it instead
-    // of assuming the historical 0.28–0.35 s idle constant (r6–8 host;
-    // ~20% drift observed since, see the calibration comment below).
-    // If min(sentinel) > sentinel_max, EVERY pass ran contended and
-    // the min-of-3 is still a hot number — re-run rather than
-    // ship/compare it (the r8 artifact shipped hot and measured 17%
-    // above the judge's exclusive re-run of the same HEAD). A pass that
-    // THROWS yields None — its fast time-to-failure
-    // must never win the min over a succeeding pass; a query failing
-    // every pass is reported in "failed" with -1.
-    //
-    // ADJUDICATOR OF RECORD (round 14 protocol): the whole-suite total
-    // has a measured ±30% host-noise envelope (r13: four identical-code
-    // runs spanned 22.0–28.0 s), so any per-query artifact row moving
-    // >10% round-over-round is NOT citable on its own — it gets an
-    // interleaved QueryBench A/B (>=7 iters, both builds alternating
-    // in one session) before any verdict/changelog cites it as a
-    // regression or a win. SURVEY §8.12 records the round's uses.
+    // Three full passes, per-query min: a concurrent job on the host
+    // inflates some passes, and min-of-3 makes an all-hot artifact rare.
+    // "sentinel" re-times the fixed warmup aggregate (constant work, so
+    // it varies only with host load) before each pass and after the
+    // last: four entries, sentinel[i]/sentinel[i+1] bracket pass i and
+    // pass_totals[i] is its wall, so a hot pass shows as an inflated
+    // total between inflated sentinels. If min(sentinel) exceeds the
+    // "calib" block's sentinel_max, every pass ran contended and the
+    // min-of-3 is still hot: re-run rather than compare it. A pass that
+    // THROWS yields None — its fast time-to-failure must never win the
+    // min over a succeeding pass; a query failing every pass is
+    // reported in "failed" with -1. The whole-suite total moves ±30%
+    // with host noise, so a per-query row moving >10% between artifacts
+    // is not citable until an interleaved QueryBench A/B
+    // (tools/run_ab_querybench.sh) confirms it.
     def pass(): Map[String, Option[Double]] = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
@@ -69,44 +47,26 @@ object Bench {
     def sentinel(): Double = {
       val t0 = System.nanoTime(); fixedAgg(); (System.nanoTime() - t0) / 1e9
     }
-    // ENFORCE the threshold, don't just document it: if every sentinel
-    // of an attempt reads hot, the attempt is discarded and re-run (up
-    // to 2 retries), and the best attempt (lowest sentinel-min) ships.
-    // The r9 artifact shipped with sentinel-min 0.381 — contended per
-    // the rule above, carrying a flat-looking 19.5 s that was really an
-    // improvement; this loop makes that artifact impossible short of a
-    // host that stays loaded through all three attempts (in which case
-    // the sentinel field still says so).
+    // The contention threshold is enforced, not just reported: an
+    // attempt whose every sentinel reads hot is re-run, and the best
+    // attempt ships.
     def attempt(): (Vector[(Double, Map[String, Option[Double]])], Vector[Double]) = {
       val ps = Vector.fill(3) { val s = sentinel(); (s, pass()) }
       (ps, ps.map(_._1) :+ sentinel())
     }
-    // The 0.35 idle constant was calibrated on the r6–8 host; round 12
-    // measured ~20% host drift (idle sentinel ~0.40–0.43 with
-    // whole-suite totals at r10/r11 parity) — so "idle on this host"
-    // is now MEASURED per run instead of asserted in prose (the r12
-    // judge's ask): 5 sentinel samples + the 1-min loadavg are taken
-    // before EVERY attempt and the shipping attempt's calibration is
-    // recorded in the artifact's "calib" block. The contention bound
-    // is min(0.5, max(0.35, 1.25 · calib-min)) — the best calibration
-    // sample is the closest observable to the host's true idle
-    // constant, 25% is the measured r6–12 idle spread, the historical
-    // 0.35 stays as a FLOOR so the guard re-tightens by itself if the
-    // host drifts back, and the 0.5 CEILING (r13 advisory) stops a
-    // calibration taken during light contention from self-certifying
-    // the very load it should catch. A loaded box cannot self-certify
-    // at all: the loadavg trust gate is now < 1.0 (was < 2.0 — one
-    // competing process could slip under it); untrusted calibration
-    // falls back to the strict 0.35. BENCH_SENTINEL_MAX remains the
-    // manual override; the artifact records which source won.
-    //
-    // WAITING beats retrying (r13: BENCH_r13 shipped knowingly hot
-    // while the same HEAD measured clean 35 min earlier): a contended
-    // attempt is now followed by a 30 s sleep and a RE-calibration
-    // before the next one, up to 4 attempts, so a transient competing
-    // job can drain instead of being immediately re-measured. The
-    // artifact's calib block carries the attempt count; consumers
-    // gate on `"contended": false`.
+    // Idle is measured per run, not assumed: 5 sentinel samples and the
+    // 1-min loadavg before every attempt, recorded in "calib". The bound
+    // is min(0.5, max(0.35, 1.25 · calib-min)): the best sample is the
+    // closest observable to the host's idle constant and 25% its
+    // measured idle spread; the 0.35 floor re-tightens the guard if the
+    // host gets faster, and the 0.5 ceiling stops a calibration taken
+    // under light load from certifying that load. Calibration is
+    // trusted only at loadavg < 1.0 (else the strict 0.35);
+    // BENCH_SENTINEL_MAX overrides, and the artifact records which
+    // source won. Waiting beats retrying: a contended attempt is
+    // followed by a 30 s sleep and a recalibration, up to 4 attempts,
+    // so a transient job can drain. Consumers gate on
+    // `"contended": false`.
     def readLoadavg(): Double = try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.split(" ")(0).toDouble finally src.close()
@@ -136,14 +96,10 @@ object Bench {
       System.err.println(f"[bench] attempt ${tries + 1} sentinel-min ${a._2.min}%.3f (bound ${c.sentinelMax}%.3f, loadavg ${c.loadavg1}%.2f)")
       // ship the attempt that is cleanest RELATIVE to its own bound —
       // an attempt paired with a stale calibration must not win just
-      // because the earlier bound was looser. EXCEPT when both
-      // candidates are contended under their own bounds (r14 advisory):
-      // relative slack then only ranks how hot each looked to its own
-      // calibration, and a strict-0.35 attempt that is absolutely
-      // colder (sentinel-min 0.40) would lose to a hotter one under a
-      // looser calibrated 0.5 bound (0.52) — in the all-hot regime the
-      // coldest absolute sentinel carries the least-inflated timings,
-      // so absolute min decides.
+      // because the earlier bound was looser. When both candidates are
+      // contended, relative slack only ranks how hot each looked to its
+      // own calibration; the coldest absolute sentinel carries the
+      // least-inflated timings, so absolute min decides.
       val bothContended = a._2.min > c.sentinelMax &&
         best._2.min > bestCalib.sentinelMax
       val aWins =
@@ -162,19 +118,11 @@ object Bench {
     val (passes, sentinels) = best
     val results = SparkEntry.queries.keys.map { k =>
       k -> passes.flatMap(_._2(k)).minOption }.toMap
-    // AUTOMATIC hot-artifact supplement (r15, closing the r14 finding
-    // structurally): when no idle window appeared across all attempts,
-    // the whole-suite min-of-3 is a hot number and no per-query row is
-    // citable — so instead of shipping a bare "treat as hot" caption,
-    // re-run the top-N queries by artifact time with QueryBench's
-    // min-of-7 discipline and record the mins in a "supplement" block.
-    // Min-of-7 singles ride UNDER transient load spikes a 3-pass suite
-    // sweep cannot (each iteration is 1-2 s vs a ~25 s pass), so the
-    // supplement mins are the round-over-round comparison of record
-    // for those queries whenever "contended" is true. Cross-BUILD
-    // adjudication still wants the interleaved graft.QueryBench A/B
-    // (both builds alternating under the same host conditions); this
-    // block is the within-artifact analogue that ships unattended.
+    // Contended artifact: no per-query row is citable, so the top-N
+    // queries by artifact time are re-run min-of-7 and their mins
+    // recorded in "supplement". Each iteration takes 1-2 s, so the mins
+    // ride under transient load spikes a ~25 s suite pass cannot;
+    // cross-build comparison still wants an interleaved QueryBench A/B.
     val supplementN = 8
     val supplement: Option[(Map[String, Double], Seq[String])] =
       if (best._2.min <= bestCalib.sentinelMax) None
@@ -206,24 +154,19 @@ object Bench {
     val failed = results.collect { case (k, None) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.values.flatten.sum
-    // round-comparable subtotal (r18 verdict #5): dd_ngram_staged (new
-    // in r18) carries by-design eager staging work, so the headline
-    // total stopped matching the pre-r18 boards. total_shared sums the
-    // 56-query r17 set — round-over-round drift adjudication is a
-    // field read, not a recompute.
-    // The exclusion set is REGISTRY-DERIVED (round 20, r19
-    // verdict #5): a query registers itself heavy via the module's
-    // benchHeavy tag — no literal here to forget to extend.
+    // total_shared leaves out the queries tagged benchHeavy (eager
+    // staged work by design), so a drift read compares like with like;
+    // the exclusion set comes from the registry, not a literal here.
     val sharedExclude = SparkEntry.benchHeavy
     require(sharedExclude.subsetOf(SparkEntry.queries.keySet),
       "benchHeavy tags must name registered queries: " +
         (sharedExclude -- SparkEntry.queries.keySet))
     val totalShared = results.collect {
       case (k, Some(v)) if !sharedExclude(k) => v }.sum
-    // shared_count vs shared_expected (r19 ADVICE): a shared query that
-    // fails silently shrinks total_shared — a drift read must be able
-    // to tell "slower" from "summed over fewer queries", so the gate
-    // asserts the two are equal
+    // shared_count vs shared_expected: a shared query that fails
+    // silently shrinks total_shared — a drift read must be able to tell
+    // "slower" from "summed over fewer queries", so the gate asserts the
+    // two are equal
     val sharedExpected = SparkEntry.queries.keysIterator
       .count(!sharedExclude(_))
     val sharedCount = results.count {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** The packaged user jar every multi-executor smoke ships to
   * executors — the `spark.jars` deployment shape that SURVEY §8.4.10
   * established as the ONLY supported one (user classes via
@@ -16,9 +18,9 @@ package graft
   *    clear failure. The jar's mtime must not predate the newest
   *    compiled class file under target/scala-2.13/classes.
   *
-  * Every multi-executor main (ClusterSmoke, ScaleSmoke,
-  * EmbedRecallSmoke) resolves the jar through here; the failure modes
-  * are pinned in ClusterSerializationSpec so a refactor cannot
+  * Every multi-executor main (ScaleSmoke, EmbedRecallSmoke,
+  * StreamSmoke, ClusterSmoke, ClusterSweep) deploys through [[deploy]];
+  * the failure modes are pinned in ClusterJarSpec so a refactor cannot
   * silently re-arm the landmine.
   */
 object ClusterJar {
@@ -47,4 +49,30 @@ object ClusterJar {
           "classes against a current driver; re-run `sbt package`")
     jarPath
   }
+
+  /** The JDK-17 module opens each executor JVM needs — the same list
+    * build.sbt and tools/runmain.sh give the driver. */
+  private val executorOpens = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar")
+    .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+
+  /** The local-cluster deployment rule, applied to `builder`: graft
+    * classes ship as a user jar (`spark.jars`, checked by [[resolve]]),
+    * executors get the module opens, and executor memory comes from
+    * SCALE_SMOKE_EXEC_MEM, else `execMemDefault`. The worker bracket's
+    * third number is capacity only; executors left at Spark's 1g
+    * default would measure spill, not shuffle. */
+  def deploy(builder: SparkSession.Builder,
+      execMemDefault: String = "7g"): SparkSession.Builder =
+    builder
+      .config("spark.jars", resolve())
+      .config("spark.executor.extraJavaOptions", executorOpens)
+      .config("spark.executor.memory",
+        sys.env.getOrElse("SCALE_SMOKE_EXEC_MEM", execMemDefault))
 }

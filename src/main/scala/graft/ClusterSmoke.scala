@@ -38,23 +38,9 @@ object ClusterSmoke {
     val dir = args.headOption.getOrElse("target/embed-recall-smoke")
     val master = sys.env.getOrElse("SCALE_SMOKE_MASTER",
       "local-cluster[4,8,7168]")
-    val jar = ClusterJar.resolve()
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val spark = Graft.sessionBuilder().master(master)
+    val spark = ClusterJar.deploy(Graft.sessionBuilder().master(master)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.jars", jar)
-      .config("spark.executor.extraJavaOptions", opens)
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SCALE_SMOKE_EXEC_MEM", "7g"))
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def step(tag: String)(body: => Long): Unit = {

@@ -79,22 +79,9 @@ object ClusterSweep {
     org.apache.spark.sql.SparkSession.clearDefaultSession()
 
     // phase 2: the same registry under local-cluster + spark.jars
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val cluster = Graft.sessionBuilder().master(master)
+    val cluster = ClusterJar.deploy(Graft.sessionBuilder().master(master)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.jars", jar)
-      .config("spark.executor.extraJavaOptions", opens)
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SCALE_SMOKE_EXEC_MEM", "6g"))
+      .config("spark.ui.enabled", "false"), execMemDefault = "6g")
       .getOrCreate()
     cluster.sparkContext.setLogLevel("ERROR")
     println(s"== phase 2: $master with spark.jars=$jar")

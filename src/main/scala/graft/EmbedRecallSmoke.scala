@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Dedup, Similarity, TopKAgg, VectorOps}
 
 /** Pair-level quality measurement for the bucketed embed-cosine route
-  * (SURVEY §8.4.8) — the embed analogue of BoundarySmoke's j = 0.5
-  * corpus for the ngram tier-0 filter.
+  * (SURVEY §8.4.8) — the embed analogue of the j = 0.5 boundary corpus
+  * KnobsSpec builds for the ngram tier-0 filter.
   *
   * The bucketed route (`ddEmbedCosine`, N > exactMax) scores a pair
   * only when both vectors share an IVF (cluster, shard); a true
@@ -13,10 +13,10 @@ import graft.functions.{Dedup, Similarity, TopKAgg, VectorOps}
   * Until this smoke, that miss rate was pinned by a 20-planted-pair
   * unit spec only. Protocol:
   *
-  *  1. Background: sf0.1 embeddings ×factor with the RecallSmoke
-  *     perturbation generator (unit-norm 64-dim vectors; per-copy
-  *     amplitudes 0.02–1.0 make a realistic mix of tight clusters and
-  *     near-random vectors).
+  *  1. Background: sf0.1 embeddings ×factor, copy 0 verbatim and
+  *     copies k ≥ 1 perturbed by deterministic per-element hash noise
+  *     (unit-norm 64-dim vectors; per-copy amplitudes 0.02–1.0 make a
+  *     realistic mix of tight clusters and near-random vectors).
   *  2. Planted true pairs: nPlant disjoint base vectors per amplitude
   *     tier; the partner is base + elementwise uniform hash noise of
   *     the tier's amplitude. On unit-norm 64-dim vectors the tiers
@@ -34,12 +34,19 @@ import graft.functions.{Dedup, Similarity, TopKAgg, VectorOps}
   *     its distance to its Voronoi boundary. Misses must concentrate
   *     in the low-margin tail — reported as miss rate per margin
   *     decile plus the bottom-5% (the boundary set) vs the rest. A
-  *     pair ON the boundary is the construction BoundarySmoke plants
+  *     pair ON the boundary is what that ngram corpus plants
   *     explicitly; here the corpus geometry supplies it and the margin
   *     measurement identifies it.
-  *  5. `exact=1` (feasible through ~200×): run the full exact
-  *     broadcast-nested-loop route vs the bucketed route end-to-end
-  *     and report top-40 overlap — the operator-contract check.
+  *  5. `exact=1` (feasible through ~200×), the two exact-vs-approximate
+  *     contract checks over the smoke corpus (background plus planted
+  *     partners):
+  *     - IVF recall per nprobe (SURVEY §8.4.6): per-query top-10
+  *       overlap of `ssIvfTopK` against the exact scan for 100 queries
+  *       at nprobe 6/12/24/48, with the probed fraction nprobe/√N —
+  *       that fraction shrinks as the corpus grows, so the gate SFs
+  *       alone cannot show recall decay at scale;
+  *     - the full exact broadcast-nested-loop route vs the bucketed
+  *       route end-to-end, reported as top-40 overlap.
   *
   * Run: sbt "runMain graft.EmbedRecallSmoke [factor] [nPlant] [exact01]"
   */
@@ -69,8 +76,8 @@ object EmbedRecallSmoke {
       .getOrElse(Nil)
     val parts = sys.env.getOrElse("SCALE_SMOKE_PARTITIONS", "64")
     // SCALE_SMOKE_MASTER=local-cluster[4,8,7168] runs the probed pair
-    // join under REAL multi-executor shuffle (the ScaleSmoke protocol —
-    // executor JVMs need this process's classpath + JDK-17 opens)
+    // join under REAL multi-executor shuffle (the ScaleSmoke protocol,
+    // deployed through ClusterJar.deploy)
     val master = sys.env.getOrElse("SCALE_SMOKE_MASTER", "local[32]")
     val builder = Graft.sessionBuilder().master(master)
       .config("spark.sql.shuffle.partitions", parts)
@@ -85,27 +92,7 @@ object EmbedRecallSmoke {
       // of tasks sits far under the default threshold.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (1 << 21).toString)
-    if (master.startsWith("local-cluster")) {
-      val opens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-      // graft classes ship as a USER JAR (spark.jars), NOT via
-      // spark.executor.extraClassPath: with app classes on the executor
-      // SYSTEM classpath, Spark 4.1.2 task deserialization breaks the
-      // moment a graft expression rides a serialized plan fragment
-      // (SURVEY §8.4.10; ClusterSmoke scaladoc has the full story).
-      val jar = ClusterJar.resolve()
-      builder
-        .config("spark.jars", jar)
-        .config("spark.executor.extraJavaOptions", opens)
-        .config("spark.executor.memory", "7g")
-    }
+    if (master.startsWith("local-cluster")) ClusterJar.deploy(builder)
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
@@ -137,7 +124,7 @@ object EmbedRecallSmoke {
       new java.io.File(s"$big/embeddings.parquet").exists() &&
       new java.io.File(s"$big/pairs").exists()
 
-    // -- background: the RecallSmoke generator ------------------------
+    // -- background ----------------------------------------------------
     val e = Tables.t(spark, src, "embeddings")
     val ne = Option(e.agg(max("vec_id")).head.getAs[Number](0))
       .map(_.longValue + 1).getOrElse(0L)
@@ -453,8 +440,33 @@ object EmbedRecallSmoke {
         }
     }
 
-    // -- operator-contract check: exact vs bucketed top-40 ------------
+    // -- operator-contract checks: exact vs approximate ---------------
     if (runExact) {
+      val nQueries = 100L
+      val kCents = math.round(math.sqrt(nVecs.toDouble))
+      val t0 = System.nanoTime()
+      val exact = Similarity.ssCosineTopK(spark, big, nQueries)
+        .select(col("q_id"), col("cand_id")).cache()
+      println(f"\nexact top-10 for $nQueries queries: ${exact.count()} rows " +
+        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+      Seq(6, 12, 24, 48).foreach { np =>
+        val t1 = System.nanoTime()
+        val ivf = Similarity.ssIvfTopK(spark, big, np, nQueries)
+          .select(col("q_id"), col("cand_id"))
+        val hits = exact.join(ivf, Seq("q_id", "cand_id"))
+          .groupBy("q_id").agg(count(lit(1)).as("hit"))
+        val stats = exact.groupBy("q_id").agg(count(lit(1)).as("n"))
+          .join(hits, Seq("q_id"), "left")
+          .select((coalesce(col("hit"), lit(0L)) / col("n")).as("recall"))
+          .agg(avg("recall"), min("recall"),
+            sum(when(col("recall") < 0.8, 1L).otherwise(0L)), count(lit(1)))
+          .head()
+        println(f"nprobe=$np%3d  probed=${np.toDouble / kCents}%.4f  " +
+          f"mean=${stats.getDouble(0)}%.4f  min=${stats.getDouble(1)}%.4f  " +
+          f"below0.8=${stats.getLong(2)}/${stats.getLong(3)}  " +
+          f"wall=${(System.nanoTime() - t1) / 1e9}%.1f s")
+      }
+      exact.unpersist()
       def top40(tag: String, exactMax: String): Set[(Long, Long)] = {
         spark.conf.set("graft.embedCosine.exactMax", exactMax)
         val t1 = System.nanoTime()

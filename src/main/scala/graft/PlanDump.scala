@@ -3,8 +3,7 @@ import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` for every registered query (or a
   * named subset) to `<outDir>/<query>_<suffix>.txt` — the optimization
-  * rounds' before/after plan evidence (plans/r21/...). Unlike
-  * [[Plans]] (a curated PLANS.md excerpt) this writes the FULL
+  * rounds' before/after plan evidence (plans/r21/...): the FULL
   * formatted plan per query, one file each, so a reviewer can diff
   * exchange counts / join strategies / PushedFilters without running
   * Spark.

@@ -29,9 +29,8 @@ object ScaleSmoke {
     // heaps, serialized exec-to-exec fetches) — the experiment that
     // separates "single-box shuffle bandwidth" from "the operator's
     // shuffle volume is inherently the wall" for the 500× heavy-family
-    // walls. Executors are fresh JVMs: hand them this process's full
-    // classpath (sbt fork → java.class.path is the real app classpath)
-    // and the JDK-17 module opens the driver got from build.sbt.
+    // walls. Executors are fresh JVMs: ClusterJar.deploy ships the app
+    // jar and the JDK-17 module opens the driver got from build.sbt.
     val master = sys.env.getOrElse("SCALE_SMOKE_MASTER", "local[32]")
     val builder = Graft.sessionBuilder().master(master)
       .config("spark.sql.shuffle.partitions", parts)
@@ -46,33 +45,7 @@ object ScaleSmoke {
           "(values must not contain ';')")
       val Array(k, v) = kv.split("=", 2); builder.config(k, v)
     })
-    if (master.startsWith("local-cluster")) {
-      val opens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-      // app classes ship as a USER JAR (spark.jars → the executor's
-      // user classloader, the spark-submit --jars shape). The r10/r11
-      // runs used spark.executor.extraClassPath and got away with it
-      // because the ngram/events plans never serialize graft expression
-      // trees into tasks; the embed/IVF family DOES, and with app
-      // classes on the executor SYSTEM classpath Spark 4.1.2 task
-      // deserialization fails (SURVEY §8.4.10, ClusterSmoke scaladoc).
-      val jar = ClusterJar.resolve()
-      builder
-        .config("spark.jars", jar)
-        .config("spark.executor.extraJavaOptions", opens)
-        // the bracket's third number is worker CAPACITY; executors
-        // default to 1g and would measure spill, not shuffle (the r10
-        // protocol ran 7g explicitly — now the default)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SCALE_SMOKE_EXEC_MEM", "7g"))
-    }
+    if (master.startsWith("local-cluster")) ClusterJar.deploy(builder)
     val spark = builder.getOrCreate()
     println(s"master: $master, shuffle partitions: $parts")
     spark.sparkContext.setLogLevel("ERROR")

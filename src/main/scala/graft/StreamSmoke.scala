@@ -48,22 +48,7 @@ object StreamSmoke {
     if (store == "rocksdb") builder.config(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    if (master.startsWith("local-cluster")) {
-      val opens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-      builder
-        .config("spark.jars", ClusterJar.resolve())
-        .config("spark.executor.extraJavaOptions", opens)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SCALE_SMOKE_EXEC_MEM", "7g"))
-    }
+    if (master.startsWith("local-cluster")) ClusterJar.deploy(builder)
     val spark = builder.getOrCreate()
     println(s"state store provider: $store")
     import spark.implicits._

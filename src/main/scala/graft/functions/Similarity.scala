@@ -68,7 +68,7 @@ object Similarity {
     ssCosineTopK(spark, dir, 5L)
 
   /** `maxQ` widens the query set (vec_id < maxQ) — the gate contract
-    * stays at 5; RecallSmoke samples hundreds for statistical recall
+    * stays at 5; EmbedRecallSmoke samples 100 for statistical recall
     * measurement at scale (§8.4.6). */
   private[graft] def ssCosineTopK(spark: SparkSession, dir: String,
       maxQ: Long): DataFrame = {

@@ -81,7 +81,7 @@ class PipelineService(
         case ("GET", List("pipelines", slug)) =>
           bySlug.get(slug) match {
             case Some(s) => respond(ex, 200, Json.render(describe(s)))
-            case None    => respond(ex, 404, s"""{"error":"unknown pipeline '$slug'"}""")
+            case None    => error(ex, 404, s"unknown pipeline '$slug'")
           }
         case ("GET", List("pipelines", slug, "processings")) =>
           bySlug.get(slug) match {
@@ -91,8 +91,11 @@ class PipelineService(
                   "status" -> status.getOrElse(PNull)))
               }
               respond(ex, 200, Json.render(PArr(items)))
-            case None => respond(ex, 404, s"""{"error":"unknown pipeline '$slug'"}""")
+            case None => error(ex, 404, s"unknown pipeline '$slug'")
           }
+        case ("GET", List("pipelines", _, "processings", pid, _*))
+            if !Runner.isProcessingId(pid) =>
+          error(ex, 404, s"unknown processing '$pid'")
         case ("GET", List("pipelines", slug, "processings", pid)) =>
           // §3.3 details: latest status + the structured run-ledger
           // (replaces the reference's log-text parse, pipeline.go:700-802)
@@ -101,13 +104,13 @@ class PipelineService(
               val statuses = conf.checkpoint.readDocuments(slug, pid, "status_")
               val logs = conf.checkpoint.readDocuments(slug, pid, "log_")
               if (statuses.isEmpty && logs.isEmpty)
-                respond(ex, 404, s"""{"error":"unknown processing '$pid'"}""")
+                error(ex, 404, s"unknown processing '$pid'")
               else respond(ex, 200, Json.render(PObj(Map(
                 "processing_id" -> PStr(pid),
                 "status" -> statuses.lastOption.map(d => Json.parse(d._2)).getOrElse(PNull),
                 "ledger" -> logs.lastOption.map(d => Json.parse(d._2)).getOrElse(PArr(Nil)),
                 "log_ids" -> PArr(logs.map(d => PStr(d._1)))))))
-            case None => respond(ex, 404, s"""{"error":"unknown pipeline '$slug'"}""")
+            case None => error(ex, 404, s"unknown pipeline '$slug'")
           }
         case ("GET", List("pipelines", slug, "processings", pid, logId)) =>
           // by-log-id details variant (api/server.go:276,
@@ -122,13 +125,13 @@ class PipelineService(
                     "log_id" -> PStr(name),
                     "ledger" -> Json.parse(text)))))
                 case None =>
-                  respond(ex, 404, s"""{"error":"unknown log '$logId'"}""")
+                  error(ex, 404, s"unknown log '$logId'")
               }
-            case None => respond(ex, 404, s"""{"error":"unknown pipeline '$slug'"}""")
+            case None => error(ex, 404, s"unknown pipeline '$slug'")
           }
         case ("POST", List("pipelines", slug, action)) if action == "start" || action == "resume" =>
           bySlug.get(slug) match {
-            case None => respond(ex, 404, s"""{"error":"unknown pipeline '$slug'"}""")
+            case None => error(ex, 404, s"unknown pipeline '$slug'")
             case Some(spec) =>
               val ct = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
               val body = ex.getRequestBody.readAllBytes()
@@ -140,17 +143,22 @@ class PipelineService(
                 else Left("Unsupported Content-Type")
               req match {
                 case Left(err) =>
-                  respond(ex, 400, Json.render(PObj(Map("error" -> PStr(err)))))
+                  error(ex, 400, err)
                 case Right(start) =>
                   val pid = start.processingId match {
                     case "" if action == "resume" =>
-                      respond(ex, 400, """{"error":"resume requires pipeline.processing_id"}""")
+                      error(ex, 400, "resume requires pipeline.processing_id")
                       return
                     case "" => Runner.newProcessingId()
+                    // the id becomes a storage path segment: anything but
+                    // a UUID (e.g. "../x") could write outside every root
+                    case p if !Runner.isProcessingId(p) =>
+                      error(ex, 400, s"pipeline.processing_id must be a UUID, got '$p'")
+                      return
                     case p  => p
                   }
                   if (action == "resume" && start.input.blockSlug.isEmpty) {
-                    respond(ex, 400, """{"error":"resume requires block.slug"}""")
+                    error(ex, 400, "resume requires block.slug")
                     return
                   }
                   // async boundary: return the id, run in a Future
@@ -160,11 +168,11 @@ class PipelineService(
                   respond(ex, 200, s"""{"processing_id":"$pid"}""")
               }
           }
-        case _ => respond(ex, 404, """{"error":"not found"}""")
+        case _ => error(ex, 404, "not found")
       }
     } catch {
       case e: Exception =>
-        respond(ex, 500, Json.render(PObj(Map("error" -> PStr(String.valueOf(e.getMessage))))))
+        error(ex, 500, String.valueOf(e.getMessage))
     }
   }
 
@@ -298,6 +306,9 @@ class PipelineService(
     case PNull  => ""
     case other  => other.asString
   }
+
+  private def error(ex: HttpExchange, code: Int, message: String): Unit =
+    respond(ex, code, Json.render(PObj(Map("error" -> PStr(message)))))
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes("UTF-8")

@@ -58,6 +58,14 @@ object Runner {
 
   def newProcessingId(): String = java.util.UUID.randomUUID().toString
 
+  private val processingIdRe =
+    "[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}".r
+
+  /** A processing id names a storage directory, so the service accepts
+    * only the UUID form [[newProcessingId]] issues (the reference lists
+    * only processing UUID directories). */
+  def isProcessingId(s: String): Boolean = processingIdRe.matches(s)
+
   /** Synchronous run. For the reference's async-start semantics wrap in
     * a Future and hand back the processingId immediately (§3.1 step 4). */
   def process(spec: PipelineSpec, start: StartInput, conf: RunConfig,

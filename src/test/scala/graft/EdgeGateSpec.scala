@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver's sf tables never exercise (null/empty/whitespace texts,
   * malformed JSON, zero-norm vectors, zero-row tables), but the gate
   * lived only in the hand-run `tools/run_edge_gate.sh`. This suite runs
-  * the SAME gate — python generator, QuickVerify dump on the shared
+  * the SAME gate — python generator, Verify dump on the shared
   * test session, DuckDB comparison via `tools/check_correctness.py` —
   * so `sbt test` fails if any edge-gate query diverges.
   *
@@ -45,7 +45,8 @@ class EdgeGateSpec extends AnyFunSuite {
     val genArgs = Seq("python3", s"$repo/tools/make_edge_corpus.py", dir,
       SparkTestSession.sf) ++ (if (mode == "empty") Seq("empty") else Nil)
     assert(genArgs.! == 0, s"corpus generator failed: $genArgs")
-    QuickVerify.run(spark, dir, out, names)
+    val threw = Verify.run(spark, dir, out, names)
+    assert(threw.isEmpty, s"$mode corpus: queries threw: ${threw.mkString(", ")}")
     val log = new StringBuilder
     val rc = Process(Seq("python3", s"$repo/tools/check_correctness.py",
         dir, out))
@@ -55,8 +56,9 @@ class EdgeGateSpec extends AnyFunSuite {
       s"$mode-corpus oracle gate diverged:\n" +
         report.linesIterator.filter(!_.startsWith("PASS")).mkString("\n"))
     // dd_simhash / ss_ivf_topk are approximate-by-design (no oracle
-    // SQL) — QuickVerify still runs them above, so the edge corpus
-    // exercises their not-crashing; the checker hash-gates the rest
+    // SQL) — the dump above still runs them and fails on a throw, so
+    // the edge corpus gates their not-crashing; the checker hash-gates
+    // the rest
     val oracled = (names & SparkEntry.oracleSql.keySet).size
     val passed = report.linesIterator.count(_.startsWith("PASS "))
     assert(passed == oracled,

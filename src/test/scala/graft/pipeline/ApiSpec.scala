@@ -125,6 +125,81 @@ class ApiSpec extends AnyFunSuite {
     } finally svc.stop()
   }
 
+  test("a non-UUID processing id is refused; error bodies parse as JSON") {
+    val spec = PipelineSpec("id-pipe", "t", "d", Seq(
+      BlockSpec("wrap_text", "wrap", "wrap the posted input text",
+        input = Map("prefix" -> PStr("("), "suffix" -> PStr(")")))))
+    // the storage root sits one level down, so "../../escape" from
+    // <root>/id-pipe would land beside it, inside `outer`
+    val outer = java.nio.file.Files.createTempDirectory("graft-api-id")
+    val root = outer.resolve("root").toString
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    val conf = Runner.RunConfig(spark, registry,
+      new CheckpointStore(root), Clients.mockCtx())
+    val svc = new PipelineService(Seq(spec), conf)
+    val port = svc.start()
+    def obj(body: String): Map[String, PValue] = Json.parse(body) match {
+      case PObj(m) => m
+      case _ => fail(s"not a JSON object: $body")
+    }
+    def field(body: String, name: String): String = obj(body)(name).asString
+    // details once the n-th run's ledger AND its status doc are written
+    def awaitRuns(pid: String, n: Int): Map[String, PValue] = {
+      def settled(d: Map[String, PValue]): Boolean = d.get("log_ids") match {
+        case Some(PArr(ids)) => ids.size >= n && d.get("status").exists {
+          case PObj(st) => st.get("log_id").contains(ids.last)
+          case _ => false
+        }
+        case _ => false
+      }
+      val deadline = System.currentTimeMillis() + 20000
+      var d = Map.empty[String, PValue]
+      while (!settled(d) && System.currentTimeMillis() < deadline) {
+        Thread.sleep(50)
+        d = obj(get(port, s"/pipelines/id-pipe/processings/$pid")._2)
+      }
+      assert(settled(d), s"run $n of $pid did not finish in time: $d")
+      d
+    }
+    def completed(d: Map[String, PValue]): Boolean = d("status") match {
+      case PObj(st) => st.get("is_completed").contains(PBool(true))
+      case _ => false
+    }
+    try {
+      for (action <- Seq("start", "resume")) {
+        val (code, body) = post(port, s"/pipelines/id-pipe/$action",
+          """{"pipeline":{"processing_id":"../../escape"},""" +
+            """"block":{"slug":"wrap","input":{"text":"x"}}}""")
+        assert(code == 400 && field(body, "error").contains("../../escape"),
+          s"$action: $code $body")
+      }
+      Thread.sleep(200)
+      val left = outer.toFile.list().toSeq
+      assert(left.forall(_ == "root"), s"files written outside the root: $left")
+      assert(get(port, "/pipelines/id-pipe/processings/..%2F..%2Fescape")._1 == 404)
+
+      // a quote in the decoded slug must not break the error body
+      val (nc, nb) = get(port, "/pipelines/a%22b")
+      assert(nc == 404 && field(nb, "error").contains("a\"b"), nb)
+
+      // a server-issued id still starts and resumes to completion
+      val (sc, started) = post(port, "/pipelines/id-pipe/start",
+        """{"block":{"slug":"","input":{"text":"ping"}}}""")
+      assert(sc == 200, started)
+      val pid = field(started, "processing_id")
+      assert(completed(awaitRuns(pid, 1)))
+      val (rc, resumed) = post(port, "/pipelines/id-pipe/resume",
+        s"""{"pipeline":{"processing_id":"$pid"},""" +
+          """"block":{"slug":"wrap","input":{"text":"again"}}}""")
+      assert(rc == 200 && field(resumed, "processing_id") == pid, resumed)
+      val details = awaitRuns(pid, 2)
+      assert(completed(details), details)
+      val out = conf.checkpoint.loadOutput("id-pipe", pid, "wrap").get
+      assert(new String(out.head._2, "UTF-8") == "(again)")
+    } finally svc.stop()
+  }
+
   private def postBytes(port: Int, path: String, body: Array[Byte],
       contentType: String): (Int, String) = {
     val client = java.net.http.HttpClient.newHttpClient()

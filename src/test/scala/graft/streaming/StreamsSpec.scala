@@ -616,7 +616,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("streamed loss under the cap stays within the advisory bound vs batch truth") {
-    // the StreamDropSmoke protocol as a STANDING gate (round 18): the
+    // the stream-drop measurement protocol as a STANDING gate: the
     // strongest streaming-loss evidence in the repo — stream a
     // NEAR-verbatim blob (unique tail per doc, so per-band buckets
     // differ slightly) past the member cap, then compare against the

@@ -7,7 +7,7 @@ documents.parquet of nasty edge docs and symlinks the remaining tables
 from an sf dir, so the NORMAL gate tooling runs unchanged:
 
     python3 tools/make_edge_corpus.py /tmp/edgedir
-    sbt "runMain graft.QuickVerify /tmp/edgedir /tmp/qe <documents-only query names>"
+    sbt "runMain graft.Verify /tmp/edgedir /tmp/qe <documents-only query names>"
     python3 tools/check_correctness.py /tmp/edgedir /tmp/qe
 
 Found in round 6 (all fixed + pinned): null-text fingerprint grouping

@@ -2,7 +2,7 @@
 # One-command degenerate-corpus oracle gate: builds the edge corpus
 # (null/empty/tab-edged docs, zero embeddings, null/malformed-JSON
 # events), dumps every documents/embeddings/events query through
-# QuickVerify, and hash-compares against DuckDB with the same checker
+# Verify, and hash-compares against DuckDB with the same checker
 # the driver uses. Relational q1-q9/q13/q16 read only the symlinked
 # TPC-H tables, so they are exercised by the standard gate instead.
 #
@@ -18,7 +18,7 @@ OUT="$DIR.out"
 rm -rf "$DIR" "$OUT"
 
 python3 tools/make_edge_corpus.py "$DIR"
-sbt -batch "runMain graft.QuickVerify $DIR $OUT \
+sbt -batch "runMain graft.Verify $DIR $OUT \
   dd_exact dd_ngram_jaccard dd_minhash_lsh dd_simhash dd_span dd_cdc \
   dd_cluster dd_decontaminate dd_embed_cosine \
   ta_tokens ta_quality ta_langid ta_fingerprint ta_scrub ta_split \

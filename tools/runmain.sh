@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
 # Run a graft main directly on the compiled classes — bypasses the sbt
 # launcher (and its project-level lock) so long-running measurement
-# mains (ScaleSmoke / StreamSmoke / RecallSmoke) can execute in
+# mains (ScaleSmoke / StreamSmoke / EmbedRecallSmoke) can execute in
 # parallel with an interactive sbt session. Compile first:
-#   sbt compile && tools/runmain.sh graft.RecallSmoke 20
+#   sbt compile && tools/runmain.sh graft.ScaleSmoke 20
 # Env knobs pass straight through (SCALE_SMOKE_MASTER, SPARK_DRIVER_MEM...).
 set -euo pipefail
 cd "$(dirname "$0")/.."
