@@ -168,8 +168,8 @@ object ScaleSmoke {
       .collect { case (t, c) if c >= 0 => t }.toSet
     if (docs >= 0) {
       // dfCap arithmetic is meaningless without documents (sqrt(-1)
-      // would print a silent 64-cap line — the r19 ADVICE NaN nit)
-      val cap = math.max(64L, 8L * math.round(math.sqrt(docs.toDouble)))
+      // would print a silent 64-cap line)
+      val cap = graft.functions.Dedup.dfCapFor(docs)
       println(s"ngram dfCap = $cap (8*sqrt(N)); boilerplate shingle df ~ " +
         s"${docs - n} -> ${if (docs - n > cap) "CAP BINDS (hot-key quadratic defused)"
           else "cap does not bind"}")

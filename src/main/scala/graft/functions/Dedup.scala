@@ -17,45 +17,54 @@ import graft.Tables.t
   * — the one deliberate exception is [[ddEmbedCosine]]'s exact route,
   * which keeps the broadcast nested loop while the corpus is small
   * enough that full pair scoring is cheaper than blocking (≤ 2¹⁶
-  * vectors) and switches to IVF-cell pairing above. Both corpus-size
-  * switches and the hot-key caps are session-tunable (see [[confLong]]),
-  * and the scale-side plans are driver-gated via the `dd_simhash_wide` /
-  * `dd_embed_cosine_bucketed` registrations.
+  * vectors) and switches to IVF-cell pairing above. The scale-side
+  * plans are driver-gated via the `dd_simhash_wide` /
+  * `dd_embed_cosine_bucketed` registrations; the session settings this
+  * object reads are listed at [[conf]].
   */
 object Dedup {
 
-  /** Session-tunable scale knobs. The corpus-size switches and
-    * hot-key caps below were chosen from measured candidate curves on
-    * the synthetic corpora (SURVEY §8.4.4), but a real 100 TB operator
-    * tunes them per corpus — boilerplate density, duplicate-blob
-    * frequency and shingle entropy all move the crossovers. Each knob
-    * therefore reads `spark.conf` with the measured value as default:
+  /** The seven `graft.*` session settings, each kept because a caller
+    * outside the tests sets it or an advisory record names it as the
+    * setting to change:
     *
-    *  - `graft.ngram.dfCapFactor` (8): dfCap = factor·√N, floor 64
-    *  - `graft.minhash.maxBucket` (1024): LSH band-bucket member cap
-    *  - `graft.simhash.wideSwitch` (10⁷): docs above which the C(8,4)
-    *    wide band tables replace the 16-bit chunk tables
-    *  - `graft.embedCosine.exactMax` (2¹⁶): vectors above which the
-    *    IVF-bucketed route replaces the exact broadcast loop
-    *  - `graft.embedCosine.maxCell` (corpus-aware: max(4096, 4·√N)
-    *    ceilinged at 16384 — [[embedCosineMaxCellDefault]]): IVF-cell
-    *    member cap above which a cell is hash-split into shards (the
-    *    mega-cell guard — it bounds per-cell PAIRS at ~maxCell²/2 per
-    *    shard, so it must sit far below the exactMax broadcast ceiling;
-    *    [[embedCapAdvisory]] warns when the resolved cap sits below the
-    *    measured zero-miss sizing)
     *  - `graft.ngram.mhPrefixSlots` (0 = off): leading MinHash slots
-    *    carried as a slim tier-0 candidate filter in the ngram verify
-    *    (see [[mhPrefixFilter]]); `graft.ngram.mhPrefixMin` (2): slots
-    *    that must match to survive tier 0. OFF by default: the filter
-    *    is probabilistic (a j = 0.5 boundary pair is missed with
-    *    p ≈ 2.6·10⁻⁴ at 16/2), so the default keeps [[ddNgramJaccard]]
-    *    exact; the knob is the 100 TB escape hatch, measured §8.4.7.
+    *    carried as a tier-0 candidate filter in the ngram verify (see
+    *    [[mhPrefixFilter]]). Off by default because the filter is
+    *    probabilistic; the exact-ngram disk-wall advisory sets it to 16
+    *    and ScaleSmoke runs with 16.
+    *  - `graft.ngram.stageDir` (`target/ngram-staged`): where
+    *    [[ddNgramJaccardStaged]] materializes its stages — a path, and
+    *    the target of the stage-filesystem mismatch advisory.
+    *  - `graft.ngram.stageSpillBudgetBytes` (probed): the per-node disk
+    *    budget that sizes the staged shard count; the auto-sizing
+    *    Observe record names it as the override.
+    *  - `graft.minhash.maxBucket` (1024): LSH band-bucket member cap —
+    *    the target of the bucket advisory's RaiseKnob record.
+    *  - `graft.embedCosine.maxCell` ([[embedCosineMaxCellDefault]]):
+    *    IVF-cell member cap above which a cell is hash-split into
+    *    shards — the target of the cell advisories' RaiseKnob records.
+    *  - `graft.embedCosine.exactMax` (2¹⁶): vectors above which the
+    *    IVF-bucketed route replaces the exact broadcast loop — named by
+    *    the route advisory; EmbedRecallSmoke sets it.
+    *  - `graft.embedCosine.probeMargin` (0.01): boundary multi-probe
+    *    margin — named by the route advisory; ClusterSmoke sets 0 and
+    *    EmbedRecallSmoke runs a ladder of values.
     *
-    * KnobsSpec pins that setting each conf actually flips the route /
-    * cap; the driver gate runs at defaults, so its output is unchanged. */
-  private def confLong(spark: SparkSession, key: String, default: Long): Long =
-    spark.conf.get(key, default.toString).toLong
+    * Every other threshold in this object is a constant: the gate and
+    * the benchmark run at these defaults. A malformed value fails with
+    * the key named. */
+  private def conf[T](spark: SparkSession, key: String)(
+      parse: String => T): Option[T] =
+    spark.conf.getOption(key).map { v =>
+      try parse(v.trim)
+      catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"$key must be a number, got '$v'")
+      }
+    }
+
+  private def mhPrefixSlots(spark: SparkSession): Int =
+    conf(spark, "graft.ngram.mhPrefixSlots")(_.toInt).getOrElse(0)
 
   /** Whether the session's shuffle codec is already zstd — the escape
     * the tier-0 ladder rung would otherwise keep recommending on every
@@ -65,10 +74,6 @@ object Dedup {
   private def zstdActive(spark: SparkSession): Boolean =
     spark.conf.get("spark.io.compression.codec", "lz4")
       .toLowerCase.contains("zstd")
-
-  private def confDouble(spark: SparkSession, key: String,
-      default: Double): Double =
-    spark.conf.get(key, default.toString).toDouble
 
   /** 3-word shingles (distinct) of the whitespace tokenization — native
     * single-pass expression (see [[ShingleArray]]; the higher-order
@@ -164,23 +169,18 @@ object Dedup {
     * [[ddNgramJaccard]]. */
   def ddNgramJaccardPairs(spark: SparkSession, dir: String, dfCap: Int = -1): DataFrame = {
     val base = ngramBase(spark, dir)
-    val slots = confLong(spark, "graft.ngram.mhPrefixSlots", 0L).toInt
+    val slots = mhPrefixSlots(spark)
     // ONE driver-side footer read per construction, shared by the
     // advisory (which needs nDocs on BOTH tiers — each has its own
     // measured wall) and the dfCap default. Shared, not cached: the
     // smoke mains overwrite their target/ corpora between factors, so a
     // (dir, table) cache would hand back stale counts.
     val nDocs = graft.Tables.footerRowCount(spark, dir, "documents")
-    ngramShuffleWarning(nDocs, slots,
-        confLong(spark, "graft.ngram.warnDocs", 4000000L),
-        confLong(spark, "graft.ngram.tier0WarnDocs", 8000000L),
-        confLong(spark, "graft.ngram.stagedWarnDocs", 16000000L),
-        zstd = zstdActive(spark))
+    ngramShuffleWarning(nDocs, slots, zstd = zstdActive(spark))
       .foreach(graft.Graft.advise(spark, _, log))
     exactVerify(ngramCandidatesFrom(base,
-        if (dfCap > 0) dfCap else capForDocs(spark, nDocs)), base,
-      mhPrefixSlots = slots,
-      mhPrefixMin = confLong(spark, "graft.ngram.mhPrefixMin", 2L).toInt)
+        if (dfCap > 0) dfCap else dfCapFor(nDocs)), base,
+      mhPrefixSlots = slots)
   }
 
   /** Disk-bounded STAGED execution of [[ddNgramJaccard]] — same exact
@@ -191,10 +191,9 @@ object Dedup {
     * ALL of its exchanges' shuffle files until the job ends — the
     * df window (exchange by sh), the prefix window (exchange by
     * doc_id), the pair self-join and the verify joins coexist on local
-    * disk. The 4000× probe (20M docs) measured that even the slim
-    * tier-0 survivor pass ENOSPCs this box's ~72 GB under zstd. On a
-    * real cluster the same arithmetic binds per NODE: shuffle disk, not
-    * CPU, is the wall.
+    * disk. At 20M docs even the slim tier-0 survivor pass ENOSPCs a
+    * ~72 GB disk under zstd. On a real cluster the same arithmetic
+    * binds per NODE: shuffle disk, not CPU, is the wall.
     *
     * The staged mode breaks the pipeline at its three materialization
     * points and hash-shards each stage, so (a) every Spark job's
@@ -207,7 +206,7 @@ object Dedup {
     *      pmod(doc_id, shards) — rrk is per-doc;
     *   3. per sh-shard: the pair self-join restricted to that shard's
     *      join keys, then the SAME two-tier [[exactVerify]] (with the
-    *      session's tier-0 knobs) → parquet append. The union over
+    *      session's tier-0 setting) → parquet append. The union over
     *      shards is the complete candidate set (sharding partitions
     *      the join-KEY space); a pair with witness shingles in several
     *      shards is verified more than once and emits identical rows —
@@ -218,22 +217,20 @@ object Dedup {
     * The price is re-running the corpus scan + shingle pass once per
     * stage-1/stage-3 shard (map-only, CPU-bound) — the standard
     * disk-for-CPU trade when per-node spill is the binding constraint.
-    * `System.gc()` after each SHARD job (round 19, r18 ADVICE: after
-    * each stage only, stages 1-2 accumulated their k jobs' files)
-    * nudges the ContextCleaner to actually unlink the finished job's
-    * shuffle files (cleanup is weak-reference-driven; on a 48 GiB
-    * driver heap a collection may otherwise not happen between jobs) —
-    * so the per-job spill bound ~1/shards holds in EVERY stage.
+    * `System.gc()` after each SHARD job (not each stage: stages 1-2
+    * would accumulate their k jobs' files) nudges the ContextCleaner to
+    * actually unlink the finished job's shuffle files (cleanup is
+    * weak-reference-driven; on a 48 GiB driver heap a collection may
+    * otherwise not happen between jobs) — so the per-job spill bound
+    * ~1/shards holds in EVERY stage.
     *
-    * Shard count: an explicit `shards` argument wins, then an explicit
-    * `graft.ngram.stageShards` conf, then the CORPUS-AWARE default
-    * (round 19): ceil([[ngramSinglePlanSpillBytes]] / the per-node
-    * spill budget). The budget itself is DISK-AWARE (round 20, r19
-    * verdict #2 — the prior 18 GB literal was calibrated to this box's
-    * 72 GB free): an explicit `graft.ngram.stageSpillBudgetBytes` conf
-    * wins, else 25% of the stage filesystem's probed free bytes, else
-    * the calibrated 18 GB fallback when the filesystem cannot say —
-    * see [[stageSpillBudget]]; the auto path fires one typed Observe
+    * Shard count: an explicit `shards` argument wins, else the
+    * CORPUS-AWARE default ceil([[ngramSinglePlanSpillBytes]] / the
+    * per-node spill budget). The budget is DISK-AWARE: an explicit
+    * `graft.ngram.stageSpillBudgetBytes` conf wins, else 25% of the
+    * stage filesystem's probed free bytes, else the calibrated 18 GB
+    * fallback when the filesystem cannot say — see
+    * [[stageSpillBudget]]; the auto path fires one typed Observe
     * record quoting probed-free vs chosen budget. Tiny corpora
     * auto-size to k = 1 (pure staging, no sharding overhead).
     *
@@ -244,18 +241,16 @@ object Dedup {
     * destroyed — a mistyped stageDir pointing at data must not be
     * deleted). Each invocation writes under its own monotonic
     * `run-NNNNNN/` subdirectory and reclaims only OLDER runs at entry,
-    * keeping the newest prior run intact (round 20, r19 verdict #4:
-    * previously the next invocation deleted the files under the
-    * earlier handle) — so with SEQUENTIAL use a returned frame stays
-    * valid through the next invocation on the same stageDir and is
-    * reclaimed at the one after (at most two runs coexist, bounding
-    * the retained footprint at one extra `pairs/` result). Concurrent
-    * invocations must still pass distinct dirs. The default
-    * (`graft.ngram.stageDir`) is safe for sequential use, which is
-    * what every registered-gate path does. On a cluster whose
+    * keeping the newest prior run intact — so with SEQUENTIAL use a
+    * returned frame stays valid through the next invocation on the
+    * same stageDir and is reclaimed at the one after (at most two runs
+    * coexist, bounding the retained footprint at one extra `pairs/`
+    * result). Concurrent invocations must still pass distinct dirs.
+    * The default (`graft.ngram.stageDir`) is safe for sequential use,
+    * which is what every registered-gate path does. On a cluster whose
     * corpus lives on a different filesystem (hdfs/s3a) the
     * driver-relative default stages through the LOCAL filesystem — a
-    * typed SetConf advisory fires naming the mismatch (round 19).
+    * typed SetConf advisory fires naming the mismatch.
     * After the pairs write lands, `joinable/` and `prefix/` are
     * deleted eagerly (only `pairs/` backs the returned frame) — the
     * mode exists because disk is the binding constraint, so ~2/3 of
@@ -272,61 +267,39 @@ object Dedup {
     import org.apache.hadoop.fs.Path
     val stage = if (stageDir.nonEmpty) stageDir
       else spark.conf.get("graft.ngram.stageDir", "target/ngram-staged")
-    val slots = confLong(spark, "graft.ngram.mhPrefixSlots", 0L).toInt
-    val minM = confLong(spark, "graft.ngram.mhPrefixMin", 2L).toInt
+    val slots = mhPrefixSlots(spark)
     val nDocs = graft.Tables.footerRowCount(spark, dir, "documents")
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val stagePath = new Path(stage)
     val fs = stagePath.getFileSystem(hadoopConf)
-    val k = if (shards > 0) shards
-      else spark.conf.getOption("graft.ngram.stageShards") match {
-        case Some(v) =>
-          val parsed =
-            try v.trim.toInt
-            catch { case _: NumberFormatException =>
-              throw new IllegalArgumentException(
-                s"graft.ngram.stageShards must be a positive integer, got '$v'")
-            }
-          require(parsed > 0,
-            s"graft.ngram.stageShards must be positive, got $parsed " +
-            "(k = 0 would write no stage and fail opaquely at the read)")
-          parsed
-        case None =>
-          val spill = ngramSinglePlanSpillBytes(nDocs, tier0 = slots > 0,
-            zstd = zstdActive(spark))
-          val confBudget =
-            spark.conf.getOption("graft.ngram.stageSpillBudgetBytes")
-              .map { v =>
-                try v.trim.toLong
-                catch { case _: NumberFormatException =>
-                  throw new IllegalArgumentException(
-                    "graft.ngram.stageSpillBudgetBytes must be a " +
-                    s"positive long, got '$v'")
-                }
-              }
-          val probed = probeStageFree(fs, stagePath)
-          val (budget, source) = stageSpillBudget(confBudget, probed)
-          val sized = ngramStageShards(spill, budget)
-          // one Observe record whenever the budget was CHOSEN rather
-          // than configured — the sizing decision must be auditable
-          // (an explicit conf is the user's own choice; stays silent)
-          if (confBudget.isEmpty)
-            graft.Graft.advise(spark, graft.Advisory("dd_ngram_staged",
-              knob = "graft.ngram.stageSpillBudgetBytes", cap = budget,
-              measured = probed, bound = spill,
-              s"dd_ngram_staged auto-sized shards=$sized: predicted " +
-              s"single-plan spill $spill bytes against a $source spill " +
-              s"budget of $budget bytes" + (if (source == "probed")
-                s" (25% of $probed free bytes on the stage filesystem — " +
-                "NOTE: a remote-FS probe reports cluster-wide free space " +
-                "while the budget bounds PER-NODE spill)"
-              else " (free-space probe unavailable — the box-calibrated " +
-                "default)") +
-              ". Override via graft.ngram.stageSpillBudgetBytes.",
-              action = graft.AdvisoryAction.Observe, target = source), log)
-          sized
-      }
-    val cap = if (dfCap > 0) dfCap else capForDocs(spark, nDocs)
+    val k = if (shards > 0) shards else {
+      val spill = ngramSinglePlanSpillBytes(nDocs, tier0 = slots > 0,
+        zstd = zstdActive(spark))
+      val confBudget =
+        conf(spark, "graft.ngram.stageSpillBudgetBytes")(_.toLong)
+      val probed = probeStageFree(fs, stagePath)
+      val (budget, source) = stageSpillBudget(confBudget, probed)
+      val sized = ngramStageShards(spill, budget)
+      // one Observe record whenever the budget was CHOSEN rather
+      // than configured — the sizing decision must be auditable
+      // (an explicit conf is the user's own choice; stays silent)
+      if (confBudget.isEmpty)
+        graft.Graft.advise(spark, graft.Advisory("dd_ngram_staged",
+          knob = "graft.ngram.stageSpillBudgetBytes", cap = budget,
+          measured = probed, bound = spill,
+          s"dd_ngram_staged auto-sized shards=$sized: predicted " +
+          s"single-plan spill $spill bytes against a $source spill " +
+          s"budget of $budget bytes" + (if (source == "probed")
+            s" (25% of $probed free bytes on the stage filesystem — " +
+            "NOTE: a remote-FS probe reports cluster-wide free space " +
+            "while the budget bounds PER-NODE spill)"
+          else " (free-space probe unavailable — the box-calibrated " +
+            "default)") +
+          ". Override via graft.ngram.stageSpillBudgetBytes.",
+          action = graft.AdvisoryAction.Observe, target = source), log)
+      sized
+    }
+    val cap = if (dfCap > 0) dfCap else dfCapFor(nDocs)
     val corpusPath = new Path(dir)
     stageFsMismatchAdvisory(
         corpusPath.getFileSystem(hadoopConf).makeQualified(corpusPath).toUri,
@@ -381,8 +354,7 @@ object Dedup {
     // small corpus (gates, tests, benches) the whole single-plan spill
     // is under a GB and a forced full collection is pure wall-clock —
     // 2.2 s of the 5.25 s sf0.001 invocation, measured min-of-5
-    val gcMinDocs = confLong(spark, "graft.ngram.stageGcMinDocs", 1000000L)
-    def afterJob(): Unit = if (nDocs >= gcMinDocs) System.gc()
+    def afterJob(): Unit = if (nDocs >= 1000000L) System.gc()
     // one typed Observe record per stage: the staged run's audit trail
     // (the returned frame's .explain shows only the final read, so the
     // ledger is where a 100 TB operator reads what the stages did)
@@ -419,17 +391,17 @@ object Dedup {
     stageRecord("prefix", w2)
     val prefix = spark.read.schema(prefixSchema).parquet(s"$runStr/prefix")
     val pairsSchema = exactVerify(ngramPairJoin(prefix), base,
-      mhPrefixSlots = slots, mhPrefixMin = minM).schema
+      mhPrefixSlots = slots).schema
     val w3 = timed((0 until k).foreach { i =>
       exactVerify(
           ngramPairJoin(prefix.where(pmod(col("sh"), lit(k)) === i)), base,
-          mhPrefixSlots = slots, mhPrefixMin = minM)
+          mhPrefixSlots = slots)
         .write.mode("append").parquet(s"$runStr/pairs")
       afterJob()
     })
     stageRecord("pairs", w3)
     // only pairs/ backs the returned frame — drop the other two stages'
-    // footprint NOW, not at the next invocation (r18 verdict #3)
+    // footprint NOW, not at the next invocation
     fs.delete(new Path(runStr, "joinable"), true)
     fs.delete(new Path(runStr, "prefix"), true)
     spark.read.schema(pairsSchema).parquet(s"$runStr/pairs")
@@ -568,41 +540,41 @@ object Dedup {
   /** The measured disk-wall advisories, one per tier (the full ladder
     * is SURVEY §8.4.3e/f — exact ngram ENOSPCs at 5M docs under lz4,
     * tier-0's own 79%-slimmed shuffle one doubling later at 10M, and
-    * zstd rescues each at its scale):
+    * zstd rescues each at its scale). Each threshold sits just under
+    * its measured wall:
     *
-    *  - `mhPrefixSlots == 0` above `warnDocs` (default 4M, just under
-    *    the measured 5M wall): the exact tier-1 shuffle (candidate
-    *    pairs carrying shingle hash arrays) exceeded ~78 GB of per-box
-    *    lz4 spill — the run dies with ENOSPC, not slowly. Names the
-    *    two measured escapes: tier-0 (identical pair set measured
-    *    through 10M docs) or zstd.
-    *  - `mhPrefixSlots > 0` above `tier0WarnDocs` (default 8M, just
-    *    under the measured 10M wall): tier-0 itself hits the same box's
-    *    disk at 2× the corpus; the remaining escape is zstd
-    *    (measured: 560.5 s at 10M docs, formula-exact pair count).
-    *  - `mhPrefixSlots > 0` above `stagedWarnDocs` (default 16M, just
-    *    under the measured 20M wall): past zstd's own wall even the
-    *    slim survivor pass out-spills the box — the single-query plan
-    *    shape itself is the problem (all exchanges' shuffle files
-    *    coexist until job end), so the record's action is
-    *    SwitchOperator to `dd_ngram_staged`, the ladder's last rung.
+    *  - `mhPrefixSlots == 0` from 4M docs (the wall is at 5M): the
+    *    exact tier-1 shuffle (candidate pairs carrying shingle hash
+    *    arrays) exceeded ~78 GB of per-box lz4 spill — the run dies
+    *    with ENOSPC, not slowly. Names the two measured escapes: tier-0
+    *    (identical pair set measured through 10M docs) or zstd.
+    *  - `mhPrefixSlots > 0` from 8M docs (the wall is at 10M): tier-0
+    *    itself hits the same box's disk at 2× the corpus; the remaining
+    *    escape is zstd (measured: 560.5 s at 10M docs, formula-exact
+    *    pair count).
+    *  - `mhPrefixSlots > 0` from 16M docs (the wall is at 20M): past
+    *    zstd's own wall even the slim survivor pass out-spills the box
+    *    — the single-query plan shape itself is the problem (all
+    *    exchanges' shuffle files coexist until job end), so the
+    *    record's action is SwitchOperator to `dd_ngram_staged`, the
+    *    ladder's last rung.
     *
     * Advisory only — the operator's output is unaffected. The record's
     * `measured` is the corpus size and `cap` the warn threshold; the
-    * retry action rides the `action`/`target` fields (round 19): each
+    * retry action rides the `action`/`target` fields: each
     * rung is a SetConf of the next measured escape, except the last,
     * which is a SwitchOperator — dispatchable with zero prose parsing
     * (pinned in KnobsSpec's generic-dispatch test). Each rung goes
-    * SILENT once its escape is active (round 20, r19 ADVICE): the
-    * exact rung once `mhPrefixSlots > 0`, the zstd rung once the
-    * session codec is already zstd — tier-0+zstd is MEASURED clean
-    * through just under 20M docs, so the band between `tier0WarnDocs`
-    * and `stagedWarnDocs` has nothing further to recommend and a
-    * retry-until-silent dispatcher converges on every rung. */
+    * SILENT once its escape is active: the exact rung once
+    * `mhPrefixSlots > 0`, the zstd rung once the session codec is
+    * already zstd — tier-0+zstd is MEASURED clean through just under
+    * 20M docs, so the band between 8M and 16M has nothing further to
+    * recommend and a retry-until-silent dispatcher converges on every
+    * rung. */
   private[graft] def ngramShuffleWarning(nDocs: Long, mhPrefixSlots: Int,
-      warnDocs: Long, tier0WarnDocs: Long = 8000000L,
-      stagedWarnDocs: Long = 16000000L,
-      zstd: Boolean = false): Option[graft.Advisory] =
+      zstd: Boolean = false): Option[graft.Advisory] = {
+    val (warnDocs, tier0WarnDocs, stagedWarnDocs) =
+      (4000000L, 8000000L, 16000000L)
     if (mhPrefixSlots == 0 && nDocs >= warnDocs)
       Some(graft.Advisory("dd_ngram_jaccard", "graft.ngram.mhPrefixSlots",
         cap = warnDocs, measured = nDocs, bound = -1L,
@@ -639,15 +611,16 @@ object Dedup {
         "dd_ngram_staged: bounded per-job spill, identical pair set.",
         action = graft.AdvisoryAction.SetConf, target = "zstd"))
     else None
+  }
 
   private[graft] def resolveCap(spark: SparkSession, dir: String, dfCap: Int): Int =
     if (dfCap > 0) dfCap
-    else capForDocs(spark, graft.Tables.footerRowCount(spark, dir, "documents"))
+    else dfCapFor(graft.Tables.footerRowCount(spark, dir, "documents"))
 
-  private def capForDocs(spark: SparkSession, nDocs: Long): Int = {
-    val factor = confLong(spark, "graft.ngram.dfCapFactor", 8L)
-    math.max(64L, factor * math.round(math.sqrt(nDocs.toDouble))).toInt
-  }
+  /** The default ngram `dfCap` for an N-doc corpus: 8·round(√N), floored
+    * at 64 (see [[ddNgramJaccard]] for why it scales with √N). */
+  private[graft] def dfCapFor(nDocs: Long): Int =
+    math.max(64L, 8L * math.round(math.sqrt(nDocs.toDouble))).toInt
 
   /** The ngram candidate pairs BEFORE exact verification — factored out
     * (like [[minhashCandidates]]) so the scale smoke can measure
@@ -661,10 +634,10 @@ object Dedup {
     * tier-0 discard ratio directly: survivors/candidates is the factor
     * by which the filter slims the array-carrying tier-1 shuffle. */
   private[graft] def ngramTier0Survivors(spark: SparkSession, dir: String,
-      slots: Int = 16, minMatch: Int = 2): DataFrame = {
+      slots: Int = 16): DataFrame = {
     val base = ngramBase(spark, dir)
     mhPrefixFilter(ngramCandidatesFrom(base, resolveCap(spark, dir, -1)),
-      base, slots, minMatch)
+      base, slots)
   }
 
   private def ngramBase(spark: SparkSession, dir: String): DataFrame = {
@@ -809,15 +782,14 @@ object Dedup {
     * @param docs (doc_id, shs) — each doc's distinct shingle array
     * @param mhPrefixSlots leading MinHash slots for the optional tier-0
     *   pre-filter (0 = off, the default — see [[mhPrefixFilter]])
-    * @param mhPrefixMin matching slots a pair needs to survive tier 0
     */
   private[graft] def exactVerify(cand: DataFrame, docs: DataFrame,
-      mhPrefixSlots: Int = 0, mhPrefixMin: Int = 2): DataFrame = {
+      mhPrefixSlots: Int = 0): DataFrame = {
     val base = docs.select(col("doc_id"), col("shs"))
       .repartition(col("doc_id"))
     val cand0 =
       if (mhPrefixSlots <= 0) cand
-      else mhPrefixFilter(cand, base, mhPrefixSlots, mhPrefixMin)
+      else mhPrefixFilter(cand, base, mhPrefixSlots)
     val hsh = base.select(col("doc_id"), size(col("shs")).as("n"),
       array_sort(transform(col("shs"), xxhash64(_))).as("hs"))
     val tier1 = cand0.select("doc_a", "doc_b")
@@ -853,7 +825,7 @@ object Dedup {
     * 600-shingle doc) through the exchange. A `slots`-slot MinHash
     * prefix is `8·slots` bytes — at 16 slots, ~37× slimmer — and
     * P(slot match) = J(a, b) exactly (the MinHash property), so
-    * requiring ≥ `minMatch` of `slots` matching slots discards the
+    * requiring ≥ 2 of `slots` matching slots discards the
     * low-Jaccard bulk of the candidate stream BEFORE any full array
     * rides a shuffle; only survivors reach the two exact tiers.
     *
@@ -873,14 +845,14 @@ object Dedup {
     * 2-slot band by construction, so a ≥ 2-match requirement is already
     * implied and the extra joins would be pure overhead. */
   private[graft] def mhPrefixFilter(cand: DataFrame, base: DataFrame,
-      slots: Int, minMatch: Int): DataFrame = {
+      slots: Int): DataFrame = {
     val pf = base.select(col("doc_id"),
       slice(MinHashRow.minhash32_row(col("shs")), 1, slots).as("mh"))
     cand.select("doc_a", "doc_b")
       .join(pf.select(col("doc_id").as("doc_a"), col("mh").as("ma")), "doc_a")
       .join(pf.select(col("doc_id").as("doc_b"), col("mh").as("mb")), "doc_b")
       .where(aggregate(zip_with(col("ma"), col("mb"),
-        (a, b) => when(a === b, 1).otherwise(0)), lit(0), _ + _) >= minMatch)
+        (a, b) => when(a === b, 1).otherwise(0)), lit(0), _ + _) >= 2)
       .select("doc_a", "doc_b")
   }
 
@@ -956,7 +928,7 @@ object Dedup {
     * band leaves recall intact (the lsh == exact spec and the DuckDB
     * oracle pin this at the gate SFs, where no bucket nears the cap);
     * run dd_exact first so giant IDENTICAL-doc clusters never reach
-    * the near-dup pass. The residual risk (round 16) is a
+    * the near-dup pass. The residual risk is a
     * NEAR-verbatim blob larger than the cap — dd_exact does not
     * collapse it, its members share most minhash slots, so it crosses
     * in ALL its bands at once and its pairs silently lose candidacy.
@@ -972,7 +944,8 @@ object Dedup {
       maxBucket: Int = -1, nDocs: Long = -1L): DataFrame = {
     val cap =
       if (maxBucket > 0) maxBucket
-      else confLong(docs.sparkSession, "graft.minhash.maxBucket", 1024L).toInt
+      else conf(docs.sparkSession, "graft.minhash.maxBucket")(_.toInt)
+        .getOrElse(1024)
     // per-row sketch over the doc's own shingle array: map-only, the
     // same 32-slot signature the streaming variant projects
     val sigs = docs.select(col("doc_id"),
@@ -1023,15 +996,15 @@ object Dedup {
     * Band construction is CORPUS-SIZE-SWITCHED (both shapes from the
     * general Manku/Jain/Sarma WWW'07 block design in [[simhashBands]]):
     *
-    *  - N ≤ [[simhashWideSwitch]]: 4 tables keyed by one 16-bit chunk.
-    *    Pigeonhole-complete for Hamming ≤ 3 (6 differing bits can touch
-    *    all 4 chunks, so recall at the d ≤ 6 cut is partial — measured
-    *    0.93/0.92 vs exact Jaccard at the gate SFs, pinned in
+    *  - N ≤ 10⁷ ([[simhashWideBands]]): 4 tables keyed by one 16-bit
+    *    chunk. Pigeonhole-complete for Hamming ≤ 3 (6 differing bits
+    *    can touch all 4 chunks, so recall at the d ≤ 6 cut is partial —
+    *    measured 0.93/0.92 vs exact Jaccard at the gate SFs, pinned in
     *    FunctionsSpec). Expected bucket size N/2¹⁶ → candidate
     *    instances ~N²/2¹⁵: fine to ~10⁷ docs, inherently quadratic
     *    past that.
-    *  - N > [[simhashWideSwitch]]: 8 blocks of 8 bits keyed on 4-block
-    *    combinations — C(8,4) = 70 tables of 32-bit keys.
+    *  - N > 10⁷: 8 blocks of 8 bits keyed on 4-block combinations —
+    *    C(8,4) = 70 tables of 32-bit keys.
     *    Pigeonhole-complete for Hamming ≤ 4 (≤ 4 differing bits touch
     *    ≤ 4 blocks, leaving a 4-subset intact — a STRONGER guarantee
     *    than the small plan's d ≤ 3); expected bucket size N/2³² keeps
@@ -1052,16 +1025,14 @@ object Dedup {
     * The minhash operator remains the default near-dup path at 100 TB;
     * simhash is the cheap high-precision screen. */
   def ddSimhash(spark: SparkSession, dir: String): DataFrame =
-    ddSimhash(spark, dir,
-      wideBands = graft.Tables.footerRowCount(spark, dir, "documents")
-        > simhashWideSwitch(spark))
+    ddSimhash(spark, dir, wideBands =
+      simhashWideBands(graft.Tables.footerRowCount(spark, dir, "documents")))
 
-  /** Above this corpus size the 16-bit chunk buckets average ≥ ~150
-    * members (N/2¹⁶) and the chunk self-join's ~N²/2¹⁵ candidate term
-    * starts to dominate — switch to the wide (8, 4) block tables.
-    * Tunable via `graft.simhash.wideSwitch` (see [[confLong]] note). */
-  private[graft] def simhashWideSwitch(spark: SparkSession): Long =
-    confLong(spark, "graft.simhash.wideSwitch", 10L * 1000 * 1000)
+  /** Above 10⁷ docs the 16-bit chunk buckets average ≥ ~150 members
+    * (N/2¹⁶) and the chunk self-join's ~N²/2¹⁵ candidate term starts to
+    * dominate — switch to the wide (8, 4) block tables. */
+  private[graft] def simhashWideBands(nDocs: Long): Boolean =
+    nDocs > 10L * 1000 * 1000
 
   private[graft] def ddSimhash(spark: SparkSession, dir: String,
       wideBands: Boolean): DataFrame = {
@@ -1284,9 +1255,9 @@ object Dedup {
   /** Exact-route ceiling: 2¹⁶ vectors keeps the broadcast ≤ ~34 MB and
     * the full pair scoring ≤ ~2·10⁹ dots — past that the N² term is a
     * cluster-killer and the bucketed route takes over.
-    * Tunable via `graft.embedCosine.exactMax` (see [[confLong]] note). */
+    * Set via `graft.embedCosine.exactMax` (see [[conf]]). */
   private[graft] def embedCosineExactMax(spark: SparkSession): Long =
-    confLong(spark, "graft.embedCosine.exactMax", 1L << 16)
+    conf(spark, "graft.embedCosine.exactMax")(_.toLong).getOrElse(1L << 16)
 
   private[graft] def ddEmbedCosine(spark: SparkSession, dir: String,
       exactMax: Long, maxCell: Long = -1L): DataFrame = {
@@ -1295,8 +1266,8 @@ object Dedup {
     // exactMax = 0 must not also zero the mega-cell shard cap
     val cellCap =
       if (maxCell > 0) maxCell
-      else confLong(spark, "graft.embedCosine.maxCell",
-        embedCosineMaxCellDefault(nVecs))
+      else conf(spark, "graft.embedCosine.maxCell")(_.toLong)
+        .getOrElse(embedCosineMaxCellDefault(nVecs))
     embedRouteAdvisory(nVecs, exactMax).foreach(graft.Graft.advise(spark, _, log))
     embedCapAdvisory(nVecs, exactMax, cellCap).foreach(graft.Graft.advise(spark, _, log))
     // the bucketed route's assignment shares ivfParts' per-vector
@@ -1779,9 +1750,9 @@ object Dedup {
     * `graft.embedCosine.probeMargin` conf with its measured default
     * (0.01, §8.4.8b). Single-sourced here so EmbedRecallSmoke's cap
     * ladder replicates exactly the margin the route would use instead
-    * of re-stating the default (the r14 single-sourcing rule). */
+    * of re-stating the default. */
   private[graft] def embedProbeMargin(spark: SparkSession): Double =
-    confDouble(spark, "graft.embedCosine.probeMargin", 0.01)
+    conf(spark, "graft.embedCosine.probeMargin")(_.toDouble).getOrElse(0.01)
 
   /** The bucketed embed route's cell assignment — (vec_id, v, nrm,
     * cluster, shard) after the mega-cell hash-split — factored out
@@ -2178,22 +2149,7 @@ object Dedup {
     "dd_cluster_staged" -> clusterOracleSql,
     // LSH verifies candidates with the exact Jaccard, so its output is
     // the exact pair set (see ddMinhashLsh scaladoc) — same oracle.
-    "dd_minhash_lsh" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(tk)-2, 1)),
-        |    i -> array_to_string(tk[i:i+2],' '))) AS shs
-        |  FROM (SELECT doc_id, string_split_regex(trim(text),'\s+') AS tk
-        |        FROM documents)),
-        |s AS (SELECT doc_id, len(shs) AS n, unnest(shs) AS sh FROM t),
-        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-        |        any_value(a.n) AS na, any_value(b.n) AS nb
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  round(shared/(na+nb-shared), 4) AS jaccard
-        |FROM p WHERE round(shared/(na+nb-shared), 4) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "dd_minhash_lsh" -> ngramOracleSql,
     "dd_embed_cosine" ->
       """WITH e AS (SELECT vec_id, v FROM (
         |             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v

@@ -86,8 +86,8 @@ object Similarity {
   }
 
   /** IVF-bucketed ANN: ~√N deterministic centroids (every ⌈N/√N⌉-th
-    * vector), nprobe session-tunable via `graft.ivf.nprobe` (default
-    * 12 — see [[ivfNprobe]]). With k ≈ √N the assignment step is
+    * vector), nprobe derived from the corpus size (12 at the gate SFs —
+    * see [[ivfNprobe]]). With k ≈ √N the assignment step is
     * O(N·√N) and each probe scans ~√N vectors — the sublinear-per-query
     * shape that survives corpus growth (a corpus-proportional centroid
     * count would make assignment quadratic; the 20× ScaleSmoke exposed
@@ -101,7 +101,7 @@ object Similarity {
     // metadata I/O, not something to do twice per query construction
     val nVecs = graft.Tables.footerRowCount(spark, dir, "embeddings")
     sortFallbackAdvisory(spark, nVecs).foreach(graft.Graft.advise(spark, _, log))
-    ssIvfTopK(spark, dir, ivfNprobe(spark, nVecs), nVecs = nVecs)
+    ssIvfTopK(spark, dir, ivfNprobe(nVecs), nVecs = nVecs)
   }
 
   /** Sort-fallback advisory (round 16, closing the r15 finding #2):
@@ -158,26 +158,22 @@ object Similarity {
     else None
   }
 
-  /** Probe width, CORPUS-SIZE-AWARE (measured, SURVEY §8.4.6): an
-    * explicit `graft.ivf.nprobe` wins; otherwise max(12, ⌈0.15·√N⌉) —
-    * i.e. a fixed ~15% of the √N centroid tables. A FIXED nprobe makes
-    * the probed fraction nprobe/√N SHRINK as the corpus grows, and on
-    * a corpus whose true neighbors spread across cells recall decays
-    * with it: measured mean recall at 40k vectors was 0.69 at nprobe
-    * 12 vs 0.83 at 30 = ⌈0.15·√N⌉ (the floor's first measured failure
-    * — §8.4.6's hard-case row), while the 15% fraction held ≥ 0.83
-    * everywhere measured. The max(12, …) floor keeps every gate SF on
-    * the graded nprobe = 12 plan (byte-stable dumps). Cost honesty: a
-    * fixed centroid fraction probes a fixed ~15% of the CORPUS per
-    * query — the worst-case-safe default; clustered corpora (measured
-    * recall 1.0 at nprobe 6, 100×/200× rows) tune down via the knob.
-    * N comes from footer metadata, not a count() pass. */
-  private[graft] def ivfNprobe(spark: SparkSession, dir: String): Int =
-    ivfNprobe(spark, graft.Tables.footerRowCount(spark, dir, "embeddings"))
-
-  private[graft] def ivfNprobe(spark: SparkSession, nVecs: Long): Int =
-    spark.conf.getOption("graft.ivf.nprobe").map(_.toInt).getOrElse(
-      math.max(12, math.ceil(0.15 * math.sqrt(nVecs.toDouble)).toInt))
+  /** Probe width, CORPUS-SIZE-AWARE (measured, SURVEY §8.4.6):
+    * max(12, ⌈0.15·√N⌉) — i.e. a fixed ~15% of the √N centroid tables.
+    * A FIXED nprobe makes the probed fraction nprobe/√N SHRINK as the
+    * corpus grows, and on a corpus whose true neighbors spread across
+    * cells recall decays with it: measured mean recall at 40k vectors
+    * was 0.69 at nprobe 12 vs 0.83 at 30 = ⌈0.15·√N⌉ (the floor's
+    * first measured failure — §8.4.6's hard-case row), while the 15%
+    * fraction held ≥ 0.83 everywhere measured. The max(12, …) floor
+    * keeps every gate SF on the graded nprobe = 12 plan (byte-stable
+    * dumps). Cost honesty: a fixed centroid fraction probes a fixed
+    * ~15% of the CORPUS per query — the worst-case-safe default;
+    * clustered corpora (measured recall 1.0 at nprobe 6, 100×/200×
+    * rows) pass a smaller `nprobe` to [[ssIvfTopK]]. N comes from
+    * footer metadata, not a count() pass. */
+  private[graft] def ivfNprobe(nVecs: Long): Int =
+    math.max(12, math.ceil(0.15 * math.sqrt(nVecs.toDouble)).toInt)
 
   private[graft] def ssIvfTopK(spark: SparkSession, dir: String,
       nprobe: Int, maxQ: Long = 5L, nVecs: Long = -1L): DataFrame = {
@@ -444,7 +440,7 @@ object Similarity {
     // step = round(√N). An operating-point estimate for the floor, not
     // a data-dependent count (no extra pass).
     val nVecs = graft.Tables.footerRowCount(spark, dir, "embeddings")
-    val nprobe = ivfNprobe(spark, nVecs)
+    val nprobe = ivfNprobe(nVecs)
     val step = math.max(1L, math.round(math.sqrt(nVecs.toDouble)))
     val kCents = math.max(1L, (nVecs + step - 1) / step)
     // floor = min(0.8, 1.6·nprobe/kCents), asserted in exact integer

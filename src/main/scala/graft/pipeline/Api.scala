@@ -185,20 +185,28 @@ class PipelineService(
     * `<name>_b64` — the JSON-body analogue of the multipart file fields. */
   private def parseJsonStart(body: Array[Byte]): Either[String, StartRequest] = {
     val text = new String(body, "UTF-8")
-    val parsed = if (text.trim.isEmpty) PObj(Map.empty) else Json.parse(text)
+    val parsed =
+      if (text.trim.isEmpty) PObj(Map.empty)
+      else Json.tryParse(text).getOrElse(return Left("Unable to parse JSON body"))
     val block = field(parsed, "block")
     val input = field(block, "input") match {
       case PObj(m) => m.map {
         case (k, PStr(b64)) if k.endsWith("_b64") =>
-          k.stripSuffix("_b64") ->
-            (PBytes(java.util.Base64.getDecoder.decode(b64)): PValue)
+          val bytes =
+            try java.util.Base64.getDecoder.decode(b64)
+            catch { case _: IllegalArgumentException =>
+              return Left(s"error parsing block: block.input.$k is not valid base64")
+            }
+          k.stripSuffix("_b64") -> (PBytes(bytes): PValue)
         case kv => kv
       }
       case _ => Map.empty[String, PValue]
     }
     val targetIndex = field(block, "target_index") match {
-      case PInt(i) => i.toInt
-      case _       => -1
+      case PNull => -1
+      case PInt(i) if i.isValidInt => i.toInt
+      case other => return Left(
+        s"error parsing block: invalid block.target_index: ${Json.render(other)}")
     }
     Right(StartRequest(
       Runner.StartInput(strField(block, "slug"), input, targetIndex,

@@ -218,7 +218,7 @@ class FunctionsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .select(col("doc_id"), Dedup.shingles(col("text")).as("shs"))
     val cand = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("doc_a", "doc_b")
-    val kept = Dedup.mhPrefixFilter(cand, docs, slots = 16, minMatch = 2)
+    val kept = Dedup.mhPrefixFilter(cand, docs, slots = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kept == Set((1L, 2L), (5L, 6L)),
       s"tier-0 must keep the near-dup candidates and drop the disjoint one: $kept")

@@ -3,14 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The scale knobs (Dedup's `confLong` block) are session-tunable via
-  * `spark.conf` — these pins prove each conf actually flips the route
-  * or cap it claims to govern, and that the DEFAULTS reproduce the
-  * compile-time behavior the driver gate was graded on. Route flips
-  * are asserted with `LogicalPlan.sameResult` against the
-  * parameter-forced plan (expression-id-normalized plan identity), so
-  * the pin survives refactors that keep the plan and breaks on any
-  * that silently change which plan a conf value selects. */
+/** The scale routes, caps and advisories. Each `graft.*` session
+  * setting (listed at `Dedup.conf`) is pinned to flip the route or cap
+  * it claims to govern, and the DEFAULTS to reproduce the behavior the
+  * driver gate was graded on. Route flips are asserted with
+  * `LogicalPlan.sameResult` against the parameter-forced plan
+  * (expression-id-normalized plan identity), so the pin survives
+  * refactors that keep the plan and breaks on any that silently change
+  * which plan a conf value selects. */
 class KnobsSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}
   import graft.functions.{Dedup, Similarity}
@@ -29,15 +29,13 @@ class KnobsSpec extends AnyFunSuite {
     }
   }
 
-  test("graft.ngram.dfCapFactor scales the auto dfCap; explicit arg wins") {
+  test("the auto dfCap is max(64, 8*round(sqrt(N))); explicit arg wins") {
     val n = Tables.footerRowCount(spark, sf, "documents")
     def cap(f: Long): Int =
       math.max(64L, f * math.round(math.sqrt(n.toDouble))).toInt
     assert(Dedup.resolveCap(spark, sf, -1) == cap(8))
-    withConf("graft.ngram.dfCapFactor" -> "100") {
-      assert(Dedup.resolveCap(spark, sf, -1) == cap(100))
-      assert(Dedup.resolveCap(spark, sf, 7) == 7)
-    }
+    assert(Dedup.resolveCap(spark, sf, 7) == 7)
+    assert(Dedup.dfCapFor(0L) == 64 && Dedup.dfCapFor(10000L) == 800)
   }
 
   test("graft.minhash.maxBucket caps every band bucket") {
@@ -57,7 +55,7 @@ class KnobsSpec extends AnyFunSuite {
     }
   }
 
-  test("graft.simhash.wideSwitch flips the band construction") {
+  test("simhash switches to the wide bands past 1e7 docs") {
     val wide = Dedup.ddSimhash(spark, sf, wideBands = true)
       .queryExecution.optimizedPlan
     val chunk = Dedup.ddSimhash(spark, sf, wideBands = false)
@@ -65,10 +63,8 @@ class KnobsSpec extends AnyFunSuite {
     assert(!wide.sameResult(chunk)) // the pins below can't trivially pass
     assert(Dedup.ddSimhash(spark, sf).queryExecution.optimizedPlan
       .sameResult(chunk), "default at gate SF must be the chunk plan")
-    withConf("graft.simhash.wideSwitch" -> "0") {
-      assert(Dedup.ddSimhash(spark, sf).queryExecution.optimizedPlan
-        .sameResult(wide), "wideSwitch=0 must route to the wide bands")
-    }
+    assert(!Dedup.simhashWideBands(10000000L), "10^7 docs keep the chunk plan")
+    assert(Dedup.simhashWideBands(10000001L), "10^7 + 1 docs take the wide bands")
   }
 
   test("graft.embedCosine.exactMax flips the embed-cosine route") {
@@ -85,7 +81,7 @@ class KnobsSpec extends AnyFunSuite {
     }
   }
 
-  test("graft.ivf.nprobe widens or narrows the IVF probe list") {
+  test("nprobe selects the IVF probe plan; the gate SF default is 12") {
     import graft.functions.Similarity
     val p4 = Similarity.ssIvfTopK(spark, sf, nprobe = 4)
       .queryExecution.optimizedPlan
@@ -94,10 +90,6 @@ class KnobsSpec extends AnyFunSuite {
     assert(!p4.sameResult(p12)) // the pins below can't trivially pass
     assert(Similarity.ssIvfTopK(spark, sf).queryExecution.optimizedPlan
       .sameResult(p12), "default nprobe must be 12")
-    withConf("graft.ivf.nprobe" -> "4") {
-      assert(Similarity.ssIvfTopK(spark, sf).queryExecution.optimizedPlan
-        .sameResult(p4), "nprobe=4 via conf must select the k=4 probe plan")
-    }
   }
 
   test("ivf nprobe default is corpus-size-aware above the gate floor") {
@@ -105,19 +97,18 @@ class KnobsSpec extends AnyFunSuite {
     // gate SFs sit under the max(12, ceil(0.15*sqrt(N))) floor — pinned
     // above as "default nprobe must be 12"; here a 40k-row corpus must
     // push the DEFAULT to ceil(0.15*200) = 30 (the measured recall-0.83
-    // point at §8.4.6's hard case), while an explicit knob still wins
+    // point at §8.4.6's hard case)
     val d = java.nio.file.Files.createTempDirectory("knob-nprobe").toString
     spark.range(40000).select(col("id").as("vec_id"),
         array(lit(1f), pmod(col("id"), lit(7)).cast("float")).as("embedding"),
         lit(0).cast("int").as("label"))
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    assert(Similarity.ivfNprobe(spark, d) == 30,
+    def nprobe(dir: String) =
+      Similarity.ivfNprobe(Tables.footerRowCount(spark, dir, "embeddings"))
+    assert(nprobe(d) == 30,
       "40k vectors must default to nprobe = ceil(0.15*sqrt(40000)) = 30")
-    assert(Similarity.ivfNprobe(spark, sf) == 12,
+    assert(nprobe(sf) == 12,
       "gate corpus must stay on the graded nprobe = 12 floor")
-    withConf("graft.ivf.nprobe" -> "7") {
-      assert(Similarity.ivfNprobe(spark, d) == 7, "explicit knob must win")
-    }
   }
 
   test("ss_ivf_recall emits the per-query recall distribution; gate floor holds") {
@@ -241,7 +232,7 @@ class KnobsSpec extends AnyFunSuite {
     // with tier-0 off, and stay silent below it, with tier-0 on below
     // ITS wall (the escape is already taken), or when the operator is
     // tuned exact on a small corpus — gate corpora must never see it.
-    val warn = Dedup.ngramShuffleWarning(5000000L, 0, 4000000L)
+    val warn = Dedup.ngramShuffleWarning(5000000L, 0)
     assert(warn.exists(m => m.message.contains("mhPrefixSlots") &&
         m.message.contains("zstd")),
       s"advisory must name both measured escapes: $warn")
@@ -250,18 +241,18 @@ class KnobsSpec extends AnyFunSuite {
     assert(warn.exists(a => a.op == "dd_ngram_jaccard" &&
         a.knob == "graft.ngram.mhPrefixSlots" &&
         a.cap == 4000000L && a.measured == 5000000L), warn.toString)
-    assert(Dedup.ngramShuffleWarning(3999999L, 0, 4000000L).isEmpty)
-    assert(Dedup.ngramShuffleWarning(5000000L, 16, 4000000L).isEmpty)
-    assert(Dedup.ngramShuffleWarning(5000L, 0, 4000000L).isEmpty)
+    assert(Dedup.ngramShuffleWarning(3999999L, 0).isEmpty)
+    assert(Dedup.ngramShuffleWarning(5000000L, 16).isEmpty)
+    assert(Dedup.ngramShuffleWarning(5000L, 0).isEmpty)
   }
 
   test("tier-0's own disk-wall advisory fires above the 8.4.3f threshold") {
     // §8.4.3f: tier-0's slimmed shuffle hit the same lz4 wall one
     // doubling later, at 10M docs. With slots > 0 the advisory must
-    // fire above tier0WarnDocs (default 8M) naming zstd — the only
-    // remaining measured escape — and stay silent below it. The exact
-    // path's own regime (slots = 0) is unaffected by tier0WarnDocs.
-    val warn = Dedup.ngramShuffleWarning(10000000L, 16, 4000000L, 8000000L)
+    // fire from 8M docs naming zstd — the only remaining measured
+    // escape — and stay silent below it. The exact path's own regime
+    // (slots = 0) is unaffected by the 8M threshold.
+    val warn = Dedup.ngramShuffleWarning(10000000L, 16)
     assert(warn.exists(m => m.message.contains("tier-0") &&
         m.message.contains("zstd") && m.message.contains("8.4.3f")),
       s"tier-0 advisory must name the zstd escape and the ladder: $warn")
@@ -275,39 +266,36 @@ class KnobsSpec extends AnyFunSuite {
     // rung is a SetConf with the literal codec value…
     assert(warn.exists(a => a.action == AdvisoryAction.SetConf &&
         a.target == "zstd"), warn.toString)
-    // …and at/above stagedWarnDocs (default 16M, under the measured
+    // …and at/above 16M docs (under the measured
     // 20M zstd wall) the rung is a SwitchOperator naming the registry
     // key — no knob: the plan SHAPE is the problem, nothing tunes it
-    val staged = Dedup.ngramShuffleWarning(20000000L, 16, 4000000L,
-      8000000L, 16000000L)
+    val staged = Dedup.ngramShuffleWarning(20000000L, 16)
     assert(staged.exists(a =>
         a.action == AdvisoryAction.SwitchOperator &&
         a.target == "dd_ngram_staged" && a.knob.isEmpty &&
         a.cap == 16000000L && a.measured == 20000000L), staged.toString)
-    assert(Dedup.ngramShuffleWarning(15999999L, 16, 4000000L, 8000000L)
+    assert(Dedup.ngramShuffleWarning(15999999L, 16)
       .exists(_.action == AdvisoryAction.SetConf),
       "below the staged threshold the zstd rung must keep firing")
     // round 20 (r19 ADVICE): the zstd rung goes SILENT once the codec
     // is already zstd — tier-0+zstd is measured clean through just
     // under 20M docs, so a retry-until-silent dispatcher converges
     // (previously it got the identical SetConf again forever)
-    assert(Dedup.ngramShuffleWarning(10000000L, 16, 4000000L, 8000000L,
-      16000000L, zstd = true).isEmpty,
+    assert(Dedup.ngramShuffleWarning(10000000L, 16, zstd = true).isEmpty,
       "the zstd rung must not re-recommend an already-active codec")
     // …while the staged rung still fires regardless of codec (past
     // 16M the plan shape, not the codec, is the problem)
-    assert(Dedup.ngramShuffleWarning(20000000L, 16, 4000000L, 8000000L,
-      16000000L, zstd = true)
+    assert(Dedup.ngramShuffleWarning(20000000L, 16, zstd = true)
       .exists(_.action == AdvisoryAction.SwitchOperator))
     // the exact rung's action: SetConf of the tier-0 escape
-    assert(Dedup.ngramShuffleWarning(5000000L, 0, 4000000L)
+    assert(Dedup.ngramShuffleWarning(5000000L, 0)
       .exists(a => a.action == AdvisoryAction.SetConf &&
         a.knob == "graft.ngram.mhPrefixSlots" && a.target == "16"))
-    assert(Dedup.ngramShuffleWarning(7999999L, 16, 4000000L, 8000000L).isEmpty)
-    assert(Dedup.ngramShuffleWarning(5000L, 16, 4000000L, 8000000L).isEmpty)
+    assert(Dedup.ngramShuffleWarning(7999999L, 16).isEmpty)
+    assert(Dedup.ngramShuffleWarning(5000L, 16).isEmpty)
     // slots = 0 above BOTH thresholds still reports the exact-path wall
     // (its message carries the tier-0 escape; it must not be shadowed)
-    assert(Dedup.ngramShuffleWarning(10000000L, 0, 4000000L, 8000000L)
+    assert(Dedup.ngramShuffleWarning(10000000L, 0)
       .exists(_.message.contains("8.4.3e")))
   }
 
@@ -1126,14 +1114,14 @@ class KnobsSpec extends AnyFunSuite {
     // SetConf: the exact-tier wall record sets tier-0 (measured zero
     // pair loss) — dispatched, the operator reproduces its pair set
     val baseline = Dedup.ddNgramJaccard(spark, sf).count()
-    val setConf = Dedup.ngramShuffleWarning(5000000L, 0, 4000000L)
+    val setConf = Dedup.ngramShuffleWarning(5000000L, 0)
       .getOrElse(fail("exact-tier record"))
     assert(setConf.action == AdvisoryAction.SetConf)
     assert(dispatch(setConf,
       () => Dedup.ddNgramJaccard(spark, sf).count()) == baseline)
     // SwitchOperator: the last-rung record re-routes through the
     // registry to the staged operator — same pair set, bounded spill
-    val switch = Dedup.ngramShuffleWarning(20000000L, 16, 4000000L)
+    val switch = Dedup.ngramShuffleWarning(20000000L, 16)
       .getOrElse(fail("staged-rung record"))
     assert(switch.action == AdvisoryAction.SwitchOperator)
     assert(dispatch(switch, () => fail("SwitchOperator must not re-run " +
@@ -1317,29 +1305,29 @@ class KnobsSpec extends AnyFunSuite {
     }
     // the pairs stage materializes pre-distinct rows: >= the result's
     assert(recs.last.measured >= n, s"${recs.last} vs $n rows")
-    // an explicit conf beats the auto default and stamps the records
-    withConf("graft.ngram.stageShards" -> "2") {
-      Graft.clearAdvisories(spark)
-      functions.Dedup.ddNgramJaccardStaged(spark, sf,
-        stageDir = stage).count()
-      assert(stageRecs.nonEmpty && stageRecs.forall(_.cap == 2L),
-        stageRecs.toString)
-    }
     Graft.clearAdvisories(spark)
   }
 
   test("staged shard resolution: explicit argument beats the conf, conf beats auto") {
-    // the full precedence chain; conf-beats-auto and auto=1-at-gate-SF
-    // are pinned in the per-stage-records test — this pins arg>conf
+    // the full precedence chain; conf-beats-auto (the budget conf
+    // drives the sizing) is pinned in the budget-decision test and
+    // auto=1-at-gate-SF in the per-stage-records test — this pins
+    // arg>conf: a budget conf that sizes k = 3 loses to shards = 2
     val stage = "target/test-ngram-staged-precedence"
-    withConf("graft.ngram.stageShards" -> "3") {
+    val nDocs = Tables.footerRowCount(spark, sf, "documents")
+    val spill = Dedup.ngramSinglePlanSpillBytes(nDocs,
+      tier0 = false, zstd = false)
+    val budget = (spill + 2L) / 3L  // → k = 3
+    assert(Dedup.ngramStageShards(spill, budget) == 3,
+      s"test premise: $spill / $budget")
+    withConf("graft.ngram.stageSpillBudgetBytes" -> budget.toString) {
       Graft.clearAdvisories(spark)
       functions.Dedup.ddNgramJaccardStaged(spark, sf,
         stageDir = stage, shards = 2).count()
       val caps = Graft.advisoryRecords(spark)
         .filter(_.knob.startsWith("stage:")).map(_.cap)
       assert(caps.nonEmpty && caps.forall(_ == 2L),
-        s"explicit shards=2 must beat conf=3: $caps")
+        s"explicit shards=2 must beat the conf budget's k=3: $caps")
     }
     Graft.clearAdvisories(spark)
   }

@@ -200,6 +200,70 @@ class ApiSpec extends AnyFunSuite {
     } finally svc.stop()
   }
 
+  test("a malformed JSON start or resume gets 400 naming the problem") {
+    val spec = PipelineSpec("bad-pipe", "t", "d", Seq(
+      BlockSpec("wrap_text", "wrap", "wrap the posted input text",
+        input = Map("prefix" -> PStr("("), "suffix" -> PStr(")")))))
+    val root = java.nio.file.Files.createTempDirectory("graft-api-bad")
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    val conf = Runner.RunConfig(spark, registry,
+      new CheckpointStore(root.toString), Clients.mockCtx())
+    val svc = new PipelineService(Seq(spec), conf)
+    val port = svc.start()
+    def error(body: String): String = Json.parse(body) match {
+      case PObj(m) => m("error").asString
+      case _ => fail(s"not a JSON object: $body")
+    }
+    def written(): Seq[java.nio.file.Path] = {
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_)).toList
+      finally s.close()
+    }
+    val pid = java.util.UUID.randomUUID().toString
+    val refused = Seq(
+      "{" -> "JSON",
+      """{"block":{"slug":"wrap","input":{"file_b64":"!!"}}}""" -> "file_b64",
+      """{"block":{"slug":"wrap","input":{"text":"x"},"target_index":"2"}}""" ->
+        "target_index",
+      """{"block":{"slug":"wrap","input":{"text":"x"},"target_index":1.5}}""" ->
+        "target_index")
+    try {
+      for (action <- Seq("start", "resume"); (body, names) <- refused) {
+        val withPid =
+          if (action == "resume" && body != "{")
+            body.stripSuffix("}") + s""","pipeline":{"processing_id":"$pid"}}"""
+          else body
+        val (code, resp) = post(port, s"/pipelines/bad-pipe/$action", withPid)
+        assert(code == 400 && error(resp).contains(names),
+          s"$action $withPid: $code $resp")
+      }
+      Thread.sleep(200)
+      assert(written().isEmpty, s"refused requests wrote: ${written()}")
+
+      // absent and null target_index both mean "every row"
+      for (body <- Seq(
+          """{"block":{"slug":"","input":{"text":"ping"}}}""",
+          """{"block":{"slug":"","input":{"text":"ping"},"target_index":null}}""")) {
+        val (sc, started) = post(port, "/pipelines/bad-pipe/start", body)
+        assert(sc == 200, started)
+        val id = Json.parse(started) match {
+          case PObj(m) => m("processing_id").asString
+          case _ => fail(started)
+        }
+        val deadline = System.currentTimeMillis() + 20000
+        var out = conf.checkpoint.loadOutput("bad-pipe", id, "wrap")
+        while (out.isEmpty && System.currentTimeMillis() < deadline) {
+          Thread.sleep(50)
+          out = conf.checkpoint.loadOutput("bad-pipe", id, "wrap")
+        }
+        assert(out.exists(o => new String(o.head._2, "UTF-8") == "(ping)"),
+          s"$body did not complete")
+      }
+    } finally svc.stop()
+  }
+
   private def postBytes(port: Int, path: String, body: Array[Byte],
       contentType: String): (Int, String) = {
     val client = java.net.http.HttpClient.newHttpClient()
