@@ -1,14 +1,19 @@
 package graft.pipeline
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import java.io.{ByteArrayOutputStream}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption,
+  StandardOpenOption}
+import java.util.UUID
+import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
 
 /** Per-stage checkpoint store (engine ops E11-E13): every block output
   * row is written to
   * `<root>/<pipelineSlug>/<processingId>/<blockSlug>/output_<idx>.<ext>`
   * (the reference's layout, pipeline_block_data_registry.go:291-334),
-  * extension inferred by magic-bytes sniffing (types/storage.go:126-170).
+  * extension inferred by magic-bytes sniffing (types/storage.go:126-170);
+  * run-ledger documents (`log_<ts>`, `status_<ts>`) sit beside the block
+  * directories.
   *
   * Multi-storage fan-out: like the reference (which writes every output
   * to local FS AND MinIO, pipeline_block_data_registry.go:291-334),
@@ -18,24 +23,49 @@ import java.io.{ByteArrayOutputStream}
   * `:210-214`; here the caller declares it), so data present in several
   * stores is never merged twice.
   *
-  * Uses the Hadoop FileSystem API so the same store works on local FS in
-  * tests and on HDFS/S3 at cluster scale; block outputs are the
-  * inter-stage contract that makes resume and targeted regeneration
-  * possible.
+  * A root is a local path or a `file:` URI; any other scheme is refused
+  * at construction. All I/O goes through `java.nio.file`: a write lands
+  * in a unique dot-prefixed temp file in the target directory and is
+  * published with an atomic replace, so concurrent writers and readers
+  * of one processing only ever see whole files, and dot-prefixed names
+  * never show in listings.
+  *
+  * No Hadoop `FileSystem` path is kept: no caller builds a store on
+  * another scheme, and the service saves every block output and serves
+  * run status from here, so per-file cost is request latency. Hadoop's
+  * `LocalFileSystem` adds a checksum sidecar and permission calls to
+  * every file, which made checkpointing over half of a `service_mix`
+  * run (perfbench). Data-scale checkpoints
+  * stay on Spark and Hadoop in [[BulkRunner]]. Trees written through
+  * Hadoop stay readable: their `.crc` sidecars are dot-prefixed, and a
+  * replaced or deleted output takes its stale sidecar with it.
+  *
+  * @param conf unused; kept so existing callers compile.
   */
 class CheckpointStore(val roots: Seq[String], conf: Configuration)
     extends Serializable {
   require(roots.nonEmpty, "CheckpointStore needs at least one storage root")
+  roots.foreach(CheckpointStore.localPath)
 
   def this(root: String) = this(Seq(root), new Configuration())
   def this(roots: Seq[String]) = this(roots, new Configuration())
   def this(root: String, conf: Configuration) = this(Seq(root), conf)
 
-  private def fs(p: Path): FileSystem = p.getFileSystem(conf)
+  private def path(root: String, parts: String*): Path =
+    parts.foldLeft(CheckpointStore.localPath(root))(_.resolve(_))
 
-  /** Stage directory in the preferred (first) root. */
-  def stageDir(pipeline: String, processingId: String, blockSlug: String): Path =
-    new Path(roots.head, s"$pipeline/$processingId/$blockSlug")
+  /** Runs `body` once per root; returns the failures `(root, error)`. */
+  private def eachRoot(body: String => Unit): Seq[(String, String)] =
+    roots.flatMap { root =>
+      try { body(root); None }
+      catch { case e: Exception => Some(root -> String.valueOf(e.getMessage)) }
+    }
+
+  /** `read` on each root in preference order, until one has data; a
+    * root that fails to read has none. */
+  private def firstWith[T](read: String => Seq[T]): Seq[T] =
+    roots.iterator.map(root => try read(root) catch { case _: Exception => Nil })
+      .find(_.nonEmpty).getOrElse(Nil)
 
   /** E11: persist one stage's output rows to every storage root.
     * Replaces only the indexes present in `rows` (targeted regeneration
@@ -44,115 +74,98 @@ class CheckpointStore(val roots: Seq[String], conf: Configuration)
     * partial write is not fatal as long as one root survives. */
   def saveOutput(pipeline: String, processingId: String, blockSlug: String,
       rows: Seq[(Int, Array[Byte])]): Seq[(String, String)] =
-    roots.flatMap { root =>
-      try { saveOutputTo(root, pipeline, processingId, blockSlug, rows); None }
-      catch { case e: Exception => Some(root -> String.valueOf(e.getMessage)) }
+    eachRoot { root =>
+      val d = path(root, pipeline, processingId, blockSlug)
+      // index → existing files, so regeneration replaces output_<idx>.*
+      // even when the extension changes
+      val existing = CheckpointStore.names(d).groupBy(_.takeWhile(_ != '.'))
+      rows.foreach { case (idx, bytes) =>
+        val name = s"output_$idx${Mime.extensionOf(bytes)}"
+        CheckpointStore.publish(d.resolve(name), bytes)
+        existing.getOrElse(s"output_$idx", Nil).filter(_ != name)
+          .foreach(n => CheckpointStore.delete(d.resolve(n)))
+      }
     }
-
-  private def saveOutputTo(root: String, pipeline: String, processingId: String,
-      blockSlug: String, rows: Seq[(Int, Array[Byte])]): Unit = {
-    val dir = new Path(root, s"$pipeline/$processingId/$blockSlug")
-    val f = fs(dir)
-    if (!f.mkdirs(dir)) throw new java.io.IOException(s"cannot create $dir")
-    // One listing up front (listStatus per row is O(rows × files) RPCs on
-    // object stores); map index → existing files so regeneration can
-    // replace output_<idx>.* even when the extension changes.
-    val existing: Map[String, Seq[Path]] = f.listStatus(dir).toSeq
-      .map(_.getPath)
-      .groupBy(p => p.getName.takeWhile(_ != '.'))
-    rows.foreach { case (idx, bytes) =>
-      existing.getOrElse(s"output_$idx", Nil).foreach(f.delete(_, false))
-      val ext = Mime.extensionOf(bytes)
-      atomicWrite(f, new Path(dir, s"output_$idx$ext"), bytes)
-    }
-  }
-
-  /** Write-then-rename so a concurrent reader (the async start/resume
-    * API polls while the run executes) never observes a half-written
-    * file. Dot-prefixed temp names are invisible to the output_/doc
-    * listings. */
-  private def atomicWrite(f: FileSystem, target: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(target.getParent, s".${target.getName}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    if (f.exists(target)) f.delete(target, false)
-    if (!f.rename(tmp, target))
-      throw new java.io.IOException(s"cannot publish $target")
-  }
 
   /** E12: hydrate a stage's rows from storage (resume path) — first
     * root that has the stage wins (preferred-store dedup on load). */
   def loadOutput(pipeline: String, processingId: String,
       blockSlug: String): Option[Seq[(Int, Array[Byte])]] =
-    roots.iterator.flatMap { root =>
-      try loadOutputFrom(root, pipeline, processingId, blockSlug)
-      catch { case _: Exception => None }
-    }.nextOption()
-
-  private def loadOutputFrom(root: String, pipeline: String,
-      processingId: String, blockSlug: String): Option[Seq[(Int, Array[Byte])]] = {
-    val dir = new Path(root, s"$pipeline/$processingId/$blockSlug")
-    val f = fs(dir)
-    if (!f.exists(dir)) return None
-    val idxRe = "output_(\\d+).*".r
-    val rows = f.listStatus(dir).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case idxRe(i) => Some(i.toInt -> readFully(f, st.getPath))
-        case _        => None
-      }
-    }.sortBy(_._1)
-    if (rows.isEmpty) None else Some(rows)
-  }
+    Some(firstWith { root =>
+      val d = path(root, pipeline, processingId, blockSlug)
+      CheckpointStore.names(d).collect {
+        case n @ CheckpointStore.output(i) => i.toInt -> Files.readAllBytes(d.resolve(n))
+      }.sortBy(_._1)
+    }).filter(_.nonEmpty)
 
   /** E14: write a structured run-ledger document to every root;
     * returns per-root failures. */
   def saveDocument(pipeline: String, processingId: String, name: String,
       content: String): Seq[(String, String)] =
-    roots.flatMap { root =>
-      try {
-        val p = new Path(root, s"$pipeline/$processingId/$name")
-        atomicWrite(fs(p), p, content.getBytes("UTF-8"))
-        None
-      } catch { case e: Exception => Some(root -> String.valueOf(e.getMessage)) }
-    }
+    eachRoot(root => CheckpointStore.publish(
+      path(root, pipeline, processingId, name), content.getBytes("UTF-8")))
 
   /** Union across roots (a processing may survive in only one store). */
   def listProcessings(pipeline: String): Seq[String] =
     roots.flatMap { root =>
-      try {
-        val dir = new Path(root, pipeline)
-        val f = fs(dir)
-        if (!f.exists(dir)) Nil
-        else f.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-      } catch { case _: Exception => Nil }
+      val d = path(root, pipeline)
+      Try(CheckpointStore.names(d).filter(n => Files.isDirectory(d.resolve(n)))).getOrElse(Nil)
     }.distinct
 
   /** First root with matching documents wins (same dedup rule as
     * loadOutput). */
   def readDocuments(pipeline: String, processingId: String,
       prefix: String): Seq[(String, String)] =
-    roots.iterator.map { root =>
-      try {
-        val dir = new Path(root, s"$pipeline/$processingId")
-        val f = fs(dir)
-        if (!f.exists(dir)) Nil
-        else f.listStatus(dir).toSeq
-          .filter(st => st.isFile && st.getPath.getName.startsWith(prefix))
-          .map(st => st.getPath.getName -> new String(readFully(f, st.getPath), "UTF-8"))
-          .sortBy(_._1)
-      } catch { case _: Exception => Seq.empty[(String, String)] }
-    }.find(_.nonEmpty).getOrElse(Nil)
+    firstWith { root =>
+      val d = path(root, pipeline, processingId)
+      CheckpointStore.names(d)
+        .filter(n => n.startsWith(prefix) && Files.isRegularFile(d.resolve(n)))
+        .map(n => n -> new String(Files.readAllBytes(d.resolve(n)), "UTF-8"))
+        .sortBy(_._1)
+    }
+}
 
-  private def readFully(f: FileSystem, p: Path): Array[Byte] = {
-    val in = f.open(p)
-    val buf = new ByteArrayOutputStream()
-    try {
-      val tmp = new Array[Byte](64 * 1024)
-      var n = in.read(tmp)
-      while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-    } finally in.close()
-    buf.toByteArray
+object CheckpointStore {
+  private val scheme = "^([A-Za-z][A-Za-z0-9+.-]*):".r.unanchored
+  private val output = "output_(\\d+).*".r
+
+  /** The local directory a root names: a path, or a `file:` URI. */
+  private def localPath(root: String): Path = root match {
+    case scheme(s) if s.length > 1 =>
+      Try(Paths.get(java.net.URI.create(root))).filter(_ => s.equalsIgnoreCase("file"))
+        .getOrElse(throw new IllegalArgumentException(
+          s"checkpoint root $root is neither a local path nor a file: URI"))
+    case _ => Paths.get(root)
   }
+
+  /** Visible entry names of a directory; none when it does not exist. */
+  private def names(d: Path): Seq[String] =
+    try Using.resource(Files.list(d)) {
+      _.iterator.asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toSeq
+    } catch { case _: NoSuchFileException => Nil }
+
+  /** Write-then-rename through a temp name unique to this write, so a
+    * concurrent writer never shares it and a concurrent reader (the
+    * async start/resume API polls while the run executes) sees the old
+    * file or the new one, never a part of one or a gap. */
+  private def publish(target: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".${target.getFileName}.${UUID.randomUUID}.tmp")
+    try {
+      Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      Files.move(tmp, target,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+    dropSidecar(target)
+  }
+
+  private def delete(p: Path): Unit = { Files.deleteIfExists(p); dropSidecar(p) }
+
+  /** A file written through Hadoop's LocalFileSystem has a checksum
+    * sidecar `.<name>.crc`; once the file changes it no longer matches. */
+  private def dropSidecar(p: Path): Unit =
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
 }
 
 /** Magic-bytes MIME sniffer — the reference infers checkpoint file

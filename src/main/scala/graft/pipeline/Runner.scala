@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.CountDownLatch
+import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{ExecutionContext, Future}
 import scala.util.Try
 
 /** Pipeline execution engine: the reference's PipelineData.Process loop
@@ -17,9 +18,13 @@ import scala.util.Try
   * fan-out row, like the reference's per-row processor calls over
   * driver-held output buffers (pipeline.go:607-627); no Spark job is
   * launched. The block's [[ExecMode]] only picks fan-out concurrency:
-  *  - Distributed (pure compute) → rows run concurrently on futures;
+  *  - Distributed (pure compute) → rows run concurrently;
   *  - DriverSide (side effects) → ordered loop with early abort, or
-  *    futures when `parallel: true` and the block allows it.
+  *    concurrently when `parallel: true` and the block allows it.
+  * A concurrent fan-out runs on the calling thread plus helpers from
+  * `ExecutionContext.global`, and never waits for a helper that has not
+  * started: callers such as the service run whole requests on that
+  * pool, so its workers may all be busy with other runs.
   * Data-scale fan-out runs on Spark through [[BulkRunner]] instead.
   */
 object Runner {
@@ -318,12 +323,21 @@ object Runner {
       last
     }
 
-    // One row runs on the caller's thread: it never waits for a pool
-    // thread behind other runs' fan-out or image compute.
-    if (parallel && rows.size > 1) {
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fs = rows.map(r => Future((r.idx, runOne(r))))
-      Await.result(Future.sequence(fs), Duration.Inf)
+    if (parallel) {
+      // The caller and up to n-1 pool helpers claim rows from one
+      // counter. The caller waits only for rows a helper has claimed, so
+      // a pool busy with other runs never stalls this fan-out.
+      val out = new Array[Try[BlockResult]](rows.size)
+      val done = Array.fill(rows.size)(new CountDownLatch(1))
+      val next = new AtomicInteger(0)
+      def drain(): Unit =
+        Iterator.continually(next.getAndIncrement()).takeWhile(_ < rows.size)
+          .foreach(i => try out(i) = runOne(rows(i)) finally done(i).countDown())
+      (1 until rows.size).foreach(_ => ExecutionContext.global.execute(() => drain()))
+      drain()
+      done.foreach(_.await())
+      rows.indices.map(i => (rows(i).idx, Option(out(i)).getOrElse(
+        scala.util.Failure(new IllegalStateException("row worker died")))))
     } else {
       val acc = scala.collection.mutable.ArrayBuffer[(Int, Try[BlockResult])]()
       rows.foreach { r =>

@@ -3,6 +3,33 @@ package graft.pipeline
 import graft.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Starts a [[PipelineService]] as the first HTTP server of its JVM and
+  * prints the median round trip, in ms, of 20 sequential `GET /health`
+  * requests on one connection (after one that opens it). */
+object HealthRoundTrip {
+  def main(args: Array[String]): Unit = {
+    val conf = Runner.RunConfig(null, BlockRegistry.standard(),
+      new CheckpointStore(java.nio.file.Files.createTempDirectory("graft-rtt").toString),
+      Clients.mockCtx())
+    val svc = new PipelineService(Nil, conf)(scala.concurrent.ExecutionContext.global)
+    val port = svc.start()
+    try {
+      val client = java.net.http.HttpClient.newBuilder()
+        .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+      val req = java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:$port/health")).GET().build()
+      def send(): Double = {
+        val t0 = System.nanoTime()
+        val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+        require(resp.statusCode() == 200, resp.body())
+        (System.nanoTime() - t0) / 1e6
+      }
+      send()
+      println(Seq.fill(20)(send()).sorted.apply(10))
+    } finally svc.stop()
+  }
+}
+
 /** The HTTP facade, driven through a real loopback socket — mirrors
   * the reference's server_test + the §3.1 start/resume handlers. */
 class ApiSpec extends AnyFunSuite {
@@ -366,5 +393,19 @@ class ApiSpec extends AnyFunSuite {
         "text".getBytes("UTF-8"), "text/plain")
       assert(uc == 400 && ub.contains("Unsupported Content-Type"))
     } finally svc.stop()
+  }
+
+  test("small replies are not held back: median GET /health round trip under 20 ms") {
+    // a fresh JVM, so the service creates its first HTTP server
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java")
+    val proc = new ProcessBuilder(javaBin.toString, "-cp",
+      System.getProperty("java.class.path"), "graft.pipeline.HealthRoundTrip")
+      .redirectErrorStream(true).start()
+    try {
+      val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+      assert(proc.waitFor() == 0, out)
+      val medianMs = out.trim.linesIterator.toSeq.last.toDouble
+      assert(medianMs < 20.0, s"median round trip $medianMs ms")
+    } finally proc.destroyForcibly()
   }
 }

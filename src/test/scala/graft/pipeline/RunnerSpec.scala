@@ -3,6 +3,10 @@ package graft.pipeline
 import graft.SparkTestSession
 import graft.pipeline.Clients.{MockLLMClient, MockModerationClient, ModerationUpdate}
 import graft.pipeline.Runner._
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{CompletableFuture, CountDownLatch, ForkJoinPool, TimeUnit}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
@@ -504,5 +508,97 @@ class RunnerSpec extends AnyFunSuite {
     // the sequential side-effecting block aborts before row 3
     assert(scala.jdk.CollectionConverters.CollectionHasAsScala(ordered.invoked)
       .asScala.toSeq == Seq(0, 1, 2))
+  }
+
+  test("a tree written through Hadoop's LocalFileSystem (.crc sidecars) loads and resumes") {
+    val spec = parse(
+      """{"slug":"legacy","title":"t","description":"d","blocks":[
+        |{"id":"openai_chat_completion","slug":"chat","description":"expensive upstream llm call",
+        | "input":{"user_prompt":"write something"}},
+        |{"id":"wrap_text","slug":"decorate","description":"decorate the llm output text",
+        | "input":{"prefix":"* "},
+        | "input_config":{"property":{"text":{"origin":"chat"}}}}
+        |]}""".stripMargin)
+    val (conf, llm, _, root) = freshConf()
+    val first = process(spec, StartInput(), conf)
+    assert(first.status == Completed)
+    val pid = first.processingId
+
+    // the same tree, every file written through the checksummed local FS
+    // as the Hadoop-based store wrote it
+    val src = java.nio.file.Paths.get(root)
+    val legacy = Files.createTempDirectory("graft-legacy")
+    val fs = FileSystem.getLocal(new Configuration())
+    Files.walk(src).filter(Files.isRegularFile(_)).forEach { p =>
+      val out = fs.create(new HPath(legacy.resolve(src.relativize(p)).toString))
+      try out.write(Files.readAllBytes(p)) finally out.close()
+    }
+    def names(d: Path): Set[String] = scala.util.Using.resource(Files.list(d))(
+      _.toArray.map(_.asInstanceOf[Path].getFileName.toString).toSet)
+    val chatDir = legacy.resolve(s"legacy/$pid/chat")
+    val chatFile = names(chatDir).find(_.startsWith("output_0")).get
+    assert(Files.exists(chatDir.resolve(s".$chatFile.crc")))
+
+    val store = new CheckpointStore(legacy.toString)
+    def texts(rows: Seq[(Int, Array[Byte])]) = rows.map(r => (r._1, new String(r._2, "UTF-8")))
+    assert(store.loadOutput("legacy", pid, "chat").map(texts).contains(texts(first.outputs("chat"))))
+    Seq("status_", "log_").foreach { prefix =>
+      val docs = store.readDocuments("legacy", pid, prefix)
+      assert(docs.nonEmpty && docs == conf.checkpoint.readDocuments("legacy", pid, prefix))
+    }
+    val calls = llm.calls.size()
+    val resumed = resume(spec, pid, "decorate", conf.copy(checkpoint = store))
+    assert(resumed.status == Completed)
+    assert(llm.calls.size() == calls)
+    assert(str(resumed, "decorate") == str(first, "decorate"))
+
+    // a rewritten output drops its stale sidecar; an untouched one keeps it
+    val decorateDir = legacy.resolve(s"legacy/$pid/decorate")
+    assert(Files.exists(decorateDir.resolve("output_0.txt")))
+    assert(!Files.exists(decorateDir.resolve(".output_0.txt.crc")))
+    assert(Files.exists(chatDir.resolve(s".$chatFile.crc")))
+    // replacing under another extension deletes the old file and its sidecar
+    assert(store.saveOutput("legacy", pid, "chat", Seq(0 -> """{"a":1}""".getBytes("UTF-8"))).isEmpty)
+    assert(names(chatDir) == Set("output_0.json"), names(chatDir))
+    // and Hadoop, which verifies sidecars, still reads every file
+    Files.walk(legacy).filter(p => Files.isRegularFile(p) &&
+        !p.getFileName.toString.startsWith(".")).forEach { p =>
+      val in = fs.open(new HPath(p.toString))
+      try in.readAllBytes() finally in.close()
+    }
+  }
+
+  test("a parallel fan-out completes while every global pool worker is busy") {
+    val list = (0 until 8).map(i => s"\"r$i\"").mkString("{\"items\":[", ",", "]}")
+    val spec = parse(
+      s"""{"slug":"busy","title":"t","description":"d","blocks":[
+        |{"id":"wrap_text","slug":"list","description":"emit eight items as json",
+        | "input":{"text":${Json.render(PStr(list))}}},
+        |{"id":"wrap_text","slug":"each","description":"wrap every item in brackets",
+        | "input":{"prefix":"[","suffix":"]"},
+        | "input_config":{"type":"array","parallel":true,"property":{
+        |   "text":{"origin":"list","json_path":"$$.items[*]"}}}}
+        |]}""".stripMargin)
+    val (conf, _, _, _) = freshConf()
+    val global = scala.concurrent.ExecutionContext.global
+    val workers = global.asInstanceOf[ForkJoinPool].getParallelism
+    val started = new CountDownLatch(workers)
+    val release = new CountDownLatch(1)
+    try {
+      (1 to workers).foreach(_ => global.execute { () =>
+        started.countDown(); release.await()
+      })
+      assert(started.await(10, TimeUnit.SECONDS), "pool workers did not all start")
+      val result = new CompletableFuture[RunReport]()
+      val caller = new Thread(() =>
+        try result.complete(process(spec, StartInput(), conf))
+        catch { case t: Throwable => result.completeExceptionally(t) })
+      caller.setDaemon(true)
+      caller.start()
+      val report = result.get(10, TimeUnit.SECONDS)
+      assert(report.status == Completed)
+      assert(report.outputs("each").sortBy(_._1).map(r => new String(r._2, "UTF-8")) ==
+        (0 until 8).map(i => s"[r$i]"))
+    } finally release.countDown()
   }
 }
