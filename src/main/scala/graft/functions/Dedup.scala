@@ -6,54 +6,28 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
 
 /** Deduplication operators over `documents` — exact, n-gram Jaccard,
-  * MinHash+LSH, SimHash, embedding-cosine — the core training-data
-  * pipeline surface.
+  * MinHash+LSH, SimHash, embedding-cosine.
   *
-  * Scale design: every variant generates candidates through an
-  * *equi-join on a derived key* (fingerprint, shared shingle, LSH band,
-  * SimHash chunk) so the shuffle distributes on high-cardinality keys
-  * and no O(n²) comparison ever materializes; exact similarity is only
-  * computed on the candidate set. That is the shape that survives 100 TB
-  * — the one deliberate exception is [[ddEmbedCosine]]'s exact route,
-  * which keeps the broadcast nested loop while the corpus is small
-  * enough that full pair scoring is cheaper than blocking (≤ 2¹⁶
-  * vectors) and switches to IVF-cell pairing above. The scale-side
-  * plans are driver-gated via the `dd_simhash_wide` /
-  * `dd_embed_cosine_bucketed` registrations; the session settings this
-  * object reads are listed at [[conf]].
+  * Every variant generates candidates through an equi-join on a
+  * derived key (fingerprint, shingle, LSH band, SimHash block), so no
+  * O(n²) comparison materializes and exact similarity is computed on
+  * candidates only. The shingle and band generators share one
+  * self-join ([[keySelfJoin]]); the Jaccard paths, batch and streaming,
+  * share one verifier ([[exactVerify]]). The exception is
+  * [[ddEmbedCosine]]'s exact route, a broadcast nested loop up to 2¹⁶
+  * vectors. Session settings are listed at [[conf]].
   */
 object Dedup {
 
-  /** The seven `graft.*` session settings, each kept because a caller
-    * outside the tests sets it or an advisory record names it as the
-    * setting to change:
-    *
-    *  - `graft.ngram.mhPrefixSlots` (0 = off): leading MinHash slots
-    *    carried as a tier-0 candidate filter in the ngram verify (see
-    *    [[mhPrefixFilter]]). Off by default because the filter is
-    *    probabilistic; the exact-ngram disk-wall advisory sets it to 16
-    *    and ScaleSmoke runs with 16.
-    *  - `graft.ngram.stageDir` (`target/ngram-staged`): where
-    *    [[ddNgramJaccardStaged]] materializes its stages — a path, and
-    *    the target of the stage-filesystem mismatch advisory.
-    *  - `graft.ngram.stageSpillBudgetBytes` (probed): the per-node disk
-    *    budget that sizes the staged shard count; the auto-sizing
-    *    Observe record names it as the override.
-    *  - `graft.minhash.maxBucket` (1024): LSH band-bucket member cap —
-    *    the target of the bucket advisory's RaiseKnob record.
-    *  - `graft.embedCosine.maxCell` ([[embedCosineMaxCellDefault]]):
-    *    IVF-cell member cap above which a cell is hash-split into
-    *    shards — the target of the cell advisories' RaiseKnob records.
-    *  - `graft.embedCosine.exactMax` (2¹⁶): vectors above which the
-    *    IVF-bucketed route replaces the exact broadcast loop — named by
-    *    the route advisory; EmbedRecallSmoke sets it.
-    *  - `graft.embedCosine.probeMargin` (0.01): boundary multi-probe
-    *    margin — named by the route advisory; ClusterSmoke sets 0 and
-    *    EmbedRecallSmoke runs a ladder of values.
-    *
-    * Every other threshold in this object is a constant: the gate and
-    * the benchmark run at these defaults. A malformed value fails with
-    * the key named. */
+  /** The seven `graft.*` session settings, each set by a caller outside
+    * the tests or named by an advisory: `graft.ngram.mhPrefixSlots`
+    * (0, [[mhPrefixFilter]]), `graft.ngram.stageDir` and
+    * `graft.ngram.stageSpillBudgetBytes` ([[ddNgramJaccardStaged]]),
+    * `graft.minhash.maxBucket` (1024, [[minhashCandidates]]),
+    * `graft.embedCosine.maxCell` ([[embedCosineMaxCellDefault]]),
+    * `graft.embedCosine.exactMax` (2¹⁶) and
+    * `graft.embedCosine.probeMargin` (0.01). Every other threshold is a
+    * constant. A malformed value fails with the key named. */
   private def conf[T](spark: SparkSession, key: String)(
       parse: String => T): Option[T] =
     spark.conf.getOption(key).map { v =>
@@ -63,27 +37,33 @@ object Dedup {
       }
     }
 
+  /** [[conf]] for a member cap. Every bucket or cell has at least one
+    * member, so a cap ≤ 0 would drop every minhash bucket (an empty
+    * result) or divide the cell split by zero; it fails with the key
+    * named instead. */
+  private def capConf[T](spark: SparkSession, key: String)(
+      parse: String => T)(implicit num: Numeric[T]): Option[T] =
+    conf(spark, key)(parse).map { c =>
+      if (num.signum(c) <= 0)
+        throw new IllegalArgumentException(s"$key must be positive, got $c")
+      c
+    }
+
   private def mhPrefixSlots(spark: SparkSession): Int =
     conf(spark, "graft.ngram.mhPrefixSlots")(_.toInt).getOrElse(0)
 
-  /** Whether the session's shuffle codec is already zstd — the escape
-    * the tier-0 ladder rung would otherwise keep recommending on every
-    * retry (r19 ADVICE: the codec is build-time-static, so a dispatcher
-    * applying the SetConf record at session rebuild got the identical
-    * advisory again and the retry-until-silent loop never converged). */
+  /** Whether the session's shuffle codec is already zstd. The codec is
+    * fixed when the session is built, so the tier-0 advisory rung must
+    * go silent once zstd is active, or a retry loop applying its
+    * SetConf record would get the same advisory forever. */
   private def zstdActive(spark: SparkSession): Boolean =
     spark.conf.get("spark.io.compression.codec", "lz4")
       .toLowerCase.contains("zstd")
 
   /** 3-word shingles (distinct) of the whitespace tokenization — native
-    * single-pass expression (see [[ShingleArray]]; the higher-order
-    * `transform(sequence, slice)` formulation re-splits the document per
-    * shingle and was the dominant cost of every shingle-based op). */
+    * single-pass expression (see [[ShingleArray]]). */
   def shingles(c: Column): Column = ShingleArray.shingles3(c)
 
-  /** Exact dedup under sorted-distinct-token-set normalization: every
-    * member of a duplicate group mapped to its canonical (min) doc_id.
-    * One shuffle on the 128-bit fingerprint. */
   /** Sorted-distinct-token-set md5 — the exact-dedup document identity,
     * shared by [[ddExact]], `TextAnalysis.taCurate` and
     * `Streams.dedupStream` so the three can never disagree on what
@@ -97,6 +77,9 @@ object Dedup {
     when(c.isNotNull, md5(concat_ws(" ",
       array_sort(array_distinct(split(trim(c), "\\s+")))).cast("binary")))
 
+  /** Exact dedup under sorted-distinct-token-set normalization: every
+    * member of a duplicate group mapped to its canonical (min) doc_id.
+    * One shuffle on the 128-bit fingerprint. */
   def ddExact(spark: SparkSession, dir: String): DataFrame = {
     val fp = docFingerprint(col("text"))
     val w = Window.partitionBy("fp")
@@ -109,56 +92,18 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** N-gram (3-shingle) Jaccard near-dup pairs at threshold t = 0.5,
-    * candidate generation by *prefix-filtered* shared-shingle equi-join
-    * (the AllPairs/PPJoin family):
-    *
-    *  1. per-shingle document frequency (df) in one groupBy; singleton
-    *     shingles (df = 1) can never witness a pair and are dropped, and
-    *     stop-shingles with df > `dfCap` are dropped outright — a shingle
-    *     shared by that many documents carries no near-dup signal and
-    *     would emit df² pair instances (the hot-key quadratic);
-    *  2. each document's surviving shingles are ordered rarest-first
-    *     (df asc, hash asc — a global total order) and only the first
-    *     m − ⌈n/2⌉ + 1 participate in the join (m = surviving count,
-    *     n = full shingle count). LOSSLESS for t = 0.5: J(A,B) ≥ t with
-    *     the length filter 2·min(na,nb) ≥ max(na,nb) forces an overlap
-    *     ≥ ⌈n/2⌉, and two sets with overlap ≥ α must share an element
-    *     within their first |x| − α + 1 elements of any common order;
-    *  3. candidate pairs (distinct, plus the length filter in the join)
-    *     are verified with an exact Jaccard over the *string* shingle
-    *     arrays — so a 64-bit hash collision in candidate generation can
-    *     only add a candidate, never corrupt the output.
-    *
-    * Rarest-first ordering concentrates the join on low-df keys, so the
-    * pair-instance stream shrinks superlinearly vs the naive self-join
-    * (the df² blowup lives in the hot shingles, which the prefix rarely
-    * touches and `dfCap` hard-bounds).
-    *
-    * `dfCap` scales with the corpus: by default 8·√N (N from the parquet
-    * footer — no extra scan), floored at 64. A shingle hotter than k·√N
-    * would emit ≥ k²·N pair instances on its own — super-linear in the
-    * corpus — while carrying no near-dup signal (corpus-wide boilerplate
-    * has df ~ N). The trade is the standard stop-shingle one: a pair
-    * whose shared shingles are ALL hotter than the cap is missed; any
-    * sub-cap shared shingle keeps it reachable, and verification is
-    * exact regardless. A constant cap either binds never (small corpora)
-    * or too late (at 100 TB a df-100k shingle still admits ~10¹⁰ pair
-    * instances).
-    *
-    * Blob corner (round 16, the third sibling of the embed maxCell and
-    * minhash maxBucket silent-loss class): a NEAR-verbatim blob of
-    * m > dfCap members gives every blob-shared shingle df ≈ m, so ALL
-    * of a blob pair's shared shingles are capped and the pair is
-    * missed — the dup-farm case, not boilerplate. Here the drop is
-    * structural to the stop-shingle design (df-capped shingles are
-    * EXPECTED on every real corpus, so a max(df) observation would
-    * always fire and carry no signal — unlike the other two caps where
-    * any crossing means a dropped bucket/split cell), so the guard is
-    * OPERATIONAL, same as §8.4.8e's: sequence `dd_exact` /
-    * `dd_minhash_lsh` first — the minhash bucket advisory fires on
-    * exactly these blobs — and run ngram on the residue
-    * (docs/SIZING.md, blob section). */
+  /** N-gram (3-shingle) Jaccard pairs at j ≥ 0.5 by prefix-filtered
+    * shingle equi-join (AllPairs/PPJoin): shingles with df = 1 or
+    * df > `dfCap` are dropped (no signal; df² instances); each doc's
+    * rarest-first m − ⌈n/2⌉ + 1 shingles join, which is lossless at 0.5
+    * (the length filter forces overlap ≥ ⌈n/2⌉, and such sets share an
+    * element in their first |x| − α + 1 of any common order); then
+    * [[exactVerify]] scores the string arrays, so a hash collision only
+    * adds a candidate. `dfCap` defaults to 8·√N, at least 64: a shingle
+    * over k·√N alone emits ≥ k²·N instances. A pair sharing only capped
+    * shingles is missed (a near-verbatim blob over the cap); capped
+    * shingles occur on every corpus, so run `dd_exact` /
+    * `dd_minhash_lsh` first and ngram on the residue (docs/SIZING.md). */
   def ddNgramJaccard(spark: SparkSession, dir: String, dfCap: Int = -1): DataFrame =
     // gate-friendly ordering lives HERE, in the registration-facing
     // form; composing operators (ddCluster) consume the unordered core
@@ -168,13 +113,11 @@ object Dedup {
   /** Unordered j ≥ 0.5 pair set — the composable core of
     * [[ddNgramJaccard]]. */
   def ddNgramJaccardPairs(spark: SparkSession, dir: String, dfCap: Int = -1): DataFrame = {
-    val base = ngramBase(spark, dir)
+    val base = shingleBase(spark, dir)
     val slots = mhPrefixSlots(spark)
-    // ONE driver-side footer read per construction, shared by the
-    // advisory (which needs nDocs on BOTH tiers — each has its own
-    // measured wall) and the dfCap default. Shared, not cached: the
-    // smoke mains overwrite their target/ corpora between factors, so a
-    // (dir, table) cache would hand back stale counts.
+    // one driver-side footer read, shared by the advisory and the dfCap
+    // default. Not cached per (dir, table): the smoke mains overwrite
+    // their corpora between factors, so a cache would go stale.
     val nDocs = graft.Tables.footerRowCount(spark, dir, "documents")
     ngramShuffleWarning(nDocs, slots, zstd = zstdActive(spark))
       .foreach(graft.Graft.advise(spark, _, log))
@@ -183,85 +126,20 @@ object Dedup {
       mhPrefixSlots = slots)
   }
 
-  /** Disk-bounded STAGED execution of [[ddNgramJaccard]] — same exact
-    * j ≥ 0.5 pair set, peak shuffle-disk bounded at ~1/shards of the
-    * single-query plan's.
-    *
-    * Why it exists (SURVEY §8.4.3g): a single-query near-dup plan holds
-    * ALL of its exchanges' shuffle files until the job ends — the
-    * df window (exchange by sh), the prefix window (exchange by
-    * doc_id), the pair self-join and the verify joins coexist on local
-    * disk. At 20M docs even the slim tier-0 survivor pass ENOSPCs a
-    * ~72 GB disk under zstd. On a real cluster the same arithmetic
-    * binds per NODE: shuffle disk, not CPU, is the wall.
-    *
-    * The staged mode breaks the pipeline at its three materialization
-    * points and hash-shards each stage, so (a) every Spark job's
-    * shuffle files are released before the next starts, and (b) each
-    * job sees ~1/shards of the stream:
-    *   1. `joinable` (df-filtered exploded stream) → parquet, sharded
-    *      by pmod(sh, shards) — df is per-`sh`, so the shard-local
-    *      window df is the global df;
-    *   2. `prefix` (rarest-first PPJoin prefix) → parquet, sharded by
-    *      pmod(doc_id, shards) — rrk is per-doc;
-    *   3. per sh-shard: the pair self-join restricted to that shard's
-    *      join keys, then the SAME two-tier [[exactVerify]] (with the
-    *      session's tier-0 setting) → parquet append. The union over
-    *      shards is the complete candidate set (sharding partitions
-    *      the join-KEY space); a pair with witness shingles in several
-    *      shards is verified more than once and emits identical rows —
-    *      the final distinct dedups. True pairs share many shingles,
-    *      but they are the tiny fraction of the stream, so the
-    *      duplicated verify volume is negligible next to the bound.
-    *
-    * The price is re-running the corpus scan + shingle pass once per
-    * stage-1/stage-3 shard (map-only, CPU-bound) — the standard
-    * disk-for-CPU trade when per-node spill is the binding constraint.
-    * `System.gc()` after each SHARD job (not each stage: stages 1-2
-    * would accumulate their k jobs' files) nudges the ContextCleaner to
-    * actually unlink the finished job's shuffle files (cleanup is
-    * weak-reference-driven; on a 48 GiB driver heap a collection may
-    * otherwise not happen between jobs) — so the per-job spill bound
-    * ~1/shards holds in EVERY stage.
-    *
-    * Shard count: an explicit `shards` argument wins, else the
-    * CORPUS-AWARE default ceil([[ngramSinglePlanSpillBytes]] / the
-    * per-node spill budget). The budget is DISK-AWARE: an explicit
-    * `graft.ngram.stageSpillBudgetBytes` conf wins, else 25% of the
-    * stage filesystem's probed free bytes, else the calibrated 18 GB
-    * fallback when the filesystem cannot say — see
-    * [[stageSpillBudget]]; the auto path fires one typed Observe
-    * record quoting probed-free vs chosen budget. Tiny corpora
-    * auto-size to k = 1 (pure staging, no sharding overhead).
-    *
-    * Eager (runs jobs and writes under `stageDir`), unlike every other
-    * operator here — the returned frame reads the materialized result.
-    * The invocation OWNS `stageDir` (stamped with a `_graft_stage`
-    * marker; a non-empty dir WITHOUT the marker is refused, not
-    * destroyed — a mistyped stageDir pointing at data must not be
-    * deleted). Each invocation writes under its own monotonic
-    * `run-NNNNNN/` subdirectory and reclaims only OLDER runs at entry,
-    * keeping the newest prior run intact — so with SEQUENTIAL use a
-    * returned frame stays valid through the next invocation on the
-    * same stageDir and is reclaimed at the one after (at most two runs
-    * coexist, bounding the retained footprint at one extra `pairs/`
-    * result). Concurrent invocations must still pass distinct dirs.
-    * The default (`graft.ngram.stageDir`) is safe for sequential use,
-    * which is what every registered-gate path does. On a cluster whose
-    * corpus lives on a different filesystem (hdfs/s3a) the
-    * driver-relative default stages through the LOCAL filesystem — a
-    * typed SetConf advisory fires naming the mismatch.
-    * After the pairs write lands, `joinable/` and `prefix/` are
-    * deleted eagerly (only `pairs/` backs the returned frame) — the
-    * mode exists because disk is the binding constraint, so ~2/3 of
-    * the staged footprint must not outlive its use. Each stage appends
-    * one typed Observe record (shards, rows, bytes, wall) to the
-    * session ledger via [[graft.Graft.advise]], so a staged run is
-    * auditable like everything else despite `.explain` on the returned
-    * frame showing only the final read.
-    * Registered as `dd_ngram_staged` against the SAME DuckDB oracle as
-    * `dd_ngram_jaccard`: the driver gate checks the staged mode's
-    * result hash-equals the single-query plan's. */
+  /** Disk-bounded STAGED [[ddNgramJaccard]]: the same pairs, with peak
+    * shuffle disk ~1/shards of the single plan's, which keeps every
+    * exchange's files until the job ends (SURVEY §8.4.3g). Stages
+    * `joinable` (sharded by sh: df is per-sh), `prefix` (by doc_id: rrk
+    * is per-doc) and `pairs` (by sh, the join key, so the shards' union
+    * is complete; the distinct drops repeats) each run as `shards`
+    * parquet-writing jobs; `System.gc()` after a job lets the
+    * ContextCleaner unlink its shuffle files. Shards: the argument,
+    * else ceil([[ngramSinglePlanSpillBytes]] / [[stageSpillBudget]]).
+    * Eager. A non-empty `stageDir` without the `_graft_stage` marker is
+    * refused, not destroyed; each call writes its own `run-NNNNNN/` and
+    * reclaims only older runs, so a returned frame survives the next
+    * sequential call. Each stage appends an Observe record, since
+    * `.explain` shows only the final read. */
   def ddNgramJaccardStaged(spark: SparkSession, dir: String,
       stageDir: String = "", shards: Int = -1, dfCap: Int = -1): DataFrame = {
     import org.apache.hadoop.fs.Path
@@ -280,9 +158,8 @@ object Dedup {
       val probed = probeStageFree(fs, stagePath)
       val (budget, source) = stageSpillBudget(confBudget, probed)
       val sized = ngramStageShards(spill, budget)
-      // one Observe record whenever the budget was CHOSEN rather
-      // than configured — the sizing decision must be auditable
-      // (an explicit conf is the user's own choice; stays silent)
+      // an Observe record whenever the budget was CHOSEN rather than
+      // configured; an explicit conf is the user's own choice
       if (confBudget.isEmpty)
         graft.Graft.advise(spark, graft.Advisory("dd_ngram_staged",
           knob = "graft.ngram.stageSpillBudgetBytes", cap = budget,
@@ -309,13 +186,10 @@ object Dedup {
     val RunName = "run-(\\d+)".r
     var prevRun = 0L // newest prior run id — kept live through this run
     if (fs.exists(stagePath)) {
-      // staged-owned = marked by a prior r19+ run, or shaped exactly
-      // like a pre-marker r18 residue — which always retained ALL
-      // THREE stage dirs (the old code deleted nothing), so the
-      // grandfather clause requires `joinable` present: a user's
-      // persisted COPY of results (typically `pairs/` alone) is
-      // refused, not destroyed. Anything with foreign entries is
-      // refused outright.
+      // staged-owned = marked, or shaped exactly like an unmarked
+      // staged residue, which always holds `joinable` — so a user's
+      // copy of results (typically `pairs/` alone) is refused, not
+      // destroyed, and anything with foreign entries is refused outright
       val entries = fs.listStatus(stagePath).map(_.getPath.getName)
         .filterNot(_ == "_graft_stage")
       val owned = fs.exists(marker) ||
@@ -328,11 +202,9 @@ object Dedup {
           "mistyped stageDir / graft.ngram.stageDir pointing at a data " +
           "directory must not be silently destroyed. Pass an empty or " +
           "staged-owned directory.")
-      // reclaim: pre-run-subdir residue (flat joinable/prefix/pairs,
-      // r18/r19 layout — its contract already invalidated the frame at
-      // the next invocation) goes now; among run-*/ subdirs only the
-      // NEWEST survives — it may back a live frame from the previous
-      // invocation (the r19 ADVICE foot-gun this layout removes)
+      // reclaim: flat joinable/prefix/pairs residue goes now; among
+      // run-*/ subdirs only the NEWEST survives — it may back a live
+      // frame from the previous invocation
       val runIds = entries.collect { case RunName(id) => id.toLong }
       prevRun = if (runIds.isEmpty) 0L else runIds.max
       entries.foreach {
@@ -343,21 +215,16 @@ object Dedup {
     val runStr = f"$stage/run-${prevRun + 1L}%06d"
     fs.mkdirs(new Path(runStr))
     if (!fs.exists(marker)) fs.create(marker).close()
-    val base = ngramBase(spark, dir)
+    val base = shingleBase(spark, dir)
     // schemas captured from the plans (no execution) so the staged
     // parquet reads never depend on inference — an all-empty stage
     // (degenerate corpus) writes only _SUCCESS, which schema-less
     // parquet reads reject
     val joinableSchema = ngramJoinable(ngramExploded(base), cap).schema
-    // the gc nudge exists to make the ContextCleaner release the
-    // finished job's shuffle files while DISK is the constraint; on a
-    // small corpus (gates, tests, benches) the whole single-plan spill
-    // is under a GB and a forced full collection is pure wall-clock —
-    // 2.2 s of the 5.25 s sf0.001 invocation, measured min-of-5
+    // the gc nudge only matters while DISK is the constraint; on a small
+    // corpus a forced full collection is pure wall-clock (2.2 s of a
+    // 5.25 s sf0.001 invocation)
     def afterJob(): Unit = if (nDocs >= 1000000L) System.gc()
-    // one typed Observe record per stage: the staged run's audit trail
-    // (the returned frame's .explain shows only the final read, so the
-    // ledger is where a 100 TB operator reads what the stages did)
     def stageRecord(name: String, wallMs: Long): Unit = {
       val p = new Path(runStr, name)
       val rows = graft.Tables.footerRowCountAtPath(spark, p.toString)
@@ -400,8 +267,7 @@ object Dedup {
       afterJob()
     })
     stageRecord("pairs", w3)
-    // only pairs/ backs the returned frame — drop the other two stages'
-    // footprint NOW, not at the next invocation
+    // only pairs/ backs the returned frame
     fs.delete(new Path(runStr, "joinable"), true)
     fs.delete(new Path(runStr, "prefix"), true)
     spark.read.schema(pairsSchema).parquet(s"$runStr/pairs")
@@ -410,12 +276,10 @@ object Dedup {
   }
 
   /** Predicted single-query-plan shuffle spill for the ngram near-dup
-    * operator — PURE, calibrated on the measured §8.4.3e-g ENOSPC
-    * ladder (per-doc spill at each wall; survivors, and with them
-    * spill, are measured exactly linear in the corpus):
-    * exact+lz4 78 GB/5M docs = 15.6 KB/doc, tier-0+lz4 78 GB/10M =
-    * 7.8 KB/doc, tier-0+zstd 72 GB/20M = 3.6 KB/doc, exact+zstd ~2/3
-    * of exact+lz4 (§8.4.3f's measured "~1/3 less under zstd"). */
+    * operator — PURE, calibrated on the measured ENOSPC walls of SURVEY
+    * §8.4.3e-g (spill is measured linear in the corpus): exact+lz4
+    * 15.6 KB/doc, tier-0+lz4 7.8 KB/doc, tier-0+zstd 3.6 KB/doc,
+    * exact+zstd ~2/3 of exact+lz4. */
   private[graft] def ngramSinglePlanSpillBytes(nDocs: Long,
       tier0: Boolean, zstd: Boolean): Long = {
     val perDoc = (tier0, zstd) match {
@@ -427,11 +291,9 @@ object Dedup {
     nDocs * perDoc
   }
 
-  /** Corpus-aware staged shard count (round 19, the mode's last
-    * un-sized knob): per-job spill is ~1/shards of the single plan's,
-    * so k = ceil(predicted spill / per-node budget) bounds each job
-    * under the budget; 1 for anything that fits outright. PURE —
-    * pinned in KnobsSpec at the three measured ladder points. */
+  /** Corpus-aware staged shard count: per-job spill is ~1/shards of the
+    * single plan's, so k = ceil(predicted spill / per-node budget)
+    * bounds each job under the budget; 1 for anything that fits. */
   private[graft] def ngramStageShards(spillBytes: Long,
       budgetBytes: Long): Int = {
     require(budgetBytes > 0, s"spill budget must be positive: $budgetBytes")
@@ -446,20 +308,11 @@ object Dedup {
   // as "the filesystem cannot say" rather than a usable measurement
   private[graft] val stageBudgetProbeCeilingBytes = 1000000000000000L
 
-  /** Per-node stage spill budget (round 20, r19 verdict #2: the 18 GB
-    * literal was calibrated to THIS box's 72 GB free and silently
-    * mis-sized k on any other node). PURE — pinned in KnobsSpec.
-    * Precedence: an explicit `graft.ngram.stageSpillBudgetBytes` conf
-    * wins; else 25% of the PROBED free bytes on the stage filesystem
-    * (conservative: the staged run shares the disk with the corpus,
-    * the other stages' parquet, and everything else on the node),
-    * floored at 1 GB so a nearly-full disk degrades to many small
-    * shards instead of a degenerate budget; else — probe unavailable
-    * (-1) or past the 1 PB sanity fence — the box-calibrated 18 GB
-    * fallback. Caveat the Observe advisory quotes: a remote-FS probe
-    * (hdfs getStatus) reports CLUSTER-wide remaining while the budget
-    * bounds PER-NODE spill — the conf override is the per-node escape.
-    * Returns (budget, source) with source ∈ {conf, probed, fallback}. */
+  /** Per-node stage spill budget → (budget, conf | probed | fallback):
+    * the conf; else 25% of the probed free bytes (the disk is shared),
+    * floored at 1 GB so a full disk means many small shards; else the
+    * 18 GB fallback. A remote-FS probe reports cluster-wide space while
+    * the budget bounds per-node spill; the conf is the per-node escape. */
   private[graft] def stageSpillBudget(confBytes: Option[Long],
       probedFreeBytes: Long): (Long, String) = confBytes match {
     case Some(b) =>
@@ -473,19 +326,11 @@ object Dedup {
     case None => (stageBudgetFallbackBytes, "fallback")
   }
 
-  /** Free bytes on the stage filesystem, probed at the deepest
-    * EXISTING ancestor of the stage path (the stage dir itself may not
-    * exist yet on a first run); -1 when the filesystem cannot say.
-    *
-    * Local filesystems probe via `File.getUsableSpace` (statvfs
-    * f_bavail — the bytes a write can actually consume), NOT Hadoop's
-    * `getStatus().getRemaining`, which maps to f_bfree and on
-    * reserved/thin-provisioned volumes reports free space that does
-    * not exist for writers. MEASURED the hard way on this box's first
-    * 40M-doc attempt: f_bfree said 227 GB where df's Avail (f_bavail)
-    * said 69 GB — the 3× over-report sized k = 3 instead of 8 and the
-    * run ENOSPCed mid-stage, the exact failure the budget exists to
-    * prevent (§8.4.3h, round 20). */
+  /** Free bytes at the deepest EXISTING ancestor of the stage path; -1
+    * when the filesystem cannot say. Local paths use `getUsableSpace`
+    * (f_bavail), not Hadoop's f_bfree-based `getRemaining`, which
+    * over-reported 227 GB against 69 GB usable and sized a 40M-doc run
+    * into running out of disk (SURVEY §8.4.3h). */
   private[graft] def probeStageFree(fs: org.apache.hadoop.fs.FileSystem,
       stagePath: org.apache.hadoop.fs.Path): Long =
     try {
@@ -497,14 +342,11 @@ object Dedup {
       else fs.getStatus(p).getRemaining
     } catch { case scala.util.control.NonFatal(_) => -1L }
 
-  /** Stage-filesystem hygiene advisory (round 19, r18 verdict #4) —
-    * PURE over the two qualified URIs: fires when the staged mode's
-    * stage dir resolves to a DIFFERENT filesystem than the corpus
-    * (scheme or authority differ). The default stageDir is
+  /** Stage-filesystem advisory, PURE over the two qualified URIs: fires
+    * when the stage dir resolves to a DIFFERENT filesystem than the
+    * corpus (scheme or authority differ). The default stageDir is
     * driver-relative; against an hdfs/s3a corpus that silently routes
-    * every staged byte through the driver's local disk. SetConf:
-    * point `graft.ngram.stageDir` at any writable path on the corpus
-    * filesystem (the target suggests a corpus-adjacent one). */
+    * every staged byte through the driver's local disk. */
   private[graft] def stageFsMismatchAdvisory(corpusUri: java.net.URI,
       stageUri: java.net.URI): Option[graft.Advisory] = {
     def fsId(u: java.net.URI): String =
@@ -537,40 +379,12 @@ object Dedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Dedup")
 
-  /** The measured disk-wall advisories, one per tier (the full ladder
-    * is SURVEY §8.4.3e/f — exact ngram ENOSPCs at 5M docs under lz4,
-    * tier-0's own 79%-slimmed shuffle one doubling later at 10M, and
-    * zstd rescues each at its scale). Each threshold sits just under
-    * its measured wall:
-    *
-    *  - `mhPrefixSlots == 0` from 4M docs (the wall is at 5M): the
-    *    exact tier-1 shuffle (candidate pairs carrying shingle hash
-    *    arrays) exceeded ~78 GB of per-box lz4 spill — the run dies
-    *    with ENOSPC, not slowly. Names the two measured escapes: tier-0
-    *    (identical pair set measured through 10M docs) or zstd.
-    *  - `mhPrefixSlots > 0` from 8M docs (the wall is at 10M): tier-0
-    *    itself hits the same box's disk at 2× the corpus; the remaining
-    *    escape is zstd (measured: 560.5 s at 10M docs, formula-exact
-    *    pair count).
-    *  - `mhPrefixSlots > 0` from 16M docs (the wall is at 20M): past
-    *    zstd's own wall even the slim survivor pass out-spills the box
-    *    — the single-query plan shape itself is the problem (all
-    *    exchanges' shuffle files coexist until job end), so the
-    *    record's action is SwitchOperator to `dd_ngram_staged`, the
-    *    ladder's last rung.
-    *
-    * Advisory only — the operator's output is unaffected. The record's
-    * `measured` is the corpus size and `cap` the warn threshold; the
-    * retry action rides the `action`/`target` fields: each
-    * rung is a SetConf of the next measured escape, except the last,
-    * which is a SwitchOperator — dispatchable with zero prose parsing
-    * (pinned in KnobsSpec's generic-dispatch test). Each rung goes
-    * SILENT once its escape is active: the exact rung once
-    * `mhPrefixSlots > 0`, the zstd rung once the session codec is
-    * already zstd — tier-0+zstd is MEASURED clean through just under
-    * 20M docs, so the band between 8M and 16M has nothing further to
-    * recommend and a retry-until-silent dispatcher converges on every
-    * rung. */
+  /** The disk-wall advisories (SURVEY §8.4.3e-g), each just under its
+    * measured wall: exact ngram from 4M docs (→ tier-0 or zstd), tier-0
+    * from 8M (→ zstd), tier-0 from 16M (→ SwitchOperator to
+    * `dd_ngram_staged`). `measured` is the corpus size, `cap` the
+    * threshold. Each rung goes silent once its escape is active, so a
+    * retry-until-silent dispatcher converges. */
   private[graft] def ngramShuffleWarning(nDocs: Long, mhPrefixSlots: Int,
       zstd: Boolean = false): Option[graft.Advisory] = {
     val (warnDocs, tier0WarnDocs, stagedWarnDocs) =
@@ -622,66 +436,52 @@ object Dedup {
   private[graft] def dfCapFor(nDocs: Long): Int =
     math.max(64L, 8L * math.round(math.sqrt(nDocs.toDouble))).toInt
 
-  /** The ngram candidate pairs BEFORE exact verification — factored out
-    * (like [[minhashCandidates]]) so the scale smoke can measure
-    * candidate growth against wall-clock growth. */
+  /** The ngram candidate pairs BEFORE exact verification, so the scale
+    * smoke can measure candidate growth against wall-clock growth. */
   private[graft] def ngramCandidates(spark: SparkSession, dir: String,
       dfCap: Int = -1): DataFrame =
-    ngramCandidatesFrom(ngramBase(spark, dir), resolveCap(spark, dir, dfCap))
+    ngramCandidatesFrom(shingleBase(spark, dir), resolveCap(spark, dir, dfCap))
 
-  /** Candidates surviving the tier-0 MinHash-prefix filter — factored
-    * out (like [[ngramCandidates]]) so ScaleSmoke can measure the
-    * tier-0 discard ratio directly: survivors/candidates is the factor
-    * by which the filter slims the array-carrying tier-1 shuffle. */
+  /** Candidates surviving the tier-0 MinHash-prefix filter, so ScaleSmoke
+    * can measure the tier-0 discard ratio: survivors/candidates is the
+    * factor by which the filter slims the array-carrying tier-1
+    * shuffle. */
   private[graft] def ngramTier0Survivors(spark: SparkSession, dir: String,
       slots: Int = 16): DataFrame = {
-    val base = ngramBase(spark, dir)
+    val base = shingleBase(spark, dir)
     mhPrefixFilter(ngramCandidatesFrom(base, resolveCap(spark, dir, -1)),
       base, slots)
   }
 
-  private def ngramBase(spark: SparkSession, dir: String): DataFrame = {
-    // ONE corpus pass for the whole operator: scan + ShingleArray,
-    // exchanged once on doc_id. The exploded candidate stream below and
-    // all four verify branches inside exactVerify read this exchange
-    // back (identical subtrees → ReusedExchange), so the expensive
-    // shingle pass never re-executes. Two details make that true:
-    // the explicit isNotNull(doc_id) matches the filter the verify
-    // joins would infer on their side (a single differing conjunct
-    // breaks subtree identity and silently disables the reuse) and
-    // sits on a SCANNED column, so it pushes into the parquet scan for
-    // free; and the coalesce makes `shs` NON-NULLABLE (shingles3 is
-    // null only for null text, where the explode dropped the doc
-    // anyway — an empty array behaves identically), so no consumer can
-    // infer isnotnull(shs) and push the whole ShingleArray expression
-    // into the scan as a second-evaluation data filter.
+  /** (doc_id, shs): the one corpus pass of the ngram and minhash
+    * operators, exchanged once on doc_id; candidates and all verify
+    * branches read it back as ReusedExchange. The isNotNull(doc_id)
+    * matches the filter the verify joins infer, keeping the subtrees
+    * identical; the coalesce makes `shs` non-nullable (an empty array
+    * acts like null text), so no inferred isnotnull(shs) pushes the
+    * shingle pass into the scan a second time. */
+  private def shingleBase(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .where(col("doc_id").isNotNull)
       .select(col("doc_id"),
         coalesce(shingles(col("text")), typedLit(Seq.empty[String])).as("shs"))
       .repartition(col("doc_id"))
-  }
 
   private def ngramCandidatesFrom(base: DataFrame, cap: Int): DataFrame =
     ngramPairJoin(ngramPrefix(ngramJoinable(ngramExploded(base), cap)))
 
   /** The exploded per-shingle stream (doc_id, n, sh) — stage 0 of the
-    * candidate pipeline. Factored out (with the three stages below) so
-    * [[ddNgramJaccardStaged]] can materialize and hash-shard the exact
-    * same plan pieces; composed back in [[ngramCandidatesFrom]] they
-    * produce the identical single-query plan (PlanSpec's reuse pins). */
+    * candidate pipeline. It and the three stages below are separate so
+    * [[ddNgramJaccardStaged]] can materialize and hash-shard the same
+    * plan pieces; composed in [[ngramCandidatesFrom]] they give the
+    * single-query plan. */
   private def ngramExploded(base: DataFrame): DataFrame = {
     val docs = base.withColumn("n", size(col("shs")))
-    // 64-bit shingle hashes as join keys: fixed-width keys halve the
-    // shuffle vs strings (measured 2.3×); safe because of step 3.
-    // explode_OUTER, deliberately: a plain explode infers a
-    // size(shs) > 0 constraint that pushes the whole coalesce(shingles)
-    // expression into the scan as a data filter — re-evaluating the
-    // shingle pass AND breaking subtree identity with the verify
-    // branches (2 scans again). shs is empty only for null-text docs;
-    // their single null-shingle row hashes to xxhash64's seed, can
-    // only pair null-text docs with each other, and the exact verify
-    // (empty arrays → null jaccard) drops any such pair.
+    // 64-bit shingle hashes: half the shuffle of strings; the verify is
+    // exact. explode_OUTER: a plain explode infers size(shs) > 0 and
+    // pushes the shingle pass into the scan as a filter. shs is empty
+    // only for null text, whose null-shingle row can only pair null-text
+    // docs, which the exact verify drops.
     docs.select(col("doc_id"), col("n"),
         explode_outer(col("shs")).as("shStr"))
       .select(col("doc_id"), col("n"), xxhash64(col("shStr")).as("sh"))
@@ -692,34 +492,15 @@ object Dedup {
     * so the per-shard window df equals the global df. */
   private def ngramJoinable(s: DataFrame, cap: Int): DataFrame =
     // df via a window over the shingle key, not a groupBy + join-back:
-    // the exploded shingle stream (ShingleArray + explode + xxhash64)
-    // is the expensive pass at scale, and the agg+join shape traverses
-    // it twice (once per branch); the window computes df on the single
-    // exchange the stream needs anyway (~15 s saved of a 42 s run at
-    // 40× sf0.1). A df-195k hot key lands in one window partition, but
-    // counting 195k rows in one task is noise next to the join it would
-    // otherwise explode into — and the cap then drops it.
+    // the agg+join shape traverses the expensive exploded stream twice,
+    // the window computes df on the one exchange the stream needs anyway
     s.withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
       .where(col("df").between(2, cap))
 
-  /** Rarest-first PPJoin prefix (sh, doc_id, n, rrk). Shards cleanly
-    * by doc_id — rrk is a per-doc rank over the doc's own joinable
-    * shingles, so a doc-sharded window computes the same values.
-    *
-    * ONE window function, not two (round 22): the original formulation
-    * carried the forward rarest-first rank rk (row_number asc) AND the
-    * per-doc joinable count m (a second, whole-partition-buffering
-    * window pass) only to use them as the suffix length m − rk. The
-    * REVERSE rank rrk = row_number over (df desc, sh desc) = m − rk + 1
-    * expresses both the prefix cut and the join's positional bound
-    * directly: rk ≤ m − ⌈n/2⌉ + 1 ⇔ rrk ≥ ⌈n/2⌉, and
-    * 1 + min(m − rk) = min(rrk). Same total order (ties only on 64-bit
-    * hash collisions, identical to the old orderBy), so the kept set is
-    * identical — and the exact verify makes even a collision-tie
-    * reshuffle output-invariant. The plan loses one Window node per
-    * join side (the count pass buffered every partition) and the prefix
-    * row narrows by the dropped m column through the pair-join
-    * exchange and the staged prefix parquet. */
+  /** Rarest-first PPJoin prefix (sh, doc_id, n, rrk), per-doc so it
+    * shards by doc_id. rrk, the REVERSE rank m − rk + 1, gives both the
+    * prefix cut (rrk ≥ ⌈n/2⌉) and the positional bound (min(rrk))
+    * without a second window for m. */
   private def ngramPrefix(joinable: DataFrame): DataFrame = {
     val byDoc = Window.partitionBy("doc_id")
     joinable
@@ -729,54 +510,49 @@ object Dedup {
       .select("sh", "doc_id", "n", "rrk")
   }
 
-  /** The prefix self-join → distinct candidate pairs. Shards cleanly by
-    * shingle hash: the join key is `sh`, so restricting both sides to
-    * one hash shard yields exactly the candidates whose WITNESS shingle
-    * falls in that shard — the union over shards is the full candidate
-    * set (a pair with witnesses in several shards repeats; the final
-    * distinct dedups). */
+  /** The prefix self-join → distinct candidate pairs. The join key is
+    * `sh`, so one sh-shard of the prefix yields exactly the pairs with a
+    * witness shingle in that shard. */
   private def ngramPairJoin(prefix: DataFrame): DataFrame =
-    // PPJoin positional filter: a common shingle at ranks (rk_a, rk_b)
-    // bounds the overlap by 1 + min(remaining suffix on either side);
-    // pairs whose common prefix shingles all sit too late can never
-    // reach the required overlap ⌈(na+nb)/3⌉. Lossless: for a true pair
-    // the first common element always satisfies the bound.
-    // (callers run these candidates through exactVerify — tier 1 scores
-    // on pre-sorted hash arrays with the codegen'd SortedOverlap merge
-    // scan, tier 2 recomputes Jaccard on the exact string arrays, so a
-    // 64-bit collision can only ADD a candidate, never corrupt output)
-    prefix.alias("a").join(prefix.alias("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id") &&
-        least(col("a.n"), col("b.n")) * 2 >= greatest(col("a.n"), col("b.n")) &&
-        // 1 + min(suffix) with the reverse rank: m − rk + 1 = rrk
+    keySelfJoin(prefix, "sh", Seq(
+        // length filter: J ≥ 0.5 needs 2·min(na, nb) ≥ max(na, nb)
+        least(col("a.n"), col("b.n")) * 2 >= greatest(col("a.n"), col("b.n")),
+        // PPJoin positional filter: a common shingle bounds the overlap
+        // by 1 + min(remaining suffix) = min(rrk); a pair whose common
+        // prefix shingles all sit too late can never reach the required
+        // overlap ⌈(na+nb)/3⌉. Lossless: for a true pair the first
+        // common element always satisfies the bound.
         least(col("a.rrk"), col("b.rrk")) >=
-          ceil((col("a.n") + col("b.n")) / lit(3.0)))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+          ceil((col("a.n") + col("b.n")) / lit(3.0))))
       .distinct()
 
+  /** The candidate self-join of every banded generator: over a keyed
+    * frame (doc_id, `key`, …), one row per shared key with
+    * `a.key = b.key && a.doc_id < b.doc_id` and each `extra` predicate
+    * (on aliases `a`/`b`), projected to (doc_a, doc_b, `out`…). */
+  private def keySelfJoin(keyed: DataFrame, key: String,
+      extra: Seq[Column] = Nil, out: Seq[Column] = Nil): DataFrame = {
+    val on = col(s"a.$key") === col(s"b.$key") && col("a.doc_id") < col("b.doc_id")
+    keyed.alias("a").join(keyed.alias("b"), extra.foldLeft(on)(_ && _))
+      .select(Seq(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")) ++ out: _*)
+  }
+
+  /** One `long` per (band j, key): key + j·2^shift, exploded to a row
+    * per band. Callers keep keys below 2^shift, so this is a bijection
+    * and the band join hashes one column, not two. */
+  private def bandKeys(keys: Seq[Column], shift: Int): Column =
+    explode(array(keys.zipWithIndex.map {
+      case (k, j) => k + lit(j.toLong << shift)
+    }: _*))
+
   /** Two-tier exact verification of candidate pairs — SHARED by every
-    * near-dup path (ngram prefix join, MinHash LSH, the streaming
-    * variant), so a threshold or rounding tweak can never diverge
-    * between them. Tier 1 scores every candidate with a codegen'd
-    * merge scan over pre-sorted 64-bit hash arrays (collisions only ADD
-    * candidates); tier 2 recomputes Jaccard on the exact string arrays
-    * for the survivors. Output: (doc_a, doc_b, jaccard) at j ≥ 0.5,
-    * collision-proof, unordered.
-    *
-    * Shape note: the four doc-side join branches below (hash arrays as
-    * doc_a/doc_b, string arrays as doc_a/doc_b) all hang off ONE
-    * explicit exchange of (doc_id, shs) on doc_id — identical subtrees,
-    * so the corpus scan + ShingleArray pass executes once and the other
-    * three branches are ReusedExchange reads (the same pattern as the
-    * band-window reuse in [[minhashCandidates]]). Without it Spark
-    * re-reads and re-shingles the corpus once per branch: four extra
-    * full passes at 100 TB for a verify whose probe side (the candidate
-    * set) is tiny. Callers that derive their CANDIDATE stream from the
-    * same arrays pass an already-`repartition(doc_id)`'d frame — the
-    * identity projection and double repartition collapse in the
-    * optimizer (RemoveNoopOperators + CollapseRepartition), leaving one
-    * exchange that candidate generation and verify share: the whole
-    * operator then reads the corpus exactly once (pinned in PlanSpec).
+    * Jaccard path (ngram, MinHash LSH, streaming). Tier 1 scores sorted
+    * 64-bit hash arrays; tier 2 recomputes survivors on the string
+    * arrays, so collisions cannot corrupt the output (doc_a, doc_b,
+    * jaccard), j ≥ 0.5, unordered. The four doc-side branches
+    * hang off ONE exchange of (doc_id, shs), so three are ReusedExchange
+    * reads; a caller passing an already-`repartition(doc_id)`'d frame
+    * shares that exchange with its candidates (pinned in PlanSpec).
     *
     * @param cand candidate pairs (doc_a, doc_b)
     * @param docs (doc_id, shs) — each doc's distinct shingle array
@@ -816,34 +592,15 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** Tier-0 MinHash-prefix candidate filter (OFF by default — see the
-    * `graft.ngram.mhPrefixSlots` knob).
-    *
-    * Motivation (SURVEY §8.4.7): at 500× the ngram verify's dominant
-    * shuffle is tier 1's doc_b join, where every one of ~53M candidate
-    * pairs carries doc_a's FULL sorted hash array (~5 KB for a
-    * 600-shingle doc) through the exchange. A `slots`-slot MinHash
-    * prefix is `8·slots` bytes — at 16 slots, ~37× slimmer — and
-    * P(slot match) = J(a, b) exactly (the MinHash property), so
-    * requiring ≥ 2 of `slots` matching slots discards the
-    * low-Jaccard bulk of the candidate stream BEFORE any full array
-    * rides a shuffle; only survivors reach the two exact tiers.
-    *
-    * The filter is probabilistic, which is why the ngram operator keeps
-    * it off by default: with (16, 2) a boundary pair at exactly j = 0.5
-    * survives with p = 1 − BinomCDF(1; 16, 0.5) ≈ 0.99974, and the miss
-    * probability decays geometrically above the boundary (j = 0.7 →
-    * ~2·10⁻⁸); a j = 0.02 pair — the typical PPJoin false candidate,
-    * sharing one rare shingle of hundreds — survives with only ~5%.
-    * Fixed hash seeds ([[MinHashRow]]) make the outcome deterministic
-    * per corpus. The prefix frame hangs off the SAME doc_id exchange as
-    * every other verify branch (ReusedExchange — no extra corpus pass),
-    * and the doc-side cost is 16 of the 32 slot mins [[MinHashRow]]
-    * already computes map-only for the LSH family.
-    *
-    * NOT applied to the MinHash-LSH path: its candidates collide on a
-    * 2-slot band by construction, so a ≥ 2-match requirement is already
-    * implied and the extra joins would be pure overhead. */
+  /** Tier-0 MinHash-prefix candidate filter (`graft.ngram.mhPrefixSlots`,
+    * off by default). Tier 1's doc_b join carries doc_a's full hash
+    * array (~5 KB) per candidate; a `slots`-slot prefix is `8·slots`
+    * bytes and P(slot match) = J(a, b), so requiring ≥ 2 matching slots
+    * drops the low-Jaccard bulk before any array is shuffled. It is
+    * probabilistic: at (16, 2) a j = 0.5 pair survives with p ≈ 0.99974
+    * (j = 0.7 misses with ~2·10⁻⁸), a j = 0.02 pair with ~5%; fixed
+    * seeds make it deterministic per corpus. Not applied to MinHash-LSH,
+    * whose candidates already share a 2-slot band. */
   private[graft] def mhPrefixFilter(cand: DataFrame, base: DataFrame,
       slots: Int): DataFrame = {
     val pf = base.select(col("doc_id"),
@@ -856,174 +613,77 @@ object Dedup {
       .select("doc_a", "doc_b")
   }
 
+  /** LSH bands of the 32-slot minhash signature, 2 slots each. */
+  private val lshBands = 16
+
   /** The 16×2 LSH band hashes of a 32-slot minhash signature — shared
     * between the batch LSH and the streaming variant so their candidate
     * spaces are identical by construction. */
-  private[graft] def bandHashCols(sig: Column, bandsOf: Int = 16): Seq[Column] =
-    (0 until bandsOf).map(j =>
+  private[graft] def bandHashCols(sig: Column): Seq[Column] =
+    (0 until lshBands).map(j =>
       hash(element_at(sig, 2 * j + 1), element_at(sig, 2 * j + 2)))
 
-  /** MinHash + LSH near-dup detection. Candidates are approximate
-    * (banded minhash collisions) but every candidate is verified with
-    * the exact Jaccard — so precision is always 1 and the output equals
-    * the exact j ≥ 0.5 pair set whenever banding recall is total. At
-    * 16 bands × 2 rows a pair at the j = 0.5 boundary is missed with
-    * probability ≤ (1−0.5²)¹⁶ ≈ 1%, and the murmur3 seeds are fixed, so
-    * on a given corpus the output is deterministic; the DuckDB oracle
-    * is therefore the exact-Jaccard SQL (the ScalaTest spec asserts the
-    * same lsh == exact equality at sf0.001).
-    *
-    * 32 minhashes (murmur3 with 32 seeds) banded 16×2; candidates from
-    * band-hash equi-join; exact Jaccard verification on candidates only.
-    *
-    * Shape note: the signature is a single per-row expression pass
-    * over each document's shingle array ([[MinHashRow]] — bit-identical
-    * to the [[MinHashAgg]] sketch, pinned by ExpressionParitySpec), so
-    * the signature stage is map-only: no explode, no shuffle, no
-    * aggregation hash map. The first shuffle in the whole operator is
-    * the band-key exchange that the candidate self-join then reuses.
-    * (Not nested higher-order lambdas: `transform(.., array_min(
-    * transform(..)))` stays interpreted and gets duplicated per band
-    * reference by CollapseProject, which made this operator ~40×
-    * slower. [[MinHashAgg]] remains the distributed-aggregate form for
-    * when shingles arrive as rows, e.g. SQL `minhash32(sh) GROUP BY`.) */
+  /** MinHash + LSH near-dup: banded candidates, exact verify, so the
+    * output is the exact j ≥ 0.5 pair set whenever banding recall is
+    * total (a j = 0.5 pair is missed with p ≤ (1−0.5²)¹⁶ ≈ 1%; seeds are
+    * fixed, so the oracle is the exact SQL). The signature is one map-only
+    * per-row expression ([[MinHashRow]], bit-identical to
+    * [[MinHashAgg]]); nested higher-order lambdas would stay
+    * interpreted and be duplicated per band (~40× slower). */
   def ddMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    // ONE corpus pass: the signature/band stream and all four verify
-    // branches read the same doc_id exchange back (ReusedExchange), so
-    // the scan + ShingleArray pass executes exactly once
-    // same base shape as ddNgramJaccardPairs (see the note there for
-    // why the filter and the non-nullable coalesce are load-bearing)
-    val base = t(spark, dir, "documents")
-      .where(col("doc_id").isNotNull)
-      .select(col("doc_id"),
-        coalesce(shingles(col("text")), typedLit(Seq.empty[String])).as("shs"))
-      .repartition(col("doc_id"))
-    // the measured band-bucket advisory (round 16): warn post-run
-    // when any bucket measurably crossed the cap — the near-verbatim-
-    // blob silent-loss case the scaladoc below can only describe
+    val base = shingleBase(spark, dir)
     ensureCapAdvisoryListener(spark)
-    // driver-side footer count, stamped into the observation name so
-    // the pruned-observation advisory can quote the corpus size (the
-    // benign-vs-degenerate dial; one footer read, no scan)
+    // footer count for the observation name (see observeCapMetrics)
     val nDocs = graft.Tables.footerRowCount(spark, dir, "documents")
-    // shared two-tier exact verification (see exactVerify)
     exactVerify(minhashCandidates(base, nDocs = nDocs), base)
       .orderBy("doc_a", "doc_b")
   }
 
-  /** The LSH candidate pairs BEFORE exact verification — factored out
-    * so the scale smoke can measure candidate growth against wall-clock
-    * growth (the verify cost is candidate-proportional by design).
-    *
-    * Hot-bucket cap (the band-join analogue of the ngram dfCap): a
-    * band bucket with m members emits m(m−1)/2 candidate instances, so
-    * a DEGENERATE band hash — e.g. a corpus-wide boilerplate suffix
-    * capturing both minhash slots of a band — turns the join quadratic.
-    * Measured at 20× sf0.1: 4 buckets over 256 members carried 6.9M of
-    * the 7.4M candidate instances while all 5120 true pairs kept
-    * colliding in healthy content bands. Buckets larger than
-    * `maxBucket` therefore emit nothing; total candidates are bounded
-    * by 8·maxBucket·N — linear in the corpus. A true j ≥ 0.5 pair
-    * collides in 4 of 16 bands in expectation, so losing a degenerate
-    * band leaves recall intact (the lsh == exact spec and the DuckDB
-    * oracle pin this at the gate SFs, where no bucket nears the cap);
-    * run dd_exact first so giant IDENTICAL-doc clusters never reach
-    * the near-dup pass. The residual risk is a
-    * NEAR-verbatim blob larger than the cap — dd_exact does not
-    * collapse it, its members share most minhash slots, so it crosses
-    * in ALL its bands at once and its pairs silently lose candidacy.
-    * The [[observeCapMetrics]] observation on the pre-filter stream +
-    * [[minhashBucketAdvisory]] make that measurable at runtime
-    * (max bucket vs cap — fires exactly when a bucket is dropped),
-    * pinned in KnobsSpec on a near-verbatim blob where the drop is
-    * demonstrated against the found-at-default control. The cap is a
-    * deterministic function of the corpus, so the operator stays
-    * oracle-checkable. Default mirrors the streaming variant's
-    * per-bucket member cap. */
+  /** The LSH candidate pairs BEFORE exact verification (ScaleSmoke and
+    * perfbench count them). A bucket of m members emits m(m−1)/2
+    * instances, so a degenerate band hash (boilerplate filling both
+    * slots) makes the join quadratic; buckets over `maxBucket` emit
+    * nothing, bounding candidates by 8·maxBucket·N. A true pair collides
+    * in ~4 of 16 bands, so a lost band keeps recall — except for a
+    * near-verbatim blob larger than the cap, which crosses in ALL its
+    * bands; the [[observeCapMetrics]] observation and
+    * [[minhashBucketAdvisory]] report that at runtime. */
   private[graft] def minhashCandidates(docs: DataFrame,
       maxBucket: Int = -1, nDocs: Long = -1L): DataFrame = {
     val cap =
       if (maxBucket > 0) maxBucket
-      else conf(docs.sparkSession, "graft.minhash.maxBucket")(_.toInt)
+      else capConf(docs.sparkSession, "graft.minhash.maxBucket")(_.toInt)
         .getOrElse(1024)
     // per-row sketch over the doc's own shingle array: map-only, the
     // same 32-slot signature the streaming variant projects
     val sigs = docs.select(col("doc_id"),
       MinHashRow.minhash32_row(col("shs")).as("sig"))
-    // the band index is BAKED into the hash's high bits (the simhash
-    // band-key treatment): hash() is a 32-bit murmur3, band_idx < 16,
-    // so idx·2³² + hash is a bijection of (band_idx, band_hash) — the
-    // window partitioning and self-join below run on ONE long instead
-    // of two ints (one hash, narrower exchange row; A/B'd). The
-    // STREAMING variant keeps explicit (band_idx, band_hash) state
-    // keys from the same bandHashCols — output-pair parity is what the
-    // specs pin, not internal key encoding.
     val bands = sigs.select(col("doc_id"),
-        explode(array(bandHashCols(col("sig")).zipWithIndex.map {
-          case (h, j) => h.cast("long") + lit(j.toLong << 32)
-        }: _*)).as("band_key"))
-    // window count (not a separate agg + semi-join): one exchange on
-    // the band key that the self-join below then reuses for both sides
+      bandKeys(bandHashCols(col("sig")).map(_.cast("long")), 32).as("band_key"))
+    // a window count, not agg + semi-join: one band-key exchange that
+    // both self-join sides reuse
     val kept = bands
       .withColumn("bucket_m", count(lit(1)).over(
         Window.partitionBy("band_key")))
-      // measured-bucket observation BEFORE the drop filter: every row
-      // carries its bucket's member count, so max(bucket_m) vs cap is
-      // free and the listener advisory fires on the measured quantity
-      // (max-only metrics — the window re-runs on both self-join
-      // sides above the reused band exchange)
+      // observed BEFORE the drop filter, so max(bucket_m) is measured
       .transform(observeCapMetrics(_, bucketMetricsPrefix,
         col("bucket_m"), cap, nDocs))
       .where(col("bucket_m") <= cap)
       .drop("bucket_m")
-    kept.alias("a").join(kept.alias("b"),
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    keySelfJoin(kept, "band_key").distinct()
   }
 
-  /** SimHash near-dup: frequency-weighted 64-bit simhash over token
-    * xxhash64 values; candidates by 4×16-bit chunk equi-join; verified
-    * by Hamming distance. Rows-only driver check (hash-dependent).
-    *
-    * Shape note: bit-majority is computed by exploding tokens and taking
-    * 64 `sum(±1)` aggregates in one codegen'd groupBy (bit b of the
-    * simhash is set iff more than half the token hashes have bit b set,
-    * i.e. iff the signed sum is > 0) — not by a 64-step interpreted
-    * `aggregate(sequence(0,63), filter(...))` pass per document.
-    *
-    * Band construction is CORPUS-SIZE-SWITCHED (both shapes from the
-    * general Manku/Jain/Sarma WWW'07 block design in [[simhashBands]]):
-    *
-    *  - N ≤ 10⁷ ([[simhashWideBands]]): 4 tables keyed by one 16-bit
-    *    chunk. Pigeonhole-complete for Hamming ≤ 3 (6 differing bits
-    *    can touch all 4 chunks, so recall at the d ≤ 6 cut is partial —
-    *    measured 0.93/0.92 vs exact Jaccard at the gate SFs, pinned in
-    *    FunctionsSpec). Expected bucket size N/2¹⁶ → candidate
-    *    instances ~N²/2¹⁵: fine to ~10⁷ docs, inherently quadratic
-    *    past that.
-    *  - N > 10⁷: 8 blocks of 8 bits keyed on 4-block combinations —
-    *    C(8,4) = 70 tables of 32-bit keys.
-    *    Pigeonhole-complete for Hamming ≤ 4 (≤ 4 differing bits touch
-    *    ≤ 4 blocks, leaving a 4-subset intact — a STRONGER guarantee
-    *    than the small plan's d ≤ 3); expected bucket size N/2³² keeps
-    *    the self-join linear to ~10¹⁰ docs. The 70-way band fan-out is
-    *    a map-side, linear cost — the price of removing the quadratic
-    *    candidate term. Measured at the gate SFs: recall vs exact
-    *    Jaccard 0.93/0.96 (≥ the 0.92 floor on both constructions,
-    *    pinned in FunctionsSpec) with ~6× fewer candidates than the
-    *    chunk join even at 5k docs; the candidate gap widens as N²/2¹⁵
-    *    vs N·70/2³²·N. Outputs differ only in which d ∈ [4,6] pairs the
-    *    bands surface (each construction finds some the other misses),
-    *    which is why the switch — not the wide design alone — keeps the
-    *    small-corpus output byte-stable. Sharding by a coarse content
-    *    key (lang, source) stacks with either shape.
-    *
-    * The Hamming ≤ 6 cut is re-verified exactly on every candidate in
-    * both shapes, so the switch affects recall only, never precision.
-    * The minhash operator remains the default near-dup path at 100 TB;
-    * simhash is the cheap high-precision screen. */
+  /** SimHash near-dup: 64-bit simhash over token xxhash64 values,
+    * candidates by band-table equi-join, verified by Hamming distance
+    * ≤ 6. Rows-only driver check (hash-dependent). The bands
+    * ([[simhashBands]]) switch with corpus size: up to 10⁷ docs, 4
+    * tables of one 16-bit chunk (complete for d ≤ 3; recall ≥ 0.92 vs
+    * exact Jaccard, FunctionsSpec); above, C(8,4) = 70 tables of four
+    * 8-bit blocks (complete for d ≤ 4), whose N/2³² buckets keep the
+    * join linear where the chunk join's ~N²/2¹⁵ is not. The two surface
+    * different d ∈ [4,6] pairs, so the switch keeps small-corpus output
+    * stable. The cut is exact either way: recall changes, precision
+    * does not. */
   def ddSimhash(spark: SparkSession, dir: String): DataFrame =
     ddSimhash(spark, dir, wideBands =
       simhashWideBands(graft.Tables.footerRowCount(spark, dir, "documents")))
@@ -1036,30 +696,15 @@ object Dedup {
 
   private[graft] def ddSimhash(spark: SparkSession, dir: String,
       wideBands: Boolean): DataFrame = {
-    // Wide-construction certificate (pigeonhole, driver-observable): an
-    // instance can only be emitted by the (8, 4) tables if some 4-subset
-    // of its 8-bit blocks is intact, i.e. ≥ 4 blocks of sig_xor are
-    // zero. A regression that silently swaps the scale path back to the
-    // (16, 1) chunk tables emits d ∈ [5,6] instances whose bits spread
-    // over 6 blocks (one 16-bit chunk intact = only 2 intact 8-bit
-    // blocks), so the assert turns that plan swap into a driver-visible
-    // crash of the rows-only row rather than an unnoticed recall change.
-    // Evaluated per pair INSTANCE, map-side, BEFORE the distinct: the
-    // invariant holds instance-wise (the emitting table's 4-block subset
-    // is intact by construction), the checked bits are already in
-    // sig_xor's registers, and the dedup shuffle stays at the original
-    // 3 columns — carrying sig_xor through the distinct instead measured
-    // +0.3 s on the sf0.1 bench for zero extra guarantee.
-    // SWAR zero-byte count over the low 7 bytes in 6 bitwise ops + one
-    // bit_count (vs the previous 8-way shift/mask/compare reduce, ~4×
-    // the codegen ops on the hot pair-instance stream): for byte b,
-    // (b & 0x7F) + 0x7F carries into bit 7 iff the low 7 bits are
-    // non-zero, OR b covers bit 7 itself, so after the OR bit 7 is set
-    // iff b ≠ 0 — invert and mask the marker bits. Per-byte sums are
-    // ≤ 0xFE with a zeroed top byte, so no cross-byte carries and no
-    // ANSI overflow. The top byte can't join the trick (its marker
-    // would need bit 63 arithmetic that overflows under ANSI) — one
-    // explicit compare covers it.
+    // Wide-construction certificate (pigeonhole): the (8, 4) tables
+    // emit an instance only if ≥ 4 of its 8-bit blocks of sig_xor are
+    // zero; a plan swapped back to the chunk tables emits d ∈ [5,6]
+    // instances with 2, so the assert makes that a driver-visible crash.
+    // Checked per instance before the distinct, which stays 3 columns.
+    // SWAR zero-byte count over the low 7 bytes: (b & 0x7F) + 0x7F sets
+    // bit 7 iff the low 7 bits are non-zero, OR b adds bit 7 itself;
+    // sums ≤ 0xFE never carry across bytes or overflow under ANSI. The
+    // top byte would need bit-63 arithmetic, so it is compared apart.
     val low7 = lit(0x007f7f7f7f7f7f7fL)
     val intactBlocks = bit_count(bitwise_not(
         (col("sig_xor").bitwiseAND(low7) + low7)
@@ -1073,18 +718,15 @@ object Dedup {
             intactBlocks, lit(" intact blocks for pair ("),
             col("doc_a"), lit(","), col("doc_b"), lit(")"))),
         col("hamming"))
-    simhashJoin(simhashScaledBands(simhashDocs(spark, dir), wideBands))
+    simhashPairs(spark, dir, wideBands)
       .select(col("doc_a"), col("doc_b"), certified.as("hamming"))
       // filter BEFORE the distinct: the Hamming cut is computable per
       // pair instance, so the dedup shuffle only carries survivors
       .where(col("hamming") <= 6)
       .distinct()
-      // the gated dump re-certifies the cut in-query: `hamming` is
-      // emitted through assert_true, so a regression that drops or
-      // loosens the filter turns the driver's rows-only row into a
-      // crash (err != null) instead of silently shipping far pairs —
-      // the invariant is driver-observable, not only ScalaTest-pinned.
-      // Evaluated on output survivors only: free.
+      // the dump re-certifies the cut in-query: a regression that drops
+      // or loosens the filter crashes the driver's rows-only row instead
+      // of silently shipping far pairs. On output survivors only: free.
       .select(col("doc_a"), col("doc_b"),
         coalesce(assert_true(col("hamming").between(0, 6),
             concat(lit("simhash invariant violated: hamming "),
@@ -1093,29 +735,14 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  private def simhashScaledBands(docs: DataFrame,
-      wideBands: Boolean): DataFrame =
-    if (wideBands) simhashBands(docs, 8, 4) else simhashBands(docs, 16, 1)
-
-  /** (doc_id, simhash) — the per-row signature straight off the text:
-    * map-only, no explode + groupBy shuffle of every token hash
-    * ([[SimHashRow]] tokenizes and hashes internally, bit-identical to
-    * simhash64(xxhash64(tok)) over the exploded stream). Null texts are
-    * filtered on the INPUT column (mirroring the old explode semantics:
-    * no rows, no signature) — filtering on the signature itself would
-    * push the predicate below the projection and evaluate the expensive
-    * expression twice per row. The tiny repartition (16 bytes/doc) is
-    * the materialization point the band self-join reuses — without it
-    * each join side would recompute the whole signature pass (the
-    * aggregate's groupBy exchange used to play this role). The
-    * partition count is EXPLICIT: AQE would coalesce a 1.6 MB exchange
-    * to one partition by size, serializing the compute-dense band
-    * fan-out + self-join it feeds (the `spread` problem — see
-    * Similarity's scaladoc). The coalesce makes the signature attribute
-    * NON-NULLABLE (the default never fires behind the text filter):
-    * otherwise the join infers isnotnull(simhash), pushes it through
-    * the projection, and the scan evaluates the whole signature a
-    * second time as a data filter — measured 1.6× on this operator. */
+  /** (doc_id, simhash), map-only ([[SimHashRow]]). Null texts are
+    * filtered on the INPUT column; a filter on the signature would be
+    * pushed below the projection and compute it twice. Both band-join
+    * sides reuse the repartition, whose partition count is EXPLICIT:
+    * AQE would coalesce the tiny exchange to one partition and
+    * serialize the band fan-out. The coalesce makes the signature
+    * non-nullable, so no inferred isnotnull(simhash) recomputes it in
+    * the scan (measured 1.6×). */
   private def simhashDocs(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .where(col("text").isNotNull)
@@ -1129,20 +756,16 @@ object Dedup {
   /** (doc_id, simhash, key) band rows — the general Manku/Jain/Sarma
     * block design: the 64-bit signature splits into 64/`chunkBits`
     * blocks; one table per `chunksPerKey`-subset of blocks, keyed by
-    * the subset's bit concatenation WITH the table index baked into
-    * the key's high bits (see below). A Hamming-d pair collides in
-    * SOME table whenever its differing bits leave one subset intact —
-    * guaranteed for d ≤ blocks − chunksPerKey (pigeonhole). Default
-    * plan: (16, 1) = 4 tables of 16-bit keys; scale plan: (8, 4) =
-    * C(8,4) = 70 tables of 32-bit keys. */
-  private[graft] def simhashBands(docs: DataFrame, chunkBits: Int,
+    * the subset's bit concatenation with the table index in bits 56 and
+    * up ([[bandKeys]]). A Hamming-d pair collides in SOME table
+    * whenever its differing bits leave one subset intact — guaranteed
+    * for d ≤ blocks − chunksPerKey (pigeonhole). */
+  private def simhashBands(docs: DataFrame, chunkBits: Int,
       chunksPerKey: Int): DataFrame = {
-    // the baked-key encoding's preconditions, EXPLICIT (r17 ADVICE): a
-    // future (chunkBits, chunksPerKey) whose subset keys reach bit 56,
-    // or whose table count overflows the 8 high bits, would silently
-    // merge distinct tables' buckets and inflate candidates — fail the
-    // construction instead. Both shipped constructions (16,1)/(8,4)
-    // satisfy this with room.
+    // the key encoding's preconditions: a (chunkBits, chunksPerKey)
+    // whose subset keys reach bit 56, or whose table count overflows the
+    // 8 high bits, would silently merge distinct tables' buckets and
+    // inflate candidates — fail the construction instead
     require(chunkBits * chunksPerKey <= 56,
       s"simhashBands: subset keys need chunkBits*chunksPerKey <= 56 " +
         s"bits to coexist with the baked table index, got " +
@@ -1153,102 +776,40 @@ object Dedup {
       s"simhashBands: $nTables tables overflow the ${64 - 56} high bits " +
         "reserved for the baked table index")
     val chunk = simhashChunk(chunkBits) _
-    // the table index is BAKED into the key's high bits (subset keys
-    // are < 2^(chunkBits*chunksPerKey) ≤ 2^32, table count ≤ 70 < 2^7,
-    // so tbl<<56-safe at both constructions): the band self-join then
-    // equi-joins ONE long instead of (tbl, key) — one hash over one
-    // column and an 8-bytes-narrower row through the 70·N-row wide
-    // exchange. Semantically identical: (tbl, key) pairs and the baked
-    // longs are in bijection.
     val keys = (0 until 64 / chunkBits).combinations(chunksPerKey)
-      .zipWithIndex
-      .map { case (s, i) =>
-        s.tail.foldLeft(chunk(s.head))(
-          (k, j) => k * lit(1L << chunkBits) + chunk(j)) +
-          lit(i.toLong << 56) }
+      .map(s => s.tail.foldLeft(chunk(s.head))(
+        (k, j) => k * lit(1L << chunkBits) + chunk(j)))
       .toSeq
-    docs.select(col("doc_id"), col("simhash"),
-      explode(array(keys: _*)).as("key"))
+    docs.select(col("doc_id"), col("simhash"), bandKeys(keys, 56).as("key"))
   }
 
-  /** Band-table self-join → (doc_a, doc_b, hamming, sig_xor) pair
-    * instances — the shape both constructions share; the Hamming cut
-    * downstream is exact, so band choice affects recall only, never
-    * precision. `sig_xor` (functionally determined by the pair) rides
-    * along so the wide dump can re-derive its pigeonhole certificate. */
-  private def simhashJoin(bands: DataFrame): DataFrame = {
+  /** (doc_a, doc_b, hamming, sig_xor) pair instances of the band-table
+    * self-join: the (16, 1) chunk tables, or the (8, 4) wide tables.
+    * `sig_xor` (determined by the pair) rides along so the wide dump can
+    * re-derive its pigeonhole certificate. */
+  private def simhashPairs(spark: SparkSession, dir: String,
+      wideBands: Boolean): DataFrame = {
+    val docs = simhashDocs(spark, dir)
+    val bands =
+      if (wideBands) simhashBands(docs, 8, 4) else simhashBands(docs, 16, 1)
     val xor = col("a.simhash").bitwiseXOR(col("b.simhash"))
-    bands.alias("a").join(bands.alias("b"),
-        col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(xor).as("hamming"), xor.as("sig_xor"))
+    keySelfJoin(bands, "key",
+      out = Seq(bit_count(xor).as("hamming"), xor.as("sig_xor")))
   }
 
-  /** Distinct candidate pairs BEFORE the Hamming verify — factored out
-    * (like [[minhashCandidates]]) so the scale smoke can measure the
-    * two band constructions' candidate growth against each other. */
+  /** Distinct candidate pairs BEFORE the Hamming verify, so the scale
+    * smoke can measure the two band constructions' candidate growth
+    * against each other. */
   private[graft] def simhashCandidates(spark: SparkSession, dir: String,
       wideBands: Boolean): DataFrame =
-    simhashJoin(simhashScaledBands(simhashDocs(spark, dir), wideBands))
-      .select("doc_a", "doc_b")
-      .distinct()
+    simhashPairs(spark, dir, wideBands).select("doc_a", "doc_b").distinct()
 
-  /** Embedding-cosine near-dup: top-40 most similar vector pairs,
-    * CORPUS-SIZE-ROUTED (the round-6 verdict's "one query a user could
-    * naively run at 100 TB" — no longer):
-    *
-    *  - N ≤ [[embedCosineExactMax]]: exact broadcast nested loop. N²/2
-    *    dot products distributed over the cluster; the broadcast side
-    *    is ≤ ~34 MB of packed vectors at the threshold, and at 65k
-    *    vectors the pair stream is ~2·10⁹ dots — cluster-trivial,
-    *    single-node-tolerable, and every pair is scored so the result
-    *    is exact (DuckDB oracle-gated at the test SFs).
-    *  - N > [[embedCosineExactMax]]: bucketed approximate route over
-    *    the SAME IVF assignment ssIvfTopK uses (√N deterministic
-    *    centroids, hash-aggregated topk(1) cosine assignment —
-    *    Similarity.ivfParts):
-    *    pairs are scored only within a cluster, one equi-join on the
-    *    cluster id, global top-40 by TakeOrdered. Work drops from N²/2
-    *    to ~N·√N/2 scored pairs distributed on the cluster key, at the
-    *    usual blocking trade: a true top pair split across clusters is
-    *    missed (near-identical vectors land in the same Voronoi cell
-    *    unless they straddle a boundary — FunctionsSpec forces this
-    *    route at gate SF and requires every planted near-dup pair in
-    *    the top-40, plus the mega-cell blob case below).
-    *
-    * MEASURED bucketed-route quality (EmbedRecallSmoke, SURVEY §8.4.8;
-    * 12k planted true pairs per run, SCALE-STABLE across 0.2M/0.4M/1M
-    * vectors). WITHOUT boundary probing (probeMargin = 0): pair-level
-    * miss ≈ 0.02–0.04 at cos ≥ 0.9995, ≈ 0.06–0.09 at cos ≈ 0.9985,
-    * ≈ 0.15–0.20 at cos ≈ 0.99, ≈ ⅓ at cos ≈ 0.97. Misses are
-    * geometric, not random: a pair whose base sits in the bottom
-    * margin decile (top-2 centroid cosine gap ≤ ~0.004 — ON the
-    * Voronoi boundary) misses at ~0.46 while the top decile misses at
-    * ~0.02, and interior near-verbatim pairs at < 0.005. That geometry
-    * is why the DEFAULT boundary multi-probe (probeMargin = 0.01, see
-    * [[graft.functions.Similarity.ivfProbedParts]]) works: replicating
-    * the 22% of vectors nearest a boundary into their second cell
-    * drops the measured miss to 0 of 2000 at cos ≥ 0.9996, 7/2000 at
-    * 0.9985, 0.054 at 0.99 (0.4M through 2M vectors). The probe's
-    * COST is the within-cell replication squared on the pair-scoring
-    * term (~1.48×), diluted by the margin-invariant assignment pass:
-    * measured ~0% at the 2k-vector gate, +12% at 0.4M, +26% med at
-    * 2M, +35–37% at 4M (SURVEY §8.4.8b pricing table) — growing with
-    * the pair-join share toward ~+50% as cells grow with √N.
-    * Even unprobed, the top-40 OPERATOR contract held 39/40 (0.2M) and
-    * 40/40 (0.4M) against the exact route at 224× less wall. The
-    * probed pair set covers every pair sharing any (cluster, shard) —
-    * the shard-aware defer in [[scoreOnceCond]] guarantees it — which
-    * is a superset of the unprobed set UNLESS the probe's ~1.22× row
-    * replication pushes a mega-cell's population across a cellCap
-    * multiple and the re-shard splits a formerly co-resident pair
-    * (only cells already past the cap — 4·√N by default, §8.4.8b/c —
-    * can be affected, and a
-    * mega-cell's pairs are near-uniform by construction).
-    *
-    * Zero-norm vectors are excluded in both routes (undefined cosine;
-    * NaN would top the ranking), mirrored in the oracle. */
+  /** Embedding-cosine near-dup: top-40 vector pairs. Up to
+    * [[embedCosineExactMax]] vectors an exact broadcast loop; above,
+    * pairs score within IVF cells only (~N·√N/2 dots), with boundary
+    * multi-probe ([[Similarity.ivfProbedParts]]) against split pairs
+    * (miss rates and cost: SURVEY §8.4.8). Zero-norm vectors are
+    * excluded (NaN would top the ranking), as in the oracle. */
   def ddEmbedCosine(spark: SparkSession, dir: String): DataFrame =
     ddEmbedCosine(spark, dir, embedCosineExactMax(spark))
 
@@ -1262,11 +823,11 @@ object Dedup {
   private[graft] def ddEmbedCosine(spark: SparkSession, dir: String,
       exactMax: Long, maxCell: Long = -1L): DataFrame = {
     val nVecs = graft.Tables.footerRowCount(spark, dir, "embeddings")
-    // a separate knob, NOT exactMax: forcing the bucketed route with
+    // a separate setting, NOT exactMax: forcing the bucketed route with
     // exactMax = 0 must not also zero the mega-cell shard cap
     val cellCap =
       if (maxCell > 0) maxCell
-      else conf(spark, "graft.embedCosine.maxCell")(_.toLong)
+      else capConf(spark, "graft.embedCosine.maxCell")(_.toLong)
         .getOrElse(embedCosineMaxCellDefault(nVecs))
     embedRouteAdvisory(nVecs, exactMax).foreach(graft.Graft.advise(spark, _, log))
     embedCapAdvisory(nVecs, exactMax, cellCap).foreach(graft.Graft.advise(spark, _, log))
@@ -1291,26 +852,12 @@ object Dedup {
         .orderBy(col("cos").desc, col("vec_a"), col("vec_b"))
         .limit(40)
     } else {
-      // Mega-cell guard (the hot-bucket quadratic, embed edition):
-      // cells are ~√N in expectation EVEN on clustered corpora, because
-      // centroids are data-sampled — a dense region contributes
-      // proportionally more centroids. The exception is EXACT-duplicate
-      // blobs (failed encodes, constant embeddings): identical vectors
-      // score cos = 1.0 against their identical local centroids, every
-      // tie breaks to the same minimum c_id, and the whole blob lands
-      // in ONE cell of size m emitting m²/2 pairs. Cells over `maxCell`
-      // members are therefore hash-split into ⌈m/maxCell⌉ shards and
-      // pairs score within a shard only — per-cell work is bounded by
-      // ~m·maxCell and the corpus total by ~N·maxCell (linear). The
-      // trade: cross-shard pairs of a mega-cell are not scored (a
-      // fraction ~1−1/shards), graceful for top-40 mining since a
-      // mega-cell is near-uniform by construction — every shard is
-      // full of its top pairs (pinned in FunctionsSpec on a 300-dup
-      // blob). Cells under the cap get shards = 1: behavior unchanged.
-      // The MEASURED-cell advisory listener (round 16) complements the
-      // N-derived embedCapAdvisory above: it fires post-run from the
-      // observation riding the sharded stream whenever a real cell
-      // crossed the cap — the skewed-corpus case 4·√N cannot see.
+      // Mega-cell guard: exact-duplicate blobs all tie to one centroid
+      // and land in ONE cell emitting m²/2 pairs, so cells over `maxCell`
+      // are hash-split into ⌈m/maxCell⌉ shards scored apart (total work
+      // ~N·maxCell). A mega-cell is near-uniform, so every shard is full
+      // of its top pairs (FunctionsSpec, 300-dup blob). The listener
+      // reports a measured cell over the cap after the run.
       ensureCapAdvisoryListener(spark)
       val a = embedCells(spark, dir, cellCap, nVecs)
       a.alias("a").join(a.alias("b"),
@@ -1324,7 +871,6 @@ object Dedup {
         // re-certify pair orientation and that every emitted score is a
         // real cosine — |cos| ≤ 1 after round4 (zero norms are filtered,
         // so no NaN/Inf can reach here) and vec_a < vec_b from the join.
-        // A regression in either crashes the driver dump visibly.
         // Evaluated on the 40 surviving rows only: free.
         .select(
           coalesce(assert_true(col("vec_a") < col("vec_b"),
@@ -1338,37 +884,16 @@ object Dedup {
   }
 
   /** The bucketed route's score-exactly-once join condition over the
-    * `a`/`b` aliases of [[embedCells]] output. Unprobed: plain
-    * same-(cluster, shard) with `vec_id` ordering. Under boundary
-    * multi-probe a pair can co-reside in BOTH its cells; score it in
-    * the min-valued common cell WHERE IT IS SCORABLE (both sides
-    * compute the same answer — deterministic, no distinct needed, so
-    * the scored stream still flows straight into TakeOrdered). With
-    * ≤2 cells per vector, "defer to a smaller common cell" is pure
-    * scalar logic: a smaller common cell exists iff both sides' OTHER
-    * cell is the same one and sorts below this one — no array
-    * allocation per candidate pair (the array_intersect form measured
-    * 2.7× on the operator at 1M vectors).
+    * `a`/`b` aliases of [[embedCells]] output: same (cluster, shard),
+    * `vec_id` ordered. A multi-probed pair in BOTH its cells scores in
+    * the smaller one where it shares a shard (`otherShard`), else here:
+    * exactly once, with no distinct and no per-pair array.
     *
-    * The `otherShard` conjunct (round 13) makes the defer SHARD-AWARE:
-    * if the smaller common cell is a hash-split mega-cell and the pair
-    * lands in different shards there, it is NOT scorable there, so
-    * this cell must keep it — without that term a pair co-resident in
-    * a (cluster, shard) here but split in its other, smaller cell was
-    * skipped in both and silently lost, and duplicate blobs (the very
-    * thing mega-cells are made of) are where that bites. With it, a
-    * pair is scored exactly once iff it shares ANY (cluster, shard):
-    * in its min common cell when same-shard there, else here.
-    *
-    * Null-safe equality (<=>), NOT ===: an unreplicated b side has
-    * other = null, and (long === null) is SQL-null, which would null
-    * the whole conjunction and silently DROP a pair that must be
-    * scored; (5 <=> null) is plain false. The leading isNotNull makes
-    * the both-null case (neither side replicated, where
-    * null <=> null = true) short out to false before the <=> runs.
-    * When `a.other <=> b.other` holds non-null, both otherShards are
-    * non-null too (computed whenever other is), so <=> on them is
-    * exact same-shard-in-the-other-cell. */
+    * Null-safe `<=>`, NOT ===: an unreplicated side has other = null,
+    * and `=== null` would null the whole conjunction and DROP a pair
+    * that must be scored. The leading isNotNull makes the both-null
+    * case (null <=> null = true) false. otherShard is non-null wherever
+    * other is. */
   private[graft] def scoreOnceCond(probed: Boolean): Column = {
     val base = col("a.cluster") === col("b.cluster") &&
       col("a.shard") === col("b.shard") &&
@@ -1383,9 +908,8 @@ object Dedup {
 
   /** The §8.4.8 route advisory: when the corpus size routes the top-40
     * mining onto the bucketed path, log what that buys and costs in
-    * MEASURED terms, so a 100 TB operator learns the quality trade from
-    * the logs rather than the source. Advisory only — the routing
-    * itself is the documented default. */
+    * MEASURED terms. Advisory only — the routing itself is the
+    * documented default. */
   private[graft] def embedRouteAdvisory(nVecs: Long,
       exactMax: Long): Option[graft.Advisory] =
     if (nVecs > exactMax)
@@ -1413,54 +937,26 @@ object Dedup {
         action = graft.AdvisoryAction.Observe, target = ""))
     else None
 
-  /** CORPUS-AWARE mega-cell cap default (round 14; measured, SURVEY
-    * §8.4.8b): `max(4096, 4·√N)`, ceilinged at 16384.
-    *
-    * The cap is really a per-task PAIR budget — a (cluster, shard)
-    * join partition does ~maxCell²/2 scorings in ONE task — so it must
-    * stay bounded; but the §8.4.8b 4M-vector ladder showed the old
-    * FIXED 4096 starts costing real pairs exactly where corpora get
-    * interesting: IVF cells average ~1.22·√N members post-replication,
-    * and once the data-sampled tail crosses the cap (measured onset at
-    * 4M vectors, cap ≈ 1.7× the average cell) shard-splits cost
-    * 1–4/2000 planted pairs at near-verbatim tiers — silently, while
-    * the route advisory still promised zero miss. 4·√N keeps the cap
-    * at ≈ 3.3× the expected post-replication cell, comfortably above
-    * the measured tail (the 4M ladder re-measured 0/2000 at the
-    * near-verbatim tiers under this default — §8.4.8c).
-    *
-    * The 16384 ceiling is the pair-budget line: 16384²/2 ≈ 1.3·10⁸
-    * scorings ≈ low minutes in one task at the measured ~1M-scoring/s
-    * task throughput — 16× the proven-fine 4096 budget and still ~15×
-    * under the 2·10⁹-scoring task observed pinned for 40+ minutes at
-    * 500× (the pathology the cap exists to prevent). It binds at
-    * 4·√N > 16384 ⇔ N ≳ 16.8M vectors; past that the contract
-    * degrades along the MEASURED §8.4.8d ladder (20M-vector corpus,
-    * consistent with the 4M onset in cap/mean-cell units): loss 0
-    * while the ceiling stays ≥ ~2.3× the mean post-replication cell
-    * (ceiling-equivalent N ≈ 30M; N ≈ 20M measured directly), onset
-    * ~0.05–0.15% near-verbatim at ~2.0× (≈ 40M), ~0.2–0.5% at ~1.7×
-    * (≈ 54M), ~4% at ~1.4× (≈ 80M), ~24% at ~1.0× (≈ 145M) — and
-    * [[embedCapAdvisory]] says so at runtime. */
+  /** Mega-cell cap default `max(4096, 4·√N)`, at most 16384. The cap is
+    * a per-task pair budget (~maxCell²/2 scorings in one task); 4·√N
+    * keeps it ≈ 3.3× the mean probed cell (~1.22·√N), where a fixed
+    * 4096 lost pairs from 4M vectors (SURVEY §8.4.8b). The ceiling
+    * (≈ 1.3·10⁸ scorings) binds from ~16.8M vectors, and
+    * [[embedCapAdvisory]] then reports the §8.4.8d loss ladder. */
   private[graft] def embedCosineMaxCellDefault(nVecs: Long): Long =
     math.min(16384L, math.max(4096L, embedCosineMaxCellSizing(nVecs)))
 
   /** The UNCAPPED zero-miss sizing `4·√N` — the single source both
-    * [[embedCosineMaxCellDefault]] (floor 4096 / ceiling 16384 around
-    * it) and [[embedCapAdvisory]] (fires when the resolved cap sits
-    * below it) derive from, so a retune of the formula cannot
-    * desynchronize the default from the advisory (r14 advisory). */
+    * [[embedCosineMaxCellDefault]] and [[embedCapAdvisory]] derive from,
+    * so a retune cannot desynchronize the default from the advisory. */
   private[graft] def embedCosineMaxCellSizing(nVecs: Long): Long =
     4L * math.round(math.sqrt(nVecs.toDouble))
 
-  /** Cap-binding advisory (round 14, closing the r13 finding): fires
-    * when the bucketed route runs with a cell cap BELOW the measured
-    * zero-miss sizing ([[embedCosineMaxCellDefault]] uncapped, 4·√N) —
-    * i.e. the 16384 pair-budget ceiling binds (N ≳ 16.8M) or the
-    * operator pinned `maxCell` under the corpus-aware default. Without
-    * it a 10M-vector operator read an advisory promising a zero-miss
-    * contract the fixed cap no longer delivered, and nothing at
-    * runtime said the cap was binding. */
+  /** Cap-binding advisory: fires when the bucketed route runs with a
+    * cell cap BELOW the measured zero-miss sizing 4·√N — the 16384
+    * ceiling binds (N ≳ 16.8M) or `maxCell` was pinned under the
+    * default — so nothing promises a zero-miss contract the cap no
+    * longer delivers. */
   private[graft] def embedCapAdvisory(nVecs: Long, exactMax: Long,
       cellCap: Long): Option[graft.Advisory] = {
     val target = embedCosineMaxCellSizing(nVecs)
@@ -1484,73 +980,33 @@ object Dedup {
     else None
   }
 
-  /** Name PREFIX of the observation riding the bucketed route's
-    * sharded cell stream ([[Similarity.shardCells]] / the unprobed
-    * window path in [[embedCells]]). The full name is scoped by the
-    * observed subtree's semanticHash plus the cap: Spark rejects
-    * duplicate observation names on DIFFERENT plans
-    * (DUPLICATED_METRICS_NAME), so a composite query unioning two
-    * bucketed routes over different corpora must get distinct names —
-    * while identical constructions (self-join sides, a re-built
-    * route whose plan the KnobsSpec route-flip pins compare with
-    * `sameResult`) must KEEP the same name, or the pins and the
-    * duplicate-allowance for identical plans both break. The
-    * semanticHash gives exactly that equivalence. */
+  /** Name PREFIX of the observation on the bucketed route's cell stream
+    * ([[Similarity.shardCells]], [[embedCells]]). The name adds the
+    * subtree's semanticHash: Spark rejects one name on DIFFERENT plans,
+    * while identical constructions (self-join sides) must share it. */
   private[graft] val cellMetricsPrefix = "graft.embedCosine.cellStats"
 
-  /** Attach the MEASURED cell-distribution observation (round 16,
-    * closing the r15 lead finding): every row of the sharded stream
-    * carries its cell's post-replication member count (`cnt`), so a
-    * CollectMetrics here costs nothing — no extra pass, no exchange —
-    * and yields the PHYSICAL loss dial the §8.4.8d analysis names:
-    * the largest measured cell vs the cap. [[embedCapAdvisory]] keys
-    * on the N-derived `4·√N` sizing and is silent on a SKEWED corpus
-    * whose mega-cell crosses the cap while `cap ≥ 4·√N` — exactly the
-    * silent-loss class this observation closes.
-    *
-    * Only merge-idempotent aggregates (max) ride the observation: the
-    * subtree can execute more than once inside one query (self-join
-    * sides above a reused exchange re-run anything above the exchange,
-    * e.g. the unprobed window path), and a sum/count would silently
-    * double where a max cannot. */
+  /** Attach the MEASURED cell observation: each row carries its cell's
+    * member count (`cnt`), so max(cnt) vs the cap costs no extra pass
+    * and catches a skewed mega-cell the N-derived [[embedCapAdvisory]]
+    * cannot. Max-only: self-join sides above a reused exchange re-run
+    * the observed subtree, and a sum or count would double. */
   private[graft] def observeCellMetrics(df: DataFrame, cellCap: Long,
       nRows: Long = -1L): DataFrame =
     observeCapMetrics(df, cellMetricsPrefix, col("cnt"), cellCap, nRows)
 
   /** Name PREFIX of the [[minhashCandidates]] band-bucket observation
-    * — the minhash analogue of [[cellMetricsPrefix]] (round 16): a
-    * band bucket over `graft.minhash.maxBucket` is DROPPED, and while
-    * scattered degenerate bands are harmless (a true pair collides in
-    * ~4 of 16 bands), a NEAR-VERBATIM blob larger than the cap — the
-    * one thing `dd_exact` does NOT collapse — crosses in ALL its
-    * bands and its pairs silently lose candidacy. Same machinery,
+    * — the minhash analogue of [[cellMetricsPrefix]]: same machinery,
     * same listener, own advisory. */
   private[graft] val bucketMetricsPrefix = "graft.minhash.bucketStats"
 
-  /** The shared cap-observation shape: max-only metrics (see
-    * [[observeCellMetrics]]'s re-execution note) under a name scoped
-    * by the observed subtree's semanticHash + cap (see
-    * [[cellMetricsPrefix]]'s composability note).
-    *
-    * Known corner, measured (round 16), GUARDED (round 17): when the
-    * query's WHOLE result is empty, AQE's empty-relation propagation
-    * replans the remainder to an EmptyRelation and the CollectMetrics
-    * node is pruned with it — `observedMetrics` then has nothing to
-    * deliver, so a fully-degenerate run (every candidate dropped)
-    * cannot advise with MEASURED numbers. The listener detects that
-    * shape (observation declared in the analyzed plan, absent from
-    * `observedMetrics`) and fires [[prunedObservationAdvisory]]
-    * instead, pinned in KnobsSpec on a pure-blob corpus. The realistic
-    * partial-loss shape — a capped blob amid a corpus that still
-    * yields results — delivers the measured advisory as before. */
+  /** The shared cap observation: max-only metrics (see
+    * [[observeCellMetrics]]) named by prefix, subtree semanticHash, cap
+    * and corpus count. The count rides the NAME because the metrics
+    * never deliver when AQE prunes an empty result, and
+    * [[prunedObservationAdvisory]] must still quote it. */
   private[graft] def observeCapMetrics(df: DataFrame, prefix: String,
       cnt: Column, cap: Long, nRows: Long = -1L): DataFrame =
-    // nRows (the driver-side footer corpus count, round 18) rides the
-    // NAME, not the metrics row: the pruned-observation fallback fires
-    // exactly when the metrics never deliver, so anything it quotes
-    // must survive in the one artifact that does — the analyzed plan's
-    // CollectMetrics name. Deterministic per corpus, so identical
-    // constructions still share a name (the semanticHash contract).
     df.observe(
       s"$prefix/${Integer.toHexString(
         df.queryExecution.analyzed.semanticHash())}/cap=$cap/n=$nRows",
@@ -1621,22 +1077,11 @@ object Dedup {
   private def isCapObservation(name: String): Boolean =
     name.startsWith(cellMetricsPrefix) || name.startsWith(bucketMetricsPrefix)
 
-  /** The generic fallback for a cap observation that was DECLARED in
-    * the analyzed plan but never delivered (round 17, closing the r16
-    * lead finding): AQE's empty-relation propagation replans an
-    * empty-at-runtime subtree to an EmptyRelation and prunes the
-    * CollectMetrics node with it — which happens EXACTLY when loss is
-    * total (e.g. a pure near-verbatim blob corpus where every band
-    * bucket crosses the cap: zero candidates survive, the result is
-    * empty, and the measured advisory the case most needs has no
-    * metrics to deliver). This advisory cannot quote the measured
-    * max — the observation never ran to completion (`measured = -1` on
-    * the record) — so it names the condition and the knob generically,
-    * with the cap AND the driver-side corpus count parsed from the
-    * observation name. The corpus count (round 18, closing the r17
-    * benign-vs-degenerate finding) is what lets a consumer read
-    * "EMPTY result" without a re-run: N = 0 is benign, N = 502 000
-    * with duplicates expected means the cap dropped everything. */
+  /** The advisory for a cap observation declared but never delivered:
+    * AQE prunes CollectMetrics with an empty subtree, which is exactly
+    * total loss (every bucket over the cap). With no measured max, it
+    * quotes the cap and corpus count parsed from the name: N = 0 is a
+    * benign empty result, a large N a degenerate one. */
   private[graft] def prunedObservationAdvisory(name: String): graft.Advisory = {
     val (op, knob) =
       if (name.startsWith(cellMetricsPrefix))
@@ -1645,7 +1090,7 @@ object Dedup {
     def seg(k: String): Option[String] =
       name.split(s"/$k=").lift(1).map(_.takeWhile(_ != '/'))
     val cap = seg("cap").getOrElse("?")
-    // pre-r18 names carry no /n= segment; n = -1 means "not stamped"
+    // n = -1 (or a name without a /n= segment) means "not stamped"
     val n = seg("n").flatMap(_.toLongOption).getOrElse(-1L)
     val corpusNote =
       if (n == 0) "The corpus had 0 rows — this empty result is BENIGN. "
@@ -1673,15 +1118,10 @@ object Dedup {
       action = graft.AdvisoryAction.RaiseKnob, target = "")
   }
 
-  /** Register (once per session) the QueryExecutionListener that turns
-    * the [[observeCellMetrics]] / [[minhashCandidates]] observations
-    * into runtime advisories (ledger + WARN, [[graft.Graft.advise]]).
-    * Delivery is post-query — the measured counts only exist once the
-    * assignment ran — which still tells the operator their freshly
-    * computed result lost cross-shard pairs, with the knob to re-run.
-    * Observations PRESENT in the analyzed plan but ABSENT from
-    * `observedMetrics` were pruned by AQE's empty-relation propagation
-    * (the 100%-loss corner) and fire [[prunedObservationAdvisory]]. */
+  /** Register (once per session) the listener that turns the cap
+    * observations into advisories after each query
+    * ([[graft.Graft.advise]]); declared but undelivered observations
+    * fire [[prunedObservationAdvisory]]. */
   private[graft] def ensureCapAdvisoryListener(spark: SparkSession): Unit = {
     val fresh = capAdvisorySessions.synchronized {
       capAdvisorySessions.put(spark, java.lang.Boolean.TRUE) == null
@@ -1710,28 +1150,11 @@ object Dedup {
                     .foreach(graft.Graft.advise(qe.sparkSession, _, log))
               }
             }
-            // pruned-observation fallback: every cap observation the
-            // ANALYZED plan declares must have delivered; one that
-            // didn't was replanned away with an empty subtree — advise
-            // generically, since the measured max no longer exists.
-            // The cache corner was probed before choosing ANALYZED as
-            // the diff base (round 17): a .cache()d route does NOT
-            // false-fire here, because observedMetrics traverses
-            // InMemoryTableScan into the cached physical plan and a
-            // HEALTHY cached result delivers its metrics on every
-            // cache-served re-trigger (measured: analyzed=1
-            // delivered=1 on both triggers) — while a DEGENERATE
-            // cached result's CollectMetrics was AQE-pruned inside the
-            // cached materialization itself, so delivery is absent on
-            // every trigger (measured: analyzed=1 delivered=0) and
-            // this advisory correctly fires each time the poisoned
-            // cache is read. Diffing withCachedData instead would go
-            // SILENT there — cache substitution removes the logical
-            // node for healthy and degenerate caches alike. Both
-            // shapes pinned in KnobsSpec.
-            // (distinct: identical self-join sides above a reused
-            // exchange carry the same semanticHash-scoped name twice
-            // in the plan but deliver once.)
+            // every cap observation the ANALYZED plan declares must have
+            // delivered. Not withCachedData: a healthy cached route still
+            // delivers and a degenerate one never does, but cache
+            // substitution hides both (KnobsSpec). Distinct: self-join
+            // sides carry one name twice but deliver once.
             qe.analyzed.collect {
               case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
                   if isCapObservation(c.name) => c.name
@@ -1749,48 +1172,22 @@ object Dedup {
   /** The effective boundary-probe margin — the
     * `graft.embedCosine.probeMargin` conf with its measured default
     * (0.01, §8.4.8b). Single-sourced here so EmbedRecallSmoke's cap
-    * ladder replicates exactly the margin the route would use instead
-    * of re-stating the default. */
+    * ladder replicates exactly the margin the route would use. */
   private[graft] def embedProbeMargin(spark: SparkSession): Double =
     conf(spark, "graft.embedCosine.probeMargin")(_.toDouble).getOrElse(0.01)
 
   /** The bucketed embed route's cell assignment — (vec_id, v, nrm,
-    * cluster, shard) after the mega-cell hash-split — factored out
-    * (like [[ngramCandidates]]) so EmbedRecallSmoke can measure the
-    * route's pair-level quality directly: a pair is scorable iff both
-    * sides share (cluster, shard), so the measured miss rate of planted
-    * true pairs is exactly the co-residency failure rate here, with no
-    * top-40 truncation in the way.
-    *
-    * The explicit cluster-key repartition is the materialization point
-    * both self-join sides read back (ReusedExchange; partitioning by
-    * `cluster` alone still satisfies the (cluster, shard) join's
-    * clustered distribution) — the N×√N assignment pass runs exactly
-    * once. On the unprobed path the cell-count window consumes the
-    * same exchange; the probed path computes shard AND otherShard on
-    * the slim pre-payload stream inside ivfProbedParts instead. */
+    * cluster, shard) after the mega-cell hash-split — separate so
+    * EmbedRecallSmoke can measure pair co-residency, the route's miss
+    * rate, without the top-40 cut. The cluster-key repartition is read
+    * back by both self-join sides (it satisfies the (cluster, shard)
+    * join), so the N×√N assignment runs once. probeMargin > 0 (default)
+    * turns on multi-probe, whose shards ivfProbedParts computes on the
+    * slim pre-payload stream; 0 gives single-cell assignment. */
   private[graft] def embedCells(spark: SparkSession, dir: String,
       cellCap: Long, nVecs: Long = -1L): DataFrame = {
-    // graft.embedCosine.probeMargin > 0 (DEFAULT 0.01) turns on
-    // boundary multi-probe (Similarity.ivfProbedParts): vectors within
-    // that top-2 centroid margin of a Voronoi boundary join BOTH
-    // cells, and the route's pair join de-duplicates by
-    // min-common-cell. Default ON at the §8.4.8-measured point: 0.01
-    // replicates 1.22× rows, zeroes the measured near-verbatim miss
-    // (2000/2000 planted pairs at cos ≥ 0.9996 recovered at 0.4M
-    // through 2M vectors vs 1.8–3.7% missed unprobed), at a measured
-    // wall cost that grows with the pair-join share — ~0% at the gate
-    // SF to +35–37% at 4M vectors (§8.4.8b pricing; the conjunct
-    // itself is scalar codegen — the cost is the replicated pair
-    // scorings). Set 0 for the round-≤11 single-assignment plan.
     val pm = embedProbeMargin(spark)
     if (pm > 0)
-      // shard + otherShard (the scoreOnceCond shard-aware-defer input)
-      // are computed on the slim pre-payload stream inside
-      // ivfProbedParts — see its scaladoc for why a payload-side
-      // window + count-aggregate pair re-runs the assignment pass.
-      // The explicit cluster-key repartition stays the materialization
-      // point both self-join sides read back (ReusedExchange).
       Similarity.ivfProbedParts(spark, dir, pm, cellCap, nVecs)
         .repartition(col("cluster"))
     else {
@@ -1819,18 +1216,9 @@ object Dedup {
     import spark.implicits._
     val bench = phrases.toDF("phrase")
       .select(col("phrase"), explode(shingles(col("phrase"))).as("sh"))
-    // Pre-filter each doc's shingle ARRAY against the literal benchmark
-    // shingle set before exploding (round 21): only matching shingles
-    // become rows, so the join probe stream shrinks from every shingle
-    // instance in the corpus to the (rare) hits — the full token
-    // stream never materializes as rows. The driver-side literal
-    // mirrors [[shingles]] exactly for the 3-token phrases (whitespace
-    // split → one 3-shingle each); the broadcast join on the exploded
-    // bench side still attributes each hit to its phrase(s), so
-    // n_hits/matched are row-identical to the explode-then-join shape
-    // (A/B'd exceptAll-empty both directions at sf0.1; ~10% faster
-    // locally, and at 100 TB the probe side of the join drops from
-    // |all shingle instances| to |hits|).
+    // intersect each shingle ARRAY with the literal bench shingles
+    // before exploding, so only hits become rows; the literal equals
+    // shingles() on 3-token phrases, and the join still names phrases
     val benchShs = phrases
       .flatMap(_.trim.split("\\s+").toSeq.sliding(3).map(_.mkString(" ")))
       .distinct
@@ -1846,35 +1234,17 @@ object Dedup {
   }
 
   /** Near-dup CLUSTERS: connected components over the j ≥ 0.5 pair
-    * graph, each member labeled with the component's minimum doc_id
-    * (the canonical representative to keep) and the component size.
-    *
-    * Iterative min-label propagation: each round every node takes the
-    * min of its own and its neighbors' labels; converges in
-    * O(component diameter) rounds — near-dup clusters are shallow
-    * (duplicates of a common ancestor), so this is 2-4 rounds in
-    * practice. Each round is ONE join + ONE aggregate: the aggregate
-    * carries the node's previous label alongside the new min (tagging
-    * the union's own-label rows), so the convergence check is a
-    * filter-count over the already-persisted round output — no second
-    * join re-shuffling the label set (the standard Spark shape for
-    * connected components, minus the usual per-round compare join). */
+    * graph, each member labeled with the component's minimum doc_id and
+    * the component size. Min-label propagation, one join + one
+    * aggregate per round; the aggregate keeps the previous label, so
+    * convergence is a filter-count on the persisted round output. */
   def ddCluster(spark: SparkSession, dir: String): DataFrame =
     clusterFromPairs(ddNgramJaccardPairs(spark, dir)
       .select("doc_a", "doc_b"))
 
-  /** [[ddCluster]] with pair generation routed through the
-    * disk-bounded STAGED mode (round 20, r19 verdict #3): the
-    * propagation itself is pair-proportional (the pair set is the tiny
-    * fraction of the stream), so dd_cluster's scale wall IS the ngram
-    * single-plan wall — measured ENOSPC at 20M docs even under
-    * tier-0+zstd (§8.4.3g). This composition is the same
-    * SwitchOperator escape the ngram ladder's last rung names, applied
-    * to the component DAG: identical labels (the staged pair set is
-    * oracle-identical), per-job spill bounded at ~1/shards.
-    * Registered as `dd_cluster_staged` against the SAME DuckDB oracle
-    * as `dd_cluster`. Inherits [[ddNgramJaccardStaged]]'s eager
-    * execution and stageDir contract. */
+  /** [[ddCluster]] over the STAGED pair set: its scale wall is the ngram
+    * single-plan wall (SURVEY §8.4.3g). Same labels and oracle; eager,
+    * with [[ddNgramJaccardStaged]]'s stageDir contract. */
   def ddClusterStaged(spark: SparkSession, dir: String,
       stageDir: String = "", shards: Int = -1): DataFrame =
     clusterFromPairs(ddNgramJaccardStaged(spark, dir, stageDir, shards)
@@ -1915,11 +1285,8 @@ object Dedup {
       cached = next
       labels = next.select("node", "label")
     }
-    // the final labels are materialized (the convergence count ran), so
-    // the edge cache can be released — a long-lived session would
-    // otherwise hold the edge blocks until shutdown. Lineage stays
-    // intact: an evicted label partition would recompute through the
-    // unpersisted edges, slower but correct.
+    // the labels are materialized, so the edges can go; an evicted
+    // label partition recomputes through lineage, slower but correct
     edges.unpersist()
     labels
       .select(col("node").as("doc_id"), col("label").as("cluster"))
@@ -1928,35 +1295,17 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Cross-document repeated-span detection — the per-document signal
-    * behind substring-level dedup (Lee et al. 2021, "Deduplicating
-    * Training Data Makes Language Models Better"): for every document,
-    * the fraction of its 5-gram spans (counted WITH multiplicity — a
-    * span repeated inside one doc counts each time) that also occur in
-    * at least `minDocs` distinct documents. High `dup_bp` marks
-    * boilerplate-heavy documents to drop or trim before training.
-    *
-    * Shape at 100 TB: span df is one hash-aggregate over (doc, gram)
-    * distinct pairs; the instance stream joins the ≥minDocs gram set on
-    * a fixed-width 60-bit key (first 15 md5 hex chars — the same
-    * derivation on the DuckDB side, so any collision is deterministic
-    * and identical in both engines); per-doc totals come from the token
-    * count, no second pass. Hot boilerplate grams skew the join's build
-    * side only by their df row — instances stay spread across docs. */
+  /** Cross-document repeated-span detection (Lee et al. 2021): per
+    * document, the fraction of its 5-gram spans (with multiplicity)
+    * that occur in at least `minDocs` distinct documents. Grams join on
+    * a 60-bit key (15 md5 hex chars, derived the same way in DuckDB, so
+    * a collision is identical in both engines). */
   def ddSpan(spark: SparkSession, dir: String, minDocs: Int = 2): DataFrame = {
-    // null text excluded EXPLICITLY (mirrored in the oracle): the
-    // exploded instance stream drops such docs implicitly, which would
-    // silently diverge from the oracle's LEFT JOIN keeping them.
-    //
-    // Shape note: span df stays the distinct+hash-agg+join-back form
-    // deliberately. The dense_rank-window rewrite that won for dd_cdc
-    // loses here 25× (0.4 → 10.8 s at 20×): a sliding 5-token gram
-    // stream is ~|tokens| rows — sorting it for the window costs far
-    // more than recomputing the cheap explode+md5 for the join branch,
-    // and AQE broadcasts the small ≥minDocs gram set so the instance
-    // stream is never exchanged at all. (dd_cdc's chunk stream is ~16×
-    // smaller and its chunker is the dominant cost, which flips the
-    // trade — see ddCdc.)
+    // null text excluded EXPLICITLY, as in the oracle, whose LEFT JOIN
+    // would otherwise keep docs the exploded stream drops. Span df stays
+    // distinct+agg+join-back: a dense_rank window (dd_cdc's shape) sorts
+    // the ~|tokens|-row gram stream and measured 25× slower, while AQE
+    // broadcasts the small gram set.
     val docs = t(spark, dir, "documents")
       .where(col("text").isNotNull)
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("tk"))
@@ -1989,25 +1338,12 @@ object Dedup {
     * document's token stream is cut where the hash of the trailing
     * 4-token window ≡ 0 (mod 16) — boundaries depend only on LOCAL
     * content, so an edit moves at most its neighboring cut and
-    * unchanged regions keep their chunk fingerprints (the property
-    * that makes CDC the crawl-snapshot dedup primitive, unlike
-    * fixed-width spans where one insertion shifts every later span).
-    * Output: per-document chunk count, chunks shared with ≥ 2 distinct
-    * documents, and the duplicated fraction in basis points.
-    *
-    * Shape at 100 TB: chunking is a pure per-row expression (no
-    * shuffle); chunk df rides ONE exchange on the fixed-width 60-bit
-    * md5 fingerprint (dense_rank + max window = distinct-doc count),
-    * then one per-doc aggregate — the corpus is read and chunked
-    * exactly once, same shape as [[ddSpan]]. */
+    * unchanged regions keep their chunk fingerprints. Output: per-doc
+    * chunk count, chunks shared with ≥ 2 documents, and the duplicated
+    * fraction in basis points. Chunk df is a dense_rank + max window on
+    * the 60-bit md5 key, not a distinct+agg+join-back, which would
+    * re-run the chunker (the dominant cost) per branch. */
   def ddCdc(spark: SparkSession, dir: String): DataFrame = {
-    // one-pass native chunker (see CdcChunks scaladoc for why the HOF
-    // formulation was quadratic); every doc yields >= 1 chunk, so the
-    // per-doc chunk count falls out of the same instance aggregation
-    // ONE corpus pass: the chunk df (distinct docs per fingerprint) is
-    // dense_rank + max over the fingerprint window instead of a
-    // distinct+agg+join-back — the join shape re-ran the scan AND the
-    // native chunker once per branch (chunking is the dominant cost)
     val inst = t(spark, dir, "documents")
       .where(col("text").isNotNull) // mirrored in the oracle, as in ddSpan
       .select(col("doc_id"),
@@ -2032,25 +1368,16 @@ object Dedup {
     "dd_decontaminate" -> ddDecontaminate _,
     "dd_exact"         -> ddExact _,
     "dd_ngram_jaccard" -> ((s: SparkSession, d: String) => ddNgramJaccard(s, d)),
-    // disk-bounded staged mode, same pair set — gate-checked against
-    // the SAME oracle as dd_ngram_jaccard (§8.4.3g)
+    // disk-bounded staged modes: same pair set and labels, gate-checked
+    // against the SAME oracles as their single-plan twins
     "dd_ngram_staged"  -> ((s: SparkSession, d: String) => ddNgramJaccardStaged(s, d)),
-    // the staged composition for components — same oracle as dd_cluster
-    // (§8.4.3g's escape applied to the family whose wall IS pair
-    // generation; round 20)
     "dd_cluster_staged" -> ((s: SparkSession, d: String) => ddClusterStaged(s, d)),
     "dd_minhash_lsh"   -> ddMinhashLsh _,
     "dd_simhash"       -> ddSimhash _,
     "dd_embed_cosine"  -> ddEmbedCosine _,
     "dd_span"          -> ((s: SparkSession, d: String) => ddSpan(s, d)),
-    // The SCALE-ROUTE variants, parameter-forced (the ta_vocab_k10
-    // pattern): the gate corpora sit far below both corpus-size
-    // switches, so without these rows the driver gate would only ever
-    // exercise the small-corpus plans — the code that actually runs at
-    // 100 TB (wide C(8,4) band tables, IVF-bucketed cell pairing) would
-    // be ScalaTest-only. Rows-only checks (approximate by design, like
-    // dd_simhash / ss_ivf_topk); EdgeGateSpec's exclusion-derived list
-    // edge-gates them automatically.
+    // the scale routes, forced: the gate corpora sit below both
+    // switches. Rows-only checks, edge-gated by EdgeGateSpec.
     "dd_simhash_wide" ->
       ((s: SparkSession, d: String) => ddSimhash(s, d, wideBands = true)),
     "dd_embed_cosine_bucketed" ->
@@ -2058,15 +1385,16 @@ object Dedup {
   )
 
   /** Registered queries whose EAGER staged execution makes them
-    * by-design heavier than their single-plan twins — the bench
-    * derives its round-comparable `total_shared` exclusion list from
-    * this tag (round 20, r19 verdict #5: the set was a literal in
-    * Bench.scala that a future heavy query could silently miss;
-    * KnobsSpec pins that every tag names a registered query). */
+    * by-design heavier than their single-plan twins — the bench derives
+    * its `total_shared` exclusion list from this tag (KnobsSpec pins
+    * that every tag names a registered query). */
   val benchHeavy: Set[String] = Set("dd_ngram_staged", "dd_cluster_staged")
 
-  private val ngramOracleSql: String =
-    """WITH t AS (
+  /** The exact-Jaccard pair CTEs `t` (shingle sets), `s` (exploded) and
+    * `p` (shared counts per pair), shared by the ngram and cluster
+    * oracles. */
+  private val ngramPairCtes: String =
+    """t AS (
       |  SELECT doc_id, list_distinct(list_transform(
       |    generate_series(1, greatest(len(tk)-2, 1)),
       |    i -> array_to_string(tk[i:i+2],' '))) AS shs
@@ -2076,27 +1404,22 @@ object Dedup {
       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
       |        any_value(a.n) AS na, any_value(b.n) AS nb
       |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |      GROUP BY 1, 2)
-      |SELECT doc_a, doc_b,
-      |  round(shared/(na+nb-shared), 4) AS jaccard
-      |FROM p WHERE round(shared/(na+nb-shared), 4) >= 0.5
-      |ORDER BY doc_a, doc_b""".stripMargin
+      |      GROUP BY 1, 2)""".stripMargin
 
-  /** The dd_cluster DuckDB oracle — shared by the staged
-    * composition (identical labels by construction). */
+  private val ngramOracleSql: String =
+    s"WITH $ngramPairCtes\n" +
+      """SELECT doc_a, doc_b,
+        |  round(shared/(na+nb-shared), 4) AS jaccard
+        |FROM p WHERE round(shared/(na+nb-shared), 4) >= 0.5
+        |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** The dd_cluster DuckDB oracle — shared by the staged composition
+    * (identical labels by construction). The recursive CTE reaches
+    * every node from every component member, so min(reached) is the
+    * component minimum. */
   private val clusterOracleSql: String =
-    """WITH RECURSIVE t AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(tk)-2, 1)),
-        |    i -> array_to_string(tk[i:i+2],' '))) AS shs
-        |  FROM (SELECT doc_id, string_split_regex(trim(text),'\s+') AS tk
-        |        FROM documents)),
-        |s AS (SELECT doc_id, len(shs) AS n, unnest(shs) AS sh FROM t),
-        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared,
-        |        any_value(a.n) AS na, any_value(b.n) AS nb
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |pairs AS (SELECT doc_a, doc_b FROM p
+    s"WITH RECURSIVE $ngramPairCtes,\n" +
+      """pairs AS (SELECT doc_a, doc_b FROM p
         |          WHERE round(shared/(na+nb-shared), 4) >= 0.5),
         |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -2141,9 +1464,6 @@ object Dedup {
     "dd_ngram_jaccard" -> ngramOracleSql,
     // the staged mode must produce the identical pair set — same oracle
     "dd_ngram_staged" -> ngramOracleSql,
-    // Connected components over the exact-Jaccard pair graph: the
-    // recursive CTE reaches every node from every component member, so
-    // min(reached) is the component minimum.
     "dd_cluster" -> clusterOracleSql,
     // the staged composition must produce identical labels — same oracle
     "dd_cluster_staged" -> clusterOracleSql,

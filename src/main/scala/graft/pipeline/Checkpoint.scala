@@ -88,14 +88,26 @@ class CheckpointStore(val roots: Seq[String], conf: Configuration)
     }
 
   /** E12: hydrate a stage's rows from storage (resume path) — first
-    * root that has the stage wins (preferred-store dedup on load). */
+    * root that has the stage wins (preferred-store dedup on load).
+    * One row per index: two runs on one processing id that save an
+    * index under different extensions can both leave their file, and
+    * the newest one (ties: the later name) is the row. A file that a
+    * concurrent save deletes between listing and reading sends the load
+    * back to the listing. */
   def loadOutput(pipeline: String, processingId: String,
       blockSlug: String): Option[Seq[(Int, Array[Byte])]] =
     Some(firstWith { root =>
       val d = path(root, pipeline, processingId, blockSlug)
-      CheckpointStore.names(d).collect {
-        case n @ CheckpointStore.output(i) => i.toInt -> Files.readAllBytes(d.resolve(n))
-      }.sortBy(_._1)
+      def load(retries: Int): Seq[(Int, Array[Byte])] =
+        try CheckpointStore.names(d).collect { case n @ CheckpointStore.output(i) => i.toInt -> n }
+          .groupMap(_._1)(_._2).toSeq.sortBy(_._1).map { case (i, files) =>
+            // stat only an index with several files: the common path adds no calls
+            val file = if (files.size == 1) files.head
+              else files.maxBy(n => (Files.getLastModifiedTime(d.resolve(n)), n))
+            i -> Files.readAllBytes(d.resolve(file))
+          }
+        catch { case _: NoSuchFileException if retries > 0 => load(retries - 1) }
+      load(retries = 3)
     }).filter(_.nonEmpty)
 
   /** E14: write a structured run-ledger document to every root;

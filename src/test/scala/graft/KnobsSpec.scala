@@ -53,6 +53,13 @@ class KnobsSpec extends AnyFunSuite {
     withConf("graft.minhash.maxBucket" -> "1") {
       assert(Dedup.ddMinhashLsh(spark, d).count() == 0L)
     }
+    // every bucket has >= 1 member, so a cap <= 0 would drop them all
+    Seq("0", "-5").foreach { v =>
+      withConf("graft.minhash.maxBucket" -> v) {
+        val e = intercept[IllegalArgumentException](Dedup.ddMinhashLsh(spark, d))
+        assert(e.getMessage.contains("graft.minhash.maxBucket"), e.getMessage)
+      }
+    }
   }
 
   test("simhash switches to the wide bands past 1e7 docs") {
@@ -612,6 +619,13 @@ class KnobsSpec extends AnyFunSuite {
       assert(rows.length == 40 && rows.forall(_._3 == 1.0),
         s"conf-driven shard cap must keep scoring duplicate pairs: " +
           s"${rows.take(5).toSeq}")
+    }
+    // the cap divides each cell's member count into shards
+    Seq("0", "-5").foreach { v =>
+      withConf("graft.embedCosine.exactMax" -> "0", "graft.embedCosine.maxCell" -> v) {
+        val e = intercept[IllegalArgumentException](Dedup.ddEmbedCosine(spark, d))
+        assert(e.getMessage.contains("graft.embedCosine.maxCell"), e.getMessage)
+      }
     }
   }
 

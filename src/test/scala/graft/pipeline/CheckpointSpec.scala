@@ -12,7 +12,11 @@ class CheckpointSpec extends AnyFunSuite {
   test("two writers and a reader of one block: every read is one whole payload") {
     val store = new CheckpointStore(Files.createTempDirectory("graft-ckpt-race").toString)
     val pid = Runner.newProcessingId()
-    val payloads = Seq(Array.fill(64 * 1024)('a'.toByte), Array.fill(48 * 1024)('b'.toByte))
+    // a text and a JSON payload: the writers publish output_0.txt and
+    // output_0.json, and each deletes the other's file only if it saw it
+    val payloads = Seq(Array.fill(64 * 1024)('a'.toByte),
+      Seq.fill(12 * 1024)("1").mkString("[", ",", "]").getBytes("UTF-8"))
+    assert(payloads.map(Mime.extensionOf) == Seq(".txt", ".json"))
     val published = new CountDownLatch(1)
     val writing = new CountDownLatch(payloads.size)
     val errors = new ConcurrentLinkedQueue[String]()
@@ -38,6 +42,19 @@ class CheckpointSpec extends AnyFunSuite {
     writers.foreach(_.join())
     if (!errors.isEmpty)
       fail(s"${errors.size} bad writes or reads, first: " + errors.asScala.take(5).mkString("; "))
+  }
+
+  test("an index saved under two extensions loads as one row, the newest file") {
+    val root = Files.createTempDirectory("graft-ckpt-two-ext")
+    val d = Files.createDirectories(root.resolve("p/pid/block"))
+    Files.write(d.resolve("output_0.txt"), "new".getBytes("UTF-8"))
+    Files.write(d.resolve("output_0.json"), "{\"old\":1}".getBytes("UTF-8"))
+    Files.setLastModifiedTime(d.resolve("output_0.json"), java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - 3600 * 1000L))
+    Files.write(d.resolve("output_1.txt"), "one".getBytes("UTF-8"))
+    val rows = new CheckpointStore(root.toString).loadOutput("p", "pid", "block")
+      .map(_.map { case (i, b) => i -> new String(b, "UTF-8") })
+    assert(rows.contains(Seq(0 -> "new", 1 -> "one")), rows)
   }
 
   test("a root with a scheme other than file: is refused and named") {

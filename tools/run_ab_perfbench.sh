@@ -24,6 +24,8 @@ REV="$1"; WORKLOAD="$2"; PAIRS="$3"; SEED0="$4"
 RUN_S=$(python3 -c 'import json; print(json.load(open("BENCHMARK.json"))["run_seconds"])')
 OUT="${AB_OUT:-target/ab_perfbench/$WORKLOAD.jsonl}"
 mkdir -p "$(dirname "$OUT")"
+# absolute: each run's stderr is written from inside its own tree
+OUT="$(cd "$(dirname "$OUT")" && pwd)/$(basename "$OUT")"
 : > "$OUT"
 
 A=$(mktemp -d "${TMPDIR:-/tmp}/ab-perfbench-XXXXXX")
