@@ -71,19 +71,28 @@ class CheckpointStore(val roots: Seq[String], conf: Configuration)
     * Replaces only the indexes present in `rows` (targeted regeneration
     * rewrites a single index, pipeline.go:523-601). Returns the
     * per-root failures `(root, error)` — the caller ledgers them; a
-    * partial write is not fatal as long as one root survives. */
+    * partial write is not fatal as long as one root survives.
+    *
+    * Saves to one block directory from this JVM take turns: two
+    * concurrent saves of an index under different extensions could
+    * otherwise each list the other's file, publish their own and delete
+    * the other's, leaving the index with no file at all. In turn, each
+    * save publishes before it deletes, so a reader always finds the
+    * index. */
   def saveOutput(pipeline: String, processingId: String, blockSlug: String,
       rows: Seq[(Int, Array[Byte])]): Seq[(String, String)] =
     eachRoot { root =>
       val d = path(root, pipeline, processingId, blockSlug)
-      // index → existing files, so regeneration replaces output_<idx>.*
-      // even when the extension changes
-      val existing = CheckpointStore.names(d).groupBy(_.takeWhile(_ != '.'))
-      rows.foreach { case (idx, bytes) =>
-        val name = s"output_$idx${Mime.extensionOf(bytes)}"
-        CheckpointStore.publish(d.resolve(name), bytes)
-        existing.getOrElse(s"output_$idx", Nil).filter(_ != name)
-          .foreach(n => CheckpointStore.delete(d.resolve(n)))
+      CheckpointStore.lockOf(d).synchronized {
+        // index → existing files, so regeneration replaces output_<idx>.*
+        // even when the extension changes
+        val existing = CheckpointStore.names(d).groupBy(_.takeWhile(_ != '.'))
+        rows.foreach { case (idx, bytes) =>
+          val name = s"output_$idx${Mime.extensionOf(bytes)}"
+          CheckpointStore.publish(d.resolve(name), bytes)
+          existing.getOrElse(s"output_$idx", Nil).filter(_ != name)
+            .foreach(n => CheckpointStore.delete(d.resolve(n)))
+        }
       }
     }
 
@@ -140,6 +149,12 @@ class CheckpointStore(val roots: Seq[String], conf: Configuration)
 object CheckpointStore {
   private val scheme = "^([A-Za-z][A-Za-z0-9+.-]*):".r.unanchored
   private val output = "output_(\\d+).*".r
+
+  /** Striped monitors for [[CheckpointStore.saveOutput]]: one directory
+    * always maps to the same monitor. */
+  private val saveLocks = Array.fill(64)(new Object)
+  private def lockOf(d: Path): Object =
+    saveLocks(Math.floorMod(d.toAbsolutePath.normalize.hashCode, saveLocks.length))
 
   /** The local directory a root names: a path, or a `file:` URI. */
   private def localPath(root: String): Path = root match {
