@@ -138,9 +138,15 @@ class PipelineService(
             case None => error(ex, 404, s"unknown pipeline '$slug'")
             case Some(spec) =>
               val ct = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-              val body = ex.getRequestBody.readAllBytes()
+              val multipart = ct.toLowerCase.startsWith("multipart/form-data")
+              // a multipart body over the cap is refused, so reading stops
+              // one byte past it instead of holding the dispatcher thread
+              // and the heap for whatever length the client declared
+              val body =
+                if (multipart) ex.getRequestBody.readNBytes(MultipartMaxBytes + 1)
+                else ex.getRequestBody.readAllBytes()
               val req =
-                if (ct.toLowerCase.startsWith("multipart/form-data"))
+                if (multipart)
                   parseMultipartStart(body, ct)
                 else if (ct.isEmpty || ct.toLowerCase.startsWith("application/json"))
                   parseJsonStart(body)
@@ -218,6 +224,8 @@ class PipelineService(
       strField(field(parsed, "pipeline"), "processing_id")))
   }
 
+  private val MultipartMaxBytes = 10 * 1024 * 1024
+
   /** Multipart form parity with the reference (schemas/pipelines.go:78-154):
     * `pipeline.slug`/`block.slug` required, `block.target_index` int with
     * -1 default, `block.input.<f>` scalars, `block.input.<f>[]` string
@@ -225,7 +233,7 @@ class PipelineService(
     * 10 MiB are rejected (handlers/pipelines.go:155). */
   private def parseMultipartStart(
       body: Array[Byte], contentType: String): Either[String, StartRequest] = {
-    if (body.length > 10 * 1024 * 1024) return Left("Unable to parse multipart form")
+    if (body.length > MultipartMaxBytes) return Left("Unable to parse multipart form")
     val bound = Multipart.boundary(contentType)
       .getOrElse(return Left("Unable to parse multipart form"))
     val (form, files) = Multipart.formAndFiles(Multipart.parse(body, bound))

@@ -395,6 +395,45 @@ class ApiSpec extends AnyFunSuite {
     } finally svc.stop()
   }
 
+  test("an oversized multipart body is refused before it all arrives; /health still answers") {
+    val uploadSpec = PipelineSpec("mp-cap", "t", "d", Seq(
+      BlockSpec("upload_file", "take", "accept the posted multipart file")))
+    val conf = Runner.RunConfig(spark, registry,
+      new CheckpointStore(java.nio.file.Files.createTempDirectory("graft-api-cap").toString),
+      Clients.mockCtx())
+    val svc = new PipelineService(Seq(uploadSpec), conf)(
+      scala.concurrent.ExecutionContext.global)
+    val port = svc.start()
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(10000) // the status line must come within 10 s
+      // declare 64 MiB, send 11 MiB and stop: only the cap check can answer
+      val sender = new Thread(() =>
+        try {
+          val out = sock.getOutputStream
+          out.write(("POST /pipelines/mp-cap/start HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+            "Content-Type: multipart/form-data; boundary=b\r\n" +
+            "Content-Length: 67108864\r\n\r\n").getBytes("US-ASCII"))
+          val chunk = new Array[Byte](1 << 20)
+          (1 to 11).foreach(_ => out.write(chunk))
+          out.flush()
+        } catch { case _: java.io.IOException => () }) // the server may hang up first
+      sender.setDaemon(true)
+      sender.start()
+      val in = new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream, "US-ASCII"))
+      val status = in.readLine()
+      assert(status != null && status.startsWith("HTTP/1.1 400 "), status)
+      val length = Iterator.continually(in.readLine()).takeWhile(l => l != null && l.nonEmpty)
+        .collectFirst { case l if l.toLowerCase.startsWith("content-length:") =>
+          l.drop("content-length:".length).trim.toInt }
+        .getOrElse(fail("no Content-Length"))
+      val body = new String(Array.fill(length)(in.read().toChar))
+      assert(body.contains("Unable to parse multipart form"), body)
+    } finally sock.close()
+    try assert(get(port, "/health")._1 == 200) finally svc.stop()
+  }
+
   test("small replies are not held back: median GET /health round trip under 20 ms") {
     // a fresh JVM, so the service creates its first HTTP server
     val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java")

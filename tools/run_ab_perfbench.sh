@@ -14,8 +14,12 @@
 # is worse than the parent's by more than the metric's bound, and
 # whether it is a gain: the change wins at least nine tenths of the
 # pairs and the medians differ, in its favour, by more than the distance
-# between the parent's quartiles. Result lines go to $AB_OUT (default
-# target/ab_perfbench/<workload>.jsonl), each run's stderr beside it.
+# between the parent's quartiles. For dedup_scaled, which runs one timed
+# pass or two depending on how fast the first one goes, it also prints
+# each pair's pass counts, read from each run's stderr, and how many
+# pairs ran a different number of passes on the two sides. Result lines
+# go to $AB_OUT (default target/ab_perfbench/<workload>.jsonl), each
+# run's stderr beside it.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -54,11 +58,12 @@ for p in $(seq 1 "$PAIRS"); do
   fi
 done
 
-python3 - "$OUT" <<'EOF'
+python3 - "$OUT" "$WORKLOAD" <<'EOF'
 import json, statistics, sys
 
 spec = json.load(open("BENCHMARK.json"))
-runs = [json.loads(line) for line in open(sys.argv[1])]
+out, workload = sys.argv[1], sys.argv[2]
+runs = [json.loads(line) for line in open(out)]
 side = {s: {r["pair"]: r["result"] for r in runs if r["side"] == s} for s in "AB"}
 pairs = sorted(side["A"])
 for s in "AB":
@@ -92,4 +97,18 @@ for m in spec["end_to_end"]:
     print(f"{name:16} {cell(am, a1, a3):>28} {cell(bm, b1, b3):>28}"
           f" {wins:>3}/{len(pairs):<3} {'WORSE' if worse else 'ok':>6}  "
           + ("gain" if gain else "no gain"))
+
+if workload == "dedup_scaled":
+    def passes(s, p):
+        """timed passes of one run: `;`-separated groups of its passes_ms line"""
+        for line in open(f"{out}.{s}.{p}.err"):
+            if line.startswith("[perfbench] passes_ms"):
+                return len(line.split(";"))
+        return None
+
+    counts = [(p, passes("A", p), passes("B", p)) for p in pairs]
+    print("passes per pair (A/B): "
+          + ", ".join(f"{p}: {a}/{b}" for p, a, b in counts))
+    print(f"pairs whose sides ran a different number of passes: "
+          f"{sum(a != b for _, a, b in counts)}/{len(pairs)}")
 EOF
