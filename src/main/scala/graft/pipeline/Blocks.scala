@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, SparkSession}
-
 /** The 6-tuple every reference processor returns
   * (types/interfaces/block.go:56-64): output buffers, stop, retry,
   * regeneration target slug + input index. */
@@ -19,10 +17,11 @@ object BlockResult {
 
 /** Whether a block's per-row work is pure. In the [[Runner]] it only
   * picks fan-out concurrency; [[BulkRunner]] runs only Distributed
-  * blocks and rejects DriverSide ones. */
+  * blocks, each row through `prepare` + `process`, and rejects
+  * DriverSide ones. */
 sealed trait ExecMode extends Serializable
 /** Pure compute — the Runner runs fan-out rows concurrently; BulkRunner
-  * runs them as Column expressions (text) or via mapPartitions. */
+  * runs them as a Spark stage. */
 case object Distributed extends ExecMode
 /** Side-effecting (external clients, moderation) — ordered loop in the
   * Runner; `parallel: true` fan-out uses futures, mirroring the
@@ -102,15 +101,6 @@ trait BlockOp extends Serializable {
     merged.foreach { case (k, v) => if (!out.contains(k)) out(k) = v }
     Right(out.toMap)
   }
-}
-
-/** A block whose body is also a pure Column expression over its string
-  * inputs — the "functions, not UDFs" form that [[BulkRunner]] and the
-  * gate queries run as one codegen'd select; the Runner calls
-  * `process`. */
-trait ExprBlockOp extends BlockOp {
-  /** Output value as a Column over the input property columns. */
-  def outputColumn(in: String => Column): Column
 }
 
 object Blocks {

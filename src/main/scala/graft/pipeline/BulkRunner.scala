@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, BinaryType}
 import org.apache.spark.sql.functions._
 
 /** Data-plane pipeline executor: every stage output IS a DataFrame
@@ -14,11 +15,12 @@ import org.apache.spark.sql.functions._
   * Spark stage, JSONPath projection runs as a Catalyst expression,
   * zip-merge is a join on idx, checkpoints are parquet directories.
   *
-  * Scope: pure-compute pipelines — ExprBlockOps run as codegen'd
-  * selects, other Distributed blocks via mapPartitions. DriverSide
-  * blocks (external clients, moderation, conditional stop) need the
-  * control-plane Runner and are rejected up front; the spec suite
-  * proves the two executors agree on specs both can run.
+  * Scope: pure-compute pipelines — every Distributed block runs through
+  * its one `prepare` + `process` implementation, one call per row, each
+  * row's input map built as the Runner builds it ([[runRow]]).
+  * DriverSide blocks (external clients, moderation, conditional stop)
+  * need the control-plane Runner and are rejected up front; the spec
+  * suite proves the two executors agree on specs both can run.
   */
 object BulkRunner {
 
@@ -167,28 +169,12 @@ object BulkRunner {
         name -> resolved
       }
 
-      val litRow: Map[String, PValue] = blockSpec.input
       val (in: DataFrame, zipCleanup: (() => Unit)) =
         if (propFrames.isEmpty)
           (conf.spark.range(1).select(lit(0).as("idx")), () => ())
-        else Wiring.zipByIdxWithCleanup(propFrames)
+        else Wiring.zipByIdx(propFrames)
 
-      def typedCol(name: String): Column = {
-        val present = propFrames.contains(name)
-        val isArr = op.propsByName.get(name).exists(_.typ.isInstanceOf[TArr])
-        // literal > schema default (prepare() applies the same order)
-        val fallback = litRow.get(name)
-          .orElse(op.propsByName.get(name).flatMap(_.default))
-        (present, isArr) match {
-          case (true, true)   => col(name).cast("array<string>")
-          case (false, true)  => lit(null).cast("array<string>")
-          case (true, false)  =>
-            coalesce(col(name).cast("string"), litFor(fallback).cast("string"))
-          case (false, false) => litFor(fallback)
-        }
-      }
-
-      val out = execute(op, blockSpec, in, typedCol, conf)
+      val out = execute(op, blockSpec, in, propFrames.keys.toSeq, conf)
       conf.checkpointDir match {
         case Some(root) =>
           val path = s"$root/${spec.slug}/${blockSpec.slug}"
@@ -218,80 +204,70 @@ object BulkRunner {
     try JsonPath.compile(path).contains(JsonPath.Star)
     catch { case _: Exception => false }
 
-  private def litFor(v: Option[PValue]): Column = v match {
-    case Some(PNull) | None => lit(null).cast("string")
-    // a binary literal must reach TFile props as raw bytes: a UTF-8
-    // round-trip through asString corrupts non-UTF8 payloads (the
-    // control-plane Runner keeps them intact via PropSpec.castTo)
-    case Some(PBytes(b))    => lit(b)
-    case Some(x)            => lit(x.asString)
+  /** One stage row, built and run as the Runner builds and runs it: the
+    * `literal` inputs overridden by the row's non-NULL `wired` values,
+    * then `prepare` and `process`. The NULL rule lives here, once for
+    * every block: a required input whose wired value is NULL, with no
+    * literal or default to fill it, yields a NULL output (None) and the
+    * block is not called; any other `prepare` failure throws, failing
+    * the stage. */
+  def runRow(op: BlockOp, literal: Map[String, PValue], wired: Map[String, PValue],
+      idx: Int, ctx: BlockCtx, slug: String): Option[BlockResult] = {
+    val row = literal ++ wired.filter(_._2 != PNull)
+    def unfilled(p: PropSpec): Boolean = p.required && p.default.isEmpty &&
+      wired.get(p.name).contains(PNull) &&
+      !(row.get(p.name) ++ op.defaults.get(p.name)).exists(_ != PNull)
+    if (op.props.exists(unfilled)) None
+    else op.prepare(row) match {
+      case Left(err) => throw new IllegalArgumentException(s"$slug: $err")
+      case Right(in) => Some(op.process(InputRow(idx, in), ctx))
+    }
   }
 
+  /** A stage cell as a wired value: binary stays bytes (a string
+    * round-trip would corrupt non-UTF8 payloads like PNG/MP3), a fan-in
+    * array becomes a PArr without its NULL elements, NULL is PNull. */
+  private def cellValue(cell: Any): PValue = cell match {
+    case null                        => PNull
+    case b: Array[Byte]              => PBytes(b)
+    case xs: scala.collection.Seq[_] => PArr(xs.iterator.filter(_ != null).map(cellValue).toSeq)
+    case x                           => PStr(x.toString)
+  }
+
+  /** Every Distributed block runs through [[runRow]], one call per row,
+    * each wired column typed as `Wiring.resolveWired` types it. The call
+    * is a deterministic UDF over the row's columns, so a projection that
+    * drops the output (e.g. a count) does not run the block. */
   private def execute(op: BlockOp, blockSpec: BlockSpec, in: DataFrame,
-      typedCol: String => Column, conf: BulkConfig): DataFrame = op match {
-    case e: ExprBlockOp =>
-      // one codegen'd select over the whole stage
-      normalize(in.select(col("idx"),
-        e.outputColumn(typedCol).cast("binary").as("value")))
-    case _ =>
-      // generic Distributed block: mapPartitions, rows streamed through
-      // the op. Columns stay typed by the prop's schema type — a TFile
-      // prop travels as BinaryType end-to-end (a string round-trip would
-      // silently corrupt non-UTF8 payloads like PNG/MP3), an array prop
-      // as array<binary>/array<string> (so join_videos' fan-in arrives
-      // as a real PArr), everything else as string re-cast by
-      // PropSpec.castTo (so an int prop arrives as PInt, not a
-      // stringly-typed PStr).
-      val ctx = conf.ctx
-      val props = op.props
-      val propCols = props.map { p =>
-        val c = p.typ match {
-          case TFile =>
-            if (in.columns.contains(p.name))
-              coalesce(col(p.name).cast("binary"), typedCol(p.name).cast("binary"))
-            else typedCol(p.name).cast("binary")
-          case TArr(TFile) =>
-            // fan-in of binary stage values: keep the bytes as bytes
-            if (in.columns.contains(p.name)) col(p.name).cast("array<binary>")
-            else lit(null).cast("array<binary>")
-          case _ => typedCol(p.name)
+      wiredNames: Seq[String], conf: BulkConfig): DataFrame = {
+    val ctx = conf.ctx
+    val literal = blockSpec.input
+    val slug = blockSpec.slug
+    val isArray = blockSpec.inputConfig.exists(_.isArray)
+    // the Java UDF1 form: a typed Scala udf cannot take a struct as a Row
+    val outputs = udf(new org.apache.spark.sql.api.java.UDF1[Row, Seq[Array[Byte]]] {
+      def call(r: Row): Seq[Array[Byte]] = {
+        val wired = wiredNames.zipWithIndex.map { case (name, i) =>
+          val v = cellValue(r.get(i + 1))
+          name -> Wiring.typeWired(op.propsByName.get(name), v,
+            v.asSeq.headOption.fold(Array.emptyByteArray)(_.asBytes))
+        }.toMap
+        runRow(op, literal, wired, r.getInt(0), ctx, slug) match {
+          case None                 => Seq(null)
+          case Some(res) if isArray => Seq(res.outputs.headOption.getOrElse(Array.emptyByteArray))
+          case Some(res)            => res.outputs
         }
-        c.as(p.name)
       }
-      val ds = in.select((col("idx").cast("int").as("idx") +: propCols): _*)
-      val slug = blockSpec.slug
-      import conf.spark.implicits._
-      val raw = ds.mapPartitions { rows =>
-        rows.map { r =>
-          val m = props.zipWithIndex.flatMap { case (p, i) =>
-            Option(r.get(i + 1)).map { v =>
-              val raw: PValue = v match {
-                case b: Array[Byte] => PBytes(b)
-                case xs: scala.collection.Seq[_] => PArr(xs.map {
-                  case b: Array[Byte] => PBytes(b)
-                  case x              => PStr(String.valueOf(x))
-                }.toSeq)
-                case s => PStr(s.toString)
-              }
-              p.name -> p.cast(raw)
-            }
-          }.toMap
-          val prepared = op.prepare(m).fold(
-            e => throw new IllegalArgumentException(s"$slug: $e"), identity)
-          val res = op.process(InputRow(r.getInt(0), prepared), ctx)
-          (r.getInt(0), res.outputs)
-        }
-      }.toDF("src_idx", "outs")
-      // E13 at frame scale (Runner.scala's sortedResults loop): fan-out
-      // mode keeps output[0] at the input index; otherwise every buffer
-      // becomes an independent row, re-indexed contiguously by
-      // (input idx, buffer position) — how audio_chunk's N chunks become
-      // N rows (reference pipeline.go:523-601).
-      if (blockSpec.inputConfig.exists(_.isArray))
-        normalize(raw.select(col("src_idx").as("idx"),
-          coalesce(element_at(col("outs"), 1),
-            lit(Array.empty[Byte])).as("value")))
-      else explodeOutputs(raw)
+    }, ArrayType(BinaryType))
+    val raw = in.select(col("idx").cast("int").as("src_idx"),
+      outputs(struct((col("idx").cast("int") +: wiredNames.map(col(_))): _*)).as("outs"))
+    // E13 at frame scale (Runner.scala's sortedResults loop): fan-out
+    // mode keeps output[0] at the input index; otherwise every buffer
+    // becomes an independent row, re-indexed contiguously by
+    // (input idx, buffer position) — how audio_chunk's N chunks become
+    // N rows (reference pipeline.go:523-601).
+    if (isArray) normalize(raw.select(col("src_idx").as("idx"), col("outs")(0).as("value")))
+    else explodeOutputs(raw)
   }
 
   /** Explode per-row output buffers to independent rows with a global

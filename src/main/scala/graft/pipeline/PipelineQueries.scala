@@ -2,29 +2,38 @@ package graft.pipeline
 
 import graft.Tables.t
 import graft.pipeline.blocks.TextBlocks
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-gate queries that put the pipeline BLOCK semantics under the
-  * DuckDB hash-compare: the exact `outputColumn` expressions BulkRunner
-  * executes (text_replace/wrap_text — reference blocks #17/#18; specs
-  * pin them to the `process` form the Runner calls) and the
-  * JsonPathExtract Catalyst expression behind E2 wiring, applied
-  * corpus-wide. One parquet scan, zero shuffles, fully codegen'd — at
-  * 100 TB these are embarrassingly parallel map stages. */
+  * DuckDB hash-compare: text_replace and wrap_text (reference blocks
+  * #17/#18) run per document through [[BulkRunner.runRow]], the row
+  * function every BulkRunner stage runs, and the JsonPathExtract
+  * Catalyst expression behind E2 wiring, applied corpus-wide. One
+  * parquet scan and no shuffle before the final sort — at 100 TB these
+  * are embarrassingly parallel map stages. */
 object PipelineQueries {
 
   /** Blocks #17+#18 composed over every document: wrap_text(prefix/
-    * suffix) of text_replace(text, "data", "[data]"). */
+    * suffix) of text_replace(text, "data", "[data]"), one UDF over the
+    * scan (no stage frames, zip or count). */
   def plTextOps(spark: SparkSession, dir: String): DataFrame = {
-    val in: Map[String, Column] = Map(
-      "text" -> col("text"), "old" -> lit("data"), "new" -> lit("data"),
-      "prefix" -> lit("["), "suffix" -> lit("]"))
-    val replaced = TextBlocks.TextReplace.outputColumn(in)
-    val wrapped = TextBlocks.WrapText.outputColumn(Map(
-      "text" -> replaced, "prefix" -> lit("<<"), "suffix" -> lit(">>")))
+    val replace = Map[String, PValue]("old" -> PStr("data"), "new" -> PStr("data"),
+      "prefix" -> PStr("["), "suffix" -> PStr("]"))
+    val wrap = Map[String, PValue]("prefix" -> PStr("<<"), "suffix" -> PStr(">>"))
+    val ctx = Clients.mockCtx()
+    def step(op: BlockOp, lits: Map[String, PValue], text: PValue): PValue =
+      BulkRunner.runRow(op, lits, Map("text" -> text), 0, ctx, op.id)
+        .fold[PValue](PNull)(res => PBytes(res.outputs.head))
+    val render = udf { (text: String) =>
+      step(TextBlocks.WrapText, wrap,
+        step(TextBlocks.TextReplace, replace, Option(text).fold[PValue](PNull)(PStr))) match {
+        case PNull => null
+        case out   => out.asString
+      }
+    }
     t(spark, dir, "documents")
-      .select(col("doc_id"), wrapped.as("rendered"))
+      .select(col("doc_id"), render(col("text")).as("rendered"))
       .withColumn("n_marks",
         size(split(col("rendered"), "\\[data\\]", -1)) - 1)
       .orderBy("doc_id")
@@ -47,8 +56,8 @@ object PipelineQueries {
   /** The ENGINE itself under the oracle: a two-block pipeline spec
     * (wrap_text → text_replace) executed by the data-plane BulkRunner
     * over the whole documents corpus as the initial stage — spec
-    * parsing, wiring, zip, and the expr execution path all sit inside
-    * the hash-compared result. */
+    * parsing, wiring, zip, and the row executor all sit inside the
+    * hash-compared result. */
   def plBulkPipeline(spark: SparkSession, dir: String): DataFrame = {
     val spec = PipelineSpec("pl-bulk", "t",
       "corpus-wide wrap+replace via the data-plane executor", Seq(

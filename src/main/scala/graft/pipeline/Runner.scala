@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicInteger
-import scala.concurrent.{ExecutionContext, Future}
+import scala.concurrent.ExecutionContext
 import scala.util.Try
 
 /** Pipeline execution engine: the reference's PipelineData.Process loop
@@ -79,12 +79,6 @@ object Runner {
     val report = runLoop(spec, start, conf, processingId, ledger, depth = 0)
     saveLedger(spec, conf, processingId, report, ledger.toSeq)
     report
-  }
-
-  def processAsync(spec: PipelineSpec, start: StartInput, conf: RunConfig)(
-      implicit ec: ExecutionContext): (String, Future[RunReport]) = {
-    val pid = newProcessingId()
-    (pid, Future(process(spec, start, conf, pid)))
   }
 
   /** Resume from a checkpointed processing at `fromSlug` (§3.2):

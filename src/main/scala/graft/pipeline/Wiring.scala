@@ -102,12 +102,7 @@ object Wiring {
             val raw: PValue =
               if (w.arrayInput) PArr(buffers.map(b => PBytes(b)).toSeq)
               else PBytes(buf)
-            val casted = props.get(name) match {
-              case Some(ps) =>
-                try ps.cast(raw)
-                catch { case _: Exception => PStr(new String(buf, "UTF-8")) }
-              case None => raw
-            }
+            val casted = typeWired(props.get(name), raw, buf)
             w.jsonPath match {
               case None => acc += Map(name -> casted)
               case Some(path) =>
@@ -143,6 +138,16 @@ object Wiring {
     }
     Right(acc.toSeq)
   }
+
+  /** A wired value typed by the receiving property's schema. A value the
+    * schema cannot cast passes as the UTF-8 text of `buf`, the origin
+    * buffer it came from; a key with no schema passes untyped. */
+  def typeWired(ps: Option[PropSpec], raw: PValue, buf: => Array[Byte]): PValue =
+    ps match {
+      case Some(p) =>
+        try p.cast(raw) catch { case _: Exception => PStr(new String(buf, "UTF-8")) }
+      case None => raw
+    }
 
   private def isStarPath(path: String): Boolean =
     try JsonPath.compile(path).contains(JsonPath.Star)
@@ -219,19 +224,14 @@ object Wiring {
     * shorter LATER property fills the value the control plane would
     * leave to the block's literal/default.)
     *
+    * The zipped rows come in no particular order: each carries its idx.
     * Each frame is persisted and counted exactly once; everything after
-    * runs off the persisted data (the previous version counted each
-    * frame up to three times, recomputing upstream lineage per count).
+    * runs off the persisted data. Returns the zipped frame and a cleanup
+    * thunk that unpersists those frames: call it once the zipped stage
+    * has been materialized (e.g. checkpointed to parquet), so a long
+    * pipeline does not accumulate one cached frame per wired property.
     */
-  def zipByIdx(properties: Map[String, DataFrame]): DataFrame =
-    zipByIdxWithCleanup(properties)._1
-
-  /** [[zipByIdx]] plus a cleanup thunk that unpersists the interned
-    * property frames — call it once the zipped stage has been
-    * materialized (e.g. checkpointed to parquet), so a long pipeline
-    * does not accumulate one cached frame per wired property. */
-  def zipByIdxWithCleanup(
-      properties: Map[String, DataFrame]): (DataFrame, () => Unit) = {
+  def zipByIdx(properties: Map[String, DataFrame]): (DataFrame, () => Unit) = {
     require(properties.nonEmpty)
     val renamed = properties.map { case (name, df) =>
       name -> df.select(col("idx"), col("value").as(name))
@@ -254,7 +254,6 @@ object Wiring {
               coalesce(col(name), col(s"__last_$name")).as(name))
       }
     }.reduce((a, b) => a.join(b, Seq("idx"), "inner"))
-      .orderBy("idx")
     (zipped, () => renamed.values.foreach(_.unpersist(false)))
   }
 }

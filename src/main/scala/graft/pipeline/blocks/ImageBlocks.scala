@@ -9,9 +9,9 @@ import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutput
 
 /** Image operators (#6-8) over java.awt (headless, no external deps —
   * offline build). Pure per-row compute → Distributed: the Runner runs
-  * fan-out rows concurrently in-process, and BulkRunner ships them
-  * through mapPartitions, so a million-image fan-out runs as a normal
-  * Spark stage.
+  * fan-out rows concurrently in-process, and BulkRunner runs them one
+  * call per row of a Spark stage, so a million-image fan-out runs as a
+  * normal Spark stage.
   *
   * Every decode and encode runs over in-memory ImageIO streams: the
   * `InputStream`/`OutputStream` overloads would copy each image through
@@ -102,6 +102,20 @@ object ImageBlocks {
     override val props = Seq(
       PropSpec("image", TFile, required = true),
       PropSpec("sigma", TNumber, default = Some(PNum(1.5))))
+
+    /** Largest accepted `sigma` (radius 3 000, a 6 001-tap kernel),
+      * checked with finiteness before any decode: the work grows as
+      * w·h·(6σ + 1) taps, and past ≈7.2e8 the radius overflows an int.
+      * A negative `sigma` still clamps to 0.01. */
+    val MaxSigma = 1000.0
+
+    override def prepare(row: Map[String, PValue]): Either[String, Map[String, PValue]] =
+      super.prepare(row).flatMap { in =>
+        val sigma = in("sigma").asDouble
+        if (!java.lang.Double.isFinite(sigma) || sigma > MaxSigma)
+          Left(s"sigma: must be finite and at most $MaxSigma, got $sigma")
+        else Right(in)
+      }
 
     override def process(row: InputRow, ctx: BlockCtx): BlockResult = {
       val src = decode(row.bytes("image"))

@@ -1,14 +1,10 @@
 package graft.pipeline.blocks
 
 import graft.pipeline._
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
-/** Pure-text operators (reference blocks #17-20) — each implemented
-  * twice on purpose: `process` is the exact Scala port the Runner calls
-  * per row, `outputColumn` the codegen'd Column form that BulkRunner
-  * and the `pl_text_ops` gate query run over whole DataFrames
-  * ("functions, not UDFs"). Specs assert the two agree.
+/** Pure-text operators (reference blocks #17-20). `process` is the one
+  * implementation: the Runner calls it per fan-out row, and BulkRunner
+  * and the `pl_text_ops` gate query call it per DataFrame row.
   */
 object TextBlocks {
 
@@ -16,7 +12,6 @@ object TextBlocks {
     * ("spaces added automatically by Transcription service",
     * block_text_replace.go:66-76). */
   private def trimLeftSpaces(s: String): String = s.dropWhile(_ == ' ')
-  private def ltrimSp(c: Column): Column = ltrim(c, " ")
 
   /** Go strings.ReplaceAll: an empty `old` matches at the start and
     * after every rune (Java's replace would split surrogate pairs). */
@@ -29,7 +24,7 @@ object TextBlocks {
     }
 
   /** #17 text_replace (block_text_replace.go:49-79). */
-  object TextReplace extends ExprBlockOp {
+  object TextReplace extends BlockOp {
     override val id = "text_replace"
     override val description = "Replace text in a string"
     override val props = Seq(
@@ -46,21 +41,10 @@ object TextBlocks {
       val wrapped = trimLeftSpaces(row.str("prefix")) + nw + trimLeftSpaces(row.str("suffix"))
       BlockResult.text(replaceAll(text, old, wrapped))
     }
-
-    override def outputColumn(in: String => Column): Column = {
-      val text = ltrimSp(in("text"))
-      val old = ltrimSp(in("old"))
-      val wrapped = concat(ltrimSp(in("prefix")), ltrimSp(in("new")), ltrimSp(in("suffix")))
-      // Spark's replace returns the text unchanged for an empty `old`;
-      // split(text, "") yields one element per code point.
-      val everyRune = when(text === "", wrapped).otherwise(concat(wrapped,
-        array_join(transform(split(text, ""), c => concat(c, wrapped)), "")))
-      when(old === "", everyRune).otherwise(replace(text, old, wrapped))
-    }
   }
 
   /** #18 wrap_text / BlockTextAddPrefixOrSuffix (block_wrap_text.go:49-74). */
-  object WrapText extends ExprBlockOp {
+  object WrapText extends BlockOp {
     override val id = "wrap_text"
     override val description = "Add prefix or suffix to a text"
     override val props = Seq(
@@ -72,15 +56,12 @@ object TextBlocks {
       BlockResult.text(
         trimLeftSpaces(row.str("prefix")) + trimLeftSpaces(row.str("text")) +
           trimLeftSpaces(row.str("suffix")))
-
-    override def outputColumn(in: String => Column): Column =
-      concat(ltrimSp(in("prefix")), ltrimSp(in("text")), ltrimSp(in("suffix")))
   }
 
   /** #19 join_strings (block_join_strings.go:48-80) — fan-in consumer
     * (`array_input: true` wiring); single-item short-circuit is
     * semantically free (join of one element is itself). */
-  object JoinStrings extends ExprBlockOp {
+  object JoinStrings extends BlockOp {
     override val id = "join_strings"
     override val description = "Join strings with a separator"
     override val props = Seq(
@@ -90,16 +71,6 @@ object TextBlocks {
     override def process(row: InputRow, ctx: BlockCtx): BlockResult = {
       val xs = row.props.getOrElse("strings", PNull).asSeq.map(_.asString)
       BlockResult.text(xs.mkString(row.str("separator")))
-    }
-
-    override def outputColumn(in: String => Column): Column = {
-      // functions.array_join only takes a literal delimiter; the
-      // underlying Catalyst ArrayJoin accepts a column.
-      import org.apache.spark.sql.GraftBridge
-      GraftBridge.column(
-        org.apache.spark.sql.catalyst.expressions.ArrayJoin(
-          GraftBridge.expression(in("strings")),
-          GraftBridge.expression(in("separator")), None))
     }
   }
 

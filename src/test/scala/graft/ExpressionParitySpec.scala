@@ -257,13 +257,13 @@ class ExpressionParitySpec extends AnyFunSuite {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val runs = (0 until 6).map { i =>
-      Runner.processAsync(spec,
+      scala.concurrent.Future(Runner.process(spec,
         Runner.StartInput(input = Map(
           "text" -> PStr(s"payload-$i"), "prefix" -> PStr("("), "suffix" -> PStr(")"))),
-        conf)
+        conf))
     }
-    val reports = runs.map { case (_, f) =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf) }
+    val reports = runs.map(f =>
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
     reports.zipWithIndex.foreach { case (r, i) =>
       assert(r.status == Runner.Completed)
       assert(new String(r.outputs("wrap").head._2, "UTF-8") == s"(payload-$i)")

@@ -1,14 +1,11 @@
 package graft.pipeline
 
-import graft.SparkTestSession
 import graft.pipeline.blocks._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-operator unit tests, one section per reference unit file
   * (test/unit/block_*_test.go). */
 class BlocksSpec extends AnyFunSuite {
-  import SparkTestSession.spark
-
   private val ctx = Clients.mockCtx()
 
   private def row(kvs: (String, PValue)*): Map[String, PValue] = kvs.toMap
@@ -27,6 +24,10 @@ class BlocksSpec extends AnyFunSuite {
       "text" -> PStr(" hello NAME, NAME!"), "old" -> PStr(" NAME"),
       "new" -> PStr(" Ada"), "prefix" -> PStr(" <"), "suffix" -> PStr(">"))
     assert(new String(r.outputs.head, "UTF-8") == "hello <Ada>, <Ada>!")
+    val every = runPrepared(TextBlocks.TextReplace,
+      "text" -> PStr(" a b a"), "old" -> PStr("a"), "new" -> PStr("X"),
+      "prefix" -> PStr("("), "suffix" -> PStr(")"))
+    assert(new String(every.outputs.head, "UTF-8") == "(X) b (X)")
   }
 
   test("text_replace with an empty old follows Go's strings.ReplaceAll") {
@@ -35,6 +36,7 @@ class BlocksSpec extends AnyFunSuite {
         "old" -> PStr(old), "new" -> PStr("X")).outputs.head, "UTF-8")
     assert(replaced("ab", "") == "XaXbX")
     assert(replaced("ab", "  ") == "XaXbX") // left-trimmed to empty
+    assert(replaced(" abc", "  ") == "XaXbXcX") // the text is trimmed too
     assert(replaced("", "") == "X")
     // a non-BMP character is one rune: its surrogate pair stays whole
     assert(replaced("a\uD83D\uDE00b", "") == "XaX\uD83D\uDE00XbX")
@@ -46,6 +48,9 @@ class BlocksSpec extends AnyFunSuite {
     // TrimLeft removes LEADING spaces of each part only ("A " keeps its
     // trailing space, " Z" becomes "Z") — reference parity.
     assert(new String(r.outputs.head, "UTF-8") == "A bodyZ")
+    val plain = runPrepared(TextBlocks.WrapText,
+      "text" -> PStr("mid"), "prefix" -> PStr("<<"), "suffix" -> PStr(">>"))
+    assert(new String(plain.outputs.head, "UTF-8") == "<<mid>>")
   }
 
   test("join_strings joins with separator; single item short-circuits") {
@@ -53,44 +58,12 @@ class BlocksSpec extends AnyFunSuite {
       "strings" -> PArr(Seq(PStr("a"), PStr("b"), PStr("c"))),
       "separator" -> PStr("-"))
     assert(new String(r.outputs.head, "UTF-8") == "a-b-c")
+    val two = runPrepared(TextBlocks.JoinStrings,
+      "strings" -> PArr(Seq(PStr("x"), PStr("y"))), "separator" -> PStr("+"))
+    assert(new String(two.outputs.head, "UTF-8") == "x+y")
     val single = runPrepared(TextBlocks.JoinStrings,
       "strings" -> PArr(Seq(PStr("only"))), "separator" -> PStr("-"))
     assert(new String(single.outputs.head, "UTF-8") == "only")
-  }
-
-  test("expr blocks: process() and outputColumn() agree") {
-    import org.apache.spark.sql.functions.{col, lit}
-    val cases: Seq[(ExprBlockOp, Map[String, PValue])] = Seq(
-      TextBlocks.TextReplace -> row("text" -> PStr(" a b a"),
-        "old" -> PStr("a"), "new" -> PStr("X"),
-        "prefix" -> PStr("("), "suffix" -> PStr(")")),
-      TextBlocks.TextReplace -> row("text" -> PStr("ab"),
-        "old" -> PStr(""), "new" -> PStr("X")),
-      TextBlocks.TextReplace -> row("text" -> PStr(" abc"),
-        "old" -> PStr("  "), "new" -> PStr("-")),
-      TextBlocks.TextReplace -> row("text" -> PStr("a\uD83D\uDE00b"),
-        "old" -> PStr(""), "new" -> PStr("X")),
-      TextBlocks.TextReplace -> row("text" -> PStr(""),
-        "old" -> PStr(""), "new" -> PStr("X")),
-      TextBlocks.WrapText -> row("text" -> PStr("mid"),
-        "prefix" -> PStr("<<"), "suffix" -> PStr(">>")),
-      TextBlocks.JoinStrings -> row(
-        "strings" -> PArr(Seq(PStr("x"), PStr("y"))), "separator" -> PStr("+")))
-    cases.foreach { case (op, input) =>
-      val prepared = op.prepare(input).toOption.get
-      val direct = new String(op.process(InputRow(0, prepared), ctx).outputs.head, "UTF-8")
-      val viaColumn = {
-        val in: String => org.apache.spark.sql.Column = name =>
-          prepared.get(name) match {
-            case Some(PArr(vs)) => lit(vs.map(_.asString).toArray)
-            case Some(v)        => lit(v.asString)
-            case None           => lit("")
-          }
-        spark.range(1).select(op.outputColumn(in).as("v"))
-          .collect().head.getString(0)
-      }
-      assert(direct == viaColumn, s"divergence in ${op.id}")
-    }
   }
 
   test("format_string substitutes named vars; arrays join with ', '") {

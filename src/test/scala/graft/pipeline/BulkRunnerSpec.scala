@@ -94,6 +94,70 @@ class BulkRunnerSpec extends AnyFunSuite {
     assert(decoded.getWidth == 2 && decoded.getHeight == 2)
   }
 
+  test("a NULL wired input yields a NULL row for every block; fan-in drops it") {
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("idx",
+        org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("value",
+        org.apache.spark.sql.types.BinaryType)))
+    val img = new java.awt.image.BufferedImage(
+      4, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val baos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", baos)
+    val initial = spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row(0, "a x".getBytes("UTF-8")),
+      org.apache.spark.sql.Row(1, null),
+      org.apache.spark.sql.Row(2, "b".getBytes("UTF-8")),
+      org.apache.spark.sql.Row(3, baos.toByteArray)), schema)
+    def fanOut(id: String, slug: String, origin: String,
+        input: Map[String, PValue], prop: String) =
+      BlockSpec(id, slug, s"$id over every row",
+        input = input, inputConfig = Some(InputConfig(isArray = true,
+          property = Map(prop -> PropertyWiring(origin)))))
+    val nullSpec = PipelineSpec("bulk-null", "t", "d", Seq(
+      fanOut("wrap_text", "wrap", "text",
+        Map("prefix" -> PStr("<"), "suffix" -> PStr(">")), "text"),
+      BlockSpec("join_strings", "join", "join the wrapped rows",
+        input = Map("separator" -> PStr("|")),
+        inputConfig = Some(InputConfig(property = Map(
+          "strings" -> PropertyWiring("wrap", arrayInput = true))))),
+      fanOut("image_resize", "resize", "image",
+        Map("width" -> PInt(2L), "height" -> PInt(2L)), "image")))
+    val out = BulkRunner.run(nullSpec, Map(
+        "text" -> initial.where(col("idx") < 3),
+        "image" -> initial.where(col("idx") === 1 || col("idx") === 3)),
+      BulkRunner.BulkConfig(spark, registry, Clients.mockCtx()))
+    def rows(slug: String) = out(slug).orderBy("idx").collect().toSeq
+      .map(r => r.getInt(0) -> Option(r.getAs[Array[Byte]]("value")))
+
+    assert(rows("wrap").map { case (i, v) => i -> v.map(new String(_, "UTF-8")) } ==
+      Seq(0 -> Some("<a x>"), 1 -> None, 2 -> Some("<b>")))
+    assert(rows("join").map(_._2.map(new String(_, "UTF-8"))) == Seq(Some("<a x>|<b>")))
+    val resized = rows("resize")
+    assert(resized.map(_._1) == Seq(1, 3) && resized.head._2.isEmpty,
+      s"the NULL image must yield a NULL row: $resized")
+    val decoded = javax.imageio.ImageIO.read(
+      new java.io.ByteArrayInputStream(resized(1)._2.get))
+    assert(decoded.getWidth == 2 && decoded.getHeight == 2)
+  }
+
+  test("every other prepare failure still fails the stage") {
+    def failure(block: BlockSpec): String = {
+      val e = intercept[Exception] {
+        BulkRunner.run(PipelineSpec("bulk-bad", "t", "d", Seq(block)), Map.empty,
+          BulkRunner.BulkConfig(spark, registry, Clients.mockCtx()))(block.slug).collect()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" / ")
+    }
+    // a required input that is neither wired nor given is not a NULL row
+    assert(failure(BlockSpec("wrap_text", "wrap", "no text at all",
+      input = Map("prefix" -> PStr("<")))).contains("wrap: missing required input 'text'"))
+    assert(failure(BlockSpec("image_blur", "blur", "a sigma past the bound",
+      input = Map("image" -> PBytes("x".getBytes("UTF-8")), "sigma" -> PNum(1e9))))
+      .contains("blur: sigma"))
+  }
+
   /** Stub ffmpeg: copies -i input to the output path; expands a
     * segment%03d pattern to three numbered copies (audio_chunk shape). */
   private def stubFfmpeg(): java.nio.file.Path = {

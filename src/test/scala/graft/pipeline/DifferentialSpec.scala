@@ -95,7 +95,8 @@ class DifferentialSpec extends AnyFunSuite {
   /** The PNG byte-safety test and the 20-pipeline loop above are point
     * samples; this is the property: over ≥100 seeded-random specs —
     * text chains with star fan-out, misaligned two-origin zips,
-    * fan-in joins, and non-UTF8 binary literal chains — the
+    * fan-in joins, non-UTF8 binary literal chains, literal-array joins
+    * and templates over a wired key outside the schema — the
     * control-plane Runner and the data-plane BulkRunner produce
     * byte-identical output at EVERY stage. */
   test("property: executors agree byte-for-byte on 100 randomized specs") {
@@ -190,8 +191,29 @@ class DifferentialSpec extends AnyFunSuite {
           inputConfig = Some(InputConfig(property = Map(
             "file" -> PropertyWiring(s"b${i - 1}")))))))
 
-    val genSpec: Gen[PipelineSpec] =
-      Gen.frequency(5 -> genTextChain, 3 -> genZip, 2 -> genBinary)
+    // family 4: join_strings over a literal array (no wiring at all)
+    val genLiteralJoin: Gen[PipelineSpec] = for {
+      words <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, genWord))
+      sep <- genWord
+    } yield PipelineSpec("fuzz-lit-join", "t", "d", Seq(
+      BlockSpec("join_strings", "join", "join the literal fuzz words",
+        input = Map("strings" -> PArr(words.map(PStr)), "separator" -> PStr(sep)))))
+
+    // family 5: format_string_from_object over a wired key that is not
+    // in its schema (the template reads it from the whole input map)
+    val genFormat: Gen[PipelineSpec] = for {
+      body <- genText
+      pre <- Gen.alphaNumStr; suf <- Gen.alphaNumStr
+    } yield PipelineSpec("fuzz-format", "t", "d", Seq(
+      BlockSpec("upload_file", "src", "carry the fuzz body text",
+        input = Map("file" -> PStr(body))),
+      BlockSpec("format_string_from_object", "format", "format the wired body",
+        input = Map("template" -> PStr(s"$pre{body}$suf")),
+        inputConfig = Some(InputConfig(property = Map(
+          "body" -> PropertyWiring("src")))))))
+
+    val genSpec: Gen[PipelineSpec] = Gen.frequency(5 -> genTextChain,
+      3 -> genZip, 2 -> genBinary, 1 -> genLiteralJoin, 1 -> genFormat)
 
     def agree(spec: PipelineSpec): Prop = {
       val ctrl = Runner.process(spec, Runner.StartInput(),

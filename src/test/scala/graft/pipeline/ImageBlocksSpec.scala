@@ -263,6 +263,25 @@ class ImageBlocksSpec extends AnyFunSuite {
     }
   }
 
+  test("image_blur rejects a sigma that is not finite or past the bound, before decoding") {
+    val spec = PipelineSpec("image-sigma", "t", "d", Seq(
+      BlockSpec("image_blur", "blur", "blur the posted image")))
+    val conf = Runner.RunConfig(null, BlockRegistry.standard(),
+      new CheckpointStore(java.nio.file.Files.createTempDirectory("graft-sigma").toString),
+      ctx)
+    // a multipart field arrives as text, so "Infinity" and "NaN" reach the block
+    for (sigma <- Seq(PNum(1e9), PStr("Infinity"), PStr("NaN"))) {
+      val run = Future(Runner.process(spec, Runner.StartInput(input = Map(
+        "image" -> PBytes("hello".getBytes("UTF-8")), "sigma" -> sigma)), conf))(
+        ExecutionContext.global)
+      val report = Await.result(run, 60.seconds)
+      assert(report.status == Runner.Failed(s"blur: sigma: must be finite and at most " +
+        s"${ImageBlocks.ImageBlur.MaxSigma}, got ${sigma.asDouble}"), sigma)
+    }
+    assert(ImageBlocks.ImageBlur.prepare(Map("image" -> PBytes(Array[Byte](1)),
+      "sigma" -> PNum(-1e9))).isRight, "a negative sigma still clamps")
+  }
+
   test("an undecodable payload fails the run with the reference implementation's message") {
     val spec = PipelineSpec("image-errors", "t", "d", Seq(
       BlockSpec("image_blur", "blur", "blur the posted image")))

@@ -200,10 +200,9 @@ class RunnerSpec extends AnyFunSuite {
     // approve → completes
     val (conf, _, mod, _) = freshConf()
     val spec = parse(specJson)
-    val (pid, fut) = {
-      implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
-      processAsync(spec, StartInput(), conf)
-    }
+    val pid = newProcessingId()
+    val fut = scala.concurrent.Future(
+      process(spec, StartInput(), conf, pid))(scala.concurrent.ExecutionContext.global)
     mod.enqueue(ModerationUpdate("approve", 0, pid, "send-review"))
     val report = scala.concurrent.Await.result(fut, scala.concurrent.duration.Duration.Inf)
     assert(report.status == Completed)
@@ -213,10 +212,9 @@ class RunnerSpec extends AnyFunSuite {
 
     // decline → stops before publish
     val (conf2, _, mod2, _) = freshConf()
-    val (pid2, fut2) = {
-      implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
-      processAsync(spec, StartInput(), conf2)
-    }
+    val pid2 = newProcessingId()
+    val fut2 = scala.concurrent.Future(
+      process(spec, StartInput(), conf2, pid2))(scala.concurrent.ExecutionContext.global)
     mod2.enqueue(ModerationUpdate("decline", 0, pid2, "send-review"))
     val report2 = scala.concurrent.Await.result(fut2, scala.concurrent.duration.Duration.Inf)
     assert(report2.status == Stopped)
@@ -249,10 +247,9 @@ class RunnerSpec extends AnyFunSuite {
         |]}""".stripMargin
     val spec = parse(specJson)
     val (conf, llm, mod, _) = freshConf()
-    val (pid, fut) = {
-      implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
-      processAsync(spec, StartInput(), conf)
-    }
+    val pid = newProcessingId()
+    val fut = scala.concurrent.Future(
+      process(spec, StartInput(), conf, pid))(scala.concurrent.ExecutionContext.global)
     // First pass: approve 0,2,3 — regenerate index 1 (targets 'images').
     mod.enqueue(ModerationUpdate("approve", 0, pid, "send-review"))
     mod.enqueue(ModerationUpdate("regenerate", 1, pid, "send-review", "images"))

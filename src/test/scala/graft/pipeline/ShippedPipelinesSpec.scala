@@ -138,11 +138,9 @@ class ShippedPipelinesSpec extends AnyFunSuite {
     assume(graft.pipeline.blocks.ImageBlocks.ImageAddText.available(conf.ctx),
       "font rendering unavailable")
     llm.chatResponse = quoteAnalysis
-    val (pid, fut) = {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      processAsync(spec, StartInput(), conf)
-    }
+    val pid = newProcessingId()
+    val fut = scala.concurrent.Future(
+      process(spec, StartInput(), conf, pid))(scala.concurrent.ExecutionContext.global)
     // Approve the script and all four segment images.
     mod.enqueue(ModerationUpdate("approve", 0, pid, "review-script"))
     (0 to 3).foreach(i => mod.enqueue(ModerationUpdate("approve", i, pid, "review-images")))
