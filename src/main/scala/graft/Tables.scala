@@ -62,6 +62,18 @@ object Tables {
       // aggregates exclusively.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (1 << 18).toString)
+      // Spark's generated-code cache is JVM-wide and LRU, 100 entries
+      // by default, and holds each class once per class loader (driver
+      // and executor). One noop-write pass over all 58 registered
+      // queries at sf0.01 leaves 654 entries; the six dedup_scaled
+      // queries alone leave 135. At 100 every repeat of a query
+      // compiles its classes again and its tasks restart in the
+      // bytecode interpreter; 1024 (the next power of two above
+      // 1.5 × 654) keeps every registered query's code for the session.
+      // Spark reads this static setting once per JVM, when code is
+      // first generated, so a session built without this function that
+      // generates code first fixes the cache at 100.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
 
   /** Exact row count from parquet footer metadata — a driver-side footer
     * read, no data scan. Used where a plan needs a corpus-size constant

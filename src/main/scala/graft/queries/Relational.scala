@@ -271,14 +271,17 @@ object Relational {
 
   /** PIVOT: per-user event-type counts as columns (explicit value list
     * keeps the plan a single pivot aggregate, no extra pass to discover
-    * the domain). */
-  def q16Pivot(spark: SparkSession, dir: String): DataFrame =
+    * the domain). Only the count columns are zero-filled: a NULL
+    * `user_id` stays its own NULL group, as in the oracle. */
+  def q16Pivot(spark: SparkSession, dir: String): DataFrame = {
+    val types = Seq("click", "error", "purchase", "signup", "view")
     t(spark, dir, "events")
       .groupBy("user_id")
-      .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
+      .pivot("event_type", types)
       .count()
-      .na.fill(0L)
+      .na.fill(0L, types)
       .orderBy("user_id")
+  }
 
   /** Exact vs sketch cardinality: exact COUNT(DISTINCT) per event type
     * (oracle-checked); the HLL++ sketch path is asserted within error

@@ -26,7 +26,7 @@ class EdgeGateSpec extends AnyFunSuite {
     "q1_pricing_summary", "q2_revenue_by_nation", "q3_top_orders",
     "q4_priority_exists", "q5_window_top_per_customer",
     "q6_forecast_revenue", "q7_rollup", "q8_set_ops", "q9_anti_join",
-    "q13_above_avg_customers", "q16_pivot")
+    "q13_above_avg_customers")
   private val names = SparkEntry.queries.keySet -- tpchOnly
 
   private def gate(mode: String): Unit = {

@@ -10,10 +10,13 @@
 # named queries (default: every registered query). Before diffing it
 # masks the tokens that differ between any two runs of the same plan:
 # expression ids (`#123`), `plan_id=N`, the hex plan hash in cap
-# observation names, the staged `run-NNNNNN` directory and the checkout
-# path. Prints a unified diff per query that differs and exits non-zero
-# if any does. Plans go to $PLAN_DIFF_OUT (default target/plan_diff);
-# the script only reads `.git`.
+# observation names, the staged `run-NNNNNN` directory, the checkout
+# path, lambda variable suffixes (`lambda x_20`, from a JVM-wide
+# counter), lambda class identities (`$$Lambda$5408/0x…@13cdfd26`) and
+# RDD ids (`MapPartitionsRDD[382]`). Prints a unified diff per query
+# that differs and exits non-zero if any does. Plans go to
+# $PLAN_DIFF_OUT (default target/plan_diff); the script only reads
+# `.git`.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -41,6 +44,9 @@ dump() { # tree side
       -e 's/plan_id=[0-9]+/plan_id=N/g' \
       -e 's#(Stats)/[0-9a-f]{1,8}/#\1/H/#g' \
       -e 's/run-[0-9]{6}/run-N/g' \
+      -e 's/lambda ([A-Za-z]+)_[0-9]+/lambda \1_N/g' \
+      -e 's#\$\$Lambda(\$[0-9]+)?/0x[0-9a-f]+@[0-9a-f]+#$$Lambda/N#g' \
+      -e 's/([A-Za-z]+RDD)\[[0-9]+\]/\1[N]/g' \
       "$f"
   done
 }

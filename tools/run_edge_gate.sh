@@ -3,7 +3,7 @@
 # (null/empty/tab-edged docs, zero embeddings, null/malformed-JSON
 # events), dumps every registered query through Verify, and
 # hash-compares against DuckDB with the same checker the driver uses.
-# Relational q1-q9/q13/q16 read only the symlinked TPC-H tables, so on
+# Relational q1-q9/q13 read only the symlinked TPC-H tables, so on
 # this corpus they repeat the standard gate.
 #
 # The same gate runs inside `sbt test` (EdgeGateSpec); this script is
