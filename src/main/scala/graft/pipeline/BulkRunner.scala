@@ -21,6 +21,15 @@ import org.apache.spark.sql.functions._
   * DriverSide blocks (external clients, moderation, conditional stop)
   * need the control-plane Runner and are rejected up front; the spec
   * suite proves the two executors agree on specs both can run.
+  *
+  * A stage is a lazy plan that persists nothing, so a run leaves no
+  * frame in the session's cache. A stage with one wired property reads
+  * its origin directly; one with several zips them ([[Wiring.zipByIdx]]),
+  * which counts each property frame while the plan is built and, with no
+  * `checkpointDir`, recomputes those frames (and the stages they come
+  * from) wherever the zipped stage is consumed. Across a chain of such
+  * stages the recomputation multiplies at each level; set `checkpointDir`
+  * for such a pipeline, so each stage is computed once and read back.
   */
 object BulkRunner {
 
@@ -28,8 +37,8 @@ object BulkRunner {
       spark: SparkSession,
       registry: BlockRegistry,
       ctx: BlockCtx,
-      /** Stage-checkpoint root (parquet per stage); None = in-memory
-        * lineage only. */
+      /** Stage-checkpoint root (parquet per stage): each stage is written,
+        * then read back, cutting the lineage. None = lineage only. */
       checkpointDir: Option[String] = None,
       /** E12 at data scale: hydrate stages whose checkpoint already
         * exists (complete `_SUCCESS` marker AND a manifest matching the
@@ -125,13 +134,8 @@ object BulkRunner {
       val mf = new org.apache.hadoop.fs.Path(path, ManifestFile)
       fs.exists(mf) && {
         val in = fs.open(mf)
-        try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](4096)
-          var n = in.read(buf)
-          while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-          new String(bytes.toByteArray, "UTF-8") == fp
-        } finally in.close()
+        try new String(in.readAllBytes(), "UTF-8") == fp
+        finally in.close()
       }
     }
   }
@@ -152,26 +156,20 @@ object BulkRunner {
       val propFrames: Map[String, DataFrame] = ic.property.map { case (name, w) =>
         val origin = stages.getOrElse(w.origin,
           throw new NoSuchElementException(s"origin ${w.origin} not materialized"))
-        val resolved = (w.arrayInput, w.jsonPath) match {
-          case (true, None) => Wiring.fanIn(origin)
-          case (true, Some(path)) =>
-            Wiring.fanIn(origin.select(col("idx"),
+        val resolved = w.jsonPath match {
+          case Some(path) if !w.arrayInput && ic.isArray && Wiring.isStarPath(path) =>
+            Wiring.jsonPathExplode(origin, path)
+          case _ =>
+            val projected = w.jsonPath.fold(origin)(path => origin.select(col("idx"),
               element_at(JsonPathExtract.json_path_extract(
                 col("value").cast("string"), path), 1).as("value")))
-          case (false, Some(path)) if isStar(path) && ic.isArray =>
-            Wiring.jsonPathExplode(origin, path)
-          case (false, Some(path)) =>
-            origin.select(col("idx"),
-              element_at(JsonPathExtract.json_path_extract(
-                col("value").cast("string"), path), 1).as("value"))
-          case (false, None) => origin
+            if (w.arrayInput) Wiring.fanIn(projected) else projected
         }
         name -> resolved
       }
 
-      val (in: DataFrame, zipCleanup: (() => Unit)) =
-        if (propFrames.isEmpty)
-          (conf.spark.range(1).select(lit(0).as("idx")), () => ())
+      val in =
+        if (propFrames.isEmpty) conf.spark.range(1).select(lit(0).as("idx"))
         else Wiring.zipByIdx(propFrames)
 
       val out = execute(op, blockSpec, in, propFrames.keys.toSeq, conf)
@@ -182,9 +180,6 @@ object BulkRunner {
           // manifest AFTER the parquet commit: a crash between the two
           // leaves _SUCCESS without a manifest → recomputed on resume
           writeManifest(conf, path, fp)
-          // the parquet checkpoint cuts the lineage, so the zip's
-          // interned property frames can be released now
-          zipCleanup()
           conf.spark.read.parquet(path)
         case None => out
       }
@@ -199,10 +194,6 @@ object BulkRunner {
   // ------------------------------------------------------------------
   private def normalize(df: DataFrame): DataFrame =
     df.select(col("idx").cast("int").as("idx"), col("value").cast("binary").as("value"))
-
-  private def isStar(path: String): Boolean =
-    try JsonPath.compile(path).contains(JsonPath.Star)
-    catch { case _: Exception => false }
 
   /** One stage row, built and run as the Runner builds and runs it: the
     * `literal` inputs overridden by the row's non-NULL `wired` values,
@@ -260,33 +251,13 @@ object BulkRunner {
       }
     }, ArrayType(BinaryType))
     val raw = in.select(col("idx").cast("int").as("src_idx"),
-      outputs(struct((col("idx").cast("int") +: wiredNames.map(col(_))): _*)).as("outs"))
+      outputs(struct((col("idx").cast("int") +: wiredNames.map(col(_))): _*)).as("values"))
     // E13 at frame scale (Runner.scala's sortedResults loop): fan-out
     // mode keeps output[0] at the input index; otherwise every buffer
     // becomes an independent row, re-indexed contiguously by
     // (input idx, buffer position) — how audio_chunk's N chunks become
     // N rows (reference pipeline.go:523-601).
-    if (isArray) normalize(raw.select(col("src_idx").as("idx"), col("outs")(0).as("value")))
-    else explodeOutputs(raw)
-  }
-
-  /** Explode per-row output buffers to independent rows with a global
-    * contiguous index — zipWithIndex over a range-partitioned frame,
-    * same pattern as [[Wiring.jsonPathExplode]] (no single-task
-    * `row_number()` window). */
-  private def explodeOutputs(raw: DataFrame): DataFrame = {
-    val spark = raw.sparkSession
-    val exploded = raw
-      .select(col("src_idx"), posexplode(col("outs")).as(Seq("pos", "value")))
-      .repartitionByRange(col("src_idx"), col("pos"))
-      .sortWithinPartitions("src_idx", "pos")
-    val indexed = exploded.select("value").rdd.zipWithIndex.map {
-      case (r, i) => org.apache.spark.sql.Row(i.toInt, r.getAs[Array[Byte]](0))
-    }
-    spark.createDataFrame(indexed, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("idx",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.BinaryType))))
+    if (isArray) normalize(raw.select(col("src_idx").as("idx"), col("values")(0).as("value")))
+    else Wiring.indexedExplode(raw)
   }
 }

@@ -49,7 +49,6 @@ class CheckpointStore(val roots: Seq[String], conf: Configuration)
 
   def this(root: String) = this(Seq(root), new Configuration())
   def this(roots: Seq[String]) = this(roots, new Configuration())
-  def this(root: String, conf: Configuration) = this(Seq(root), conf)
 
   private def path(root: String, parts: String*): Path =
     parts.foldLeft(CheckpointStore.localPath(root))(_.resolve(_))

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Engine dataflow operators E1–E6 (SURVEY §2.1): origin resolution,
   * JSONPath projection, fan-out, fan-in, zip-merge, input-priority
@@ -149,7 +150,7 @@ object Wiring {
       case None => raw
     }
 
-  private def isStarPath(path: String): Boolean =
+  private[pipeline] def isStarPath(path: String): Boolean =
     try JsonPath.compile(path).contains(JsonPath.Star)
     catch { case _: Exception => false }
 
@@ -178,31 +179,29 @@ object Wiring {
   // -------------------------------------------------- DataFrame layer
   /** E2/E3 over a stage frame `(idx, value)`: JSONPath projection with
     * `[*]` fan-out, re-indexed by match position. Runs as a Catalyst
-    * expression (JsonPathExtract) + posexplode — fully distributed, for
-    * stages whose fan-out is the data itself.
+    * expression (JsonPathExtract) + [[indexedExplode]] — fully
+    * distributed, for stages whose fan-out is the data itself. */
+  def jsonPathExplode(stage: DataFrame, path: String): DataFrame =
+    indexedExplode(stage.select(col("idx").as("src_idx"),
+      JsonPathExtract.json_path_extract(col("value").cast("string"), path).as("values")))
+
+  /** One row per element of `values` in a frame `(src_idx, values)`, as
+    * `(idx INT, value)` with the element type of `values`, ordered by
+    * (src_idx, position) and indexed contiguously from 0.
     *
-    * The global contiguous index comes from `zipWithIndex` over a
-    * range-partitioned, partition-sorted frame (per-partition offsets,
-    * one extra count job) — NOT from a `row_number()` window with no
-    * partitionBy, which would funnel the whole exploded stage through a
-    * single task. */
-  def jsonPathExplode(stage: DataFrame, path: String): DataFrame = {
-    val spark = stage.sparkSession
-    val exploded = stage
-      .select(col("idx").as("src_idx"),
-        JsonPathExtract.json_path_extract(col("value").cast("string"), path)
-          .as("matches"))
-      .select(col("src_idx"), posexplode(col("matches")).as(Seq("pos", "value")))
+    * The global index comes from `zipWithIndex` over a range-partitioned,
+    * partition-sorted frame (per-partition offsets, one extra count job)
+    * — NOT from a `row_number()` window with no partitionBy, which would
+    * funnel the whole exploded stage through a single task. */
+  private[pipeline] def indexedExplode(arrays: DataFrame): DataFrame = {
+    val exploded = arrays
+      .select(col("src_idx"), posexplode(col("values")).as(Seq("pos", "value")))
       .repartitionByRange(col("src_idx"), col("pos"))
       .sortWithinPartitions("src_idx", "pos")
-    val indexed = exploded.select("value").rdd.zipWithIndex.map {
-      case (r, i) => org.apache.spark.sql.Row(i.toInt, r.getString(0))
-    }
-    spark.createDataFrame(indexed, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("idx",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.StringType))))
+      .select("value")
+    val indexed = exploded.rdd.zipWithIndex.map { case (r, i) => Row(i.toInt, r.get(0)) }
+    arrays.sparkSession.createDataFrame(indexed, StructType(Seq(
+      StructField("idx", IntegerType), StructField("value", exploded.schema("value").dataType))))
   }
 
   /** E4: fan-in — all rows of a stage as ONE array value (ordered by
@@ -212,48 +211,54 @@ object Wiring {
       .select(lit(0).as("idx"),
         transform(array_sort(col("xs")), x => x("value")).as("value"))
 
-  /** E5: positional zip of property frames on idx. Scalar (1-row)
-    * frames broadcast their value to every idx, and a multi-row frame
-    * SHORTER than the longest one extends with its last value — the
-    * MergeMaps inherit rule (block.go:404-500: an appended row inherits
-    * the last accumulated row), so the executors agree with the
-    * control-plane zip instead of silently inner-join-dropping the
-    * longer frame's tail. (MergeMaps applies the inherit only when the
-    * shorter property was wired BEFORE the longer one — the common
-    * fan-out shape; this combinator inherits uniformly, which for a
-    * shorter LATER property fills the value the control plane would
-    * leave to the block's literal/default.)
+  /** E5: positional zip of property frames on idx, each property's value
+    * in a column named after it. Scalar (1-row) frames broadcast their
+    * value to every idx, and a multi-row frame SHORTER than the longest
+    * one extends with its last value — the MergeMaps inherit rule
+    * (block.go:404-500: an appended row inherits the last accumulated
+    * row), so the executors agree with the control-plane zip instead of
+    * silently inner-join-dropping the longer frame's tail. (MergeMaps
+    * applies the inherit only when the shorter property was wired BEFORE
+    * the longer one — the common fan-out shape; this combinator inherits
+    * uniformly, which for a shorter LATER property fills the value the
+    * control plane would leave to the block's literal/default.)
     *
-    * The zipped rows come in no particular order: each carries its idx.
-    * Each frame is persisted and counted exactly once; everything after
-    * runs off the persisted data. Returns the zipped frame and a cleanup
-    * thunk that unpersists those frames: call it once the zipped stage
-    * has been materialized (e.g. checkpointed to parquet), so a long
-    * pipeline does not accumulate one cached frame per wired property.
-    */
-  def zipByIdx(properties: Map[String, DataFrame]): (DataFrame, () => Unit) = {
+    * The result is a lazy plan that caches nothing. One property costs
+    * nothing: its frame comes back renamed, with no job. Several
+    * properties are counted once each, while the plan is built, to pick
+    * the spine and each frame's rule; every frame is then computed again
+    * by each consumer of the zipped stage (the count, the spine, the
+    * last-value lookup and the join). The cost compounds: when a zipped
+    * property frame is itself a zipped stage, each of those consumers
+    * recomputes that stage's own inputs once per its consumers, so the
+    * upstream work of a chain of several-property stages multiplies at
+    * each level instead of growing with its length. A `checkpointDir`
+    * writes each stage once and reads it back, which cuts that lineage.
+    * The zipped rows come in no particular order: each carries its idx. */
+  def zipByIdx(properties: Map[String, DataFrame]): DataFrame = {
     require(properties.nonEmpty)
     val renamed = properties.map { case (name, df) =>
       name -> df.select(col("idx"), col("value").as(name))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val counts = renamed.map { case (name, df) => name -> df.count() }
-    val maxRows = counts.values.max
-    val spine = renamed(counts.find(_._2 == maxRows).get._1).select("idx")
-    val zipped = renamed.map { case (name, df) =>
-      counts(name) match {
-        case n if n == maxRows => df
-        case 1L =>
-          df.drop("idx").crossJoin(spine).select(col("idx"), col(name))
-        case _ =>
-          val lastVal = df.orderBy(col("idx").desc).limit(1)
-            .select(col(name).as(s"__last_$name"))
-          spine.join(df, Seq("idx"), "left")
-            .crossJoin(broadcast(lastVal))
-            .select(col("idx"),
-              coalesce(col(name), col(s"__last_$name")).as(name))
-      }
-    }.reduce((a, b) => a.join(b, Seq("idx"), "inner"))
-    (zipped, () => renamed.values.foreach(_.unpersist(false)))
+    if (renamed.size == 1) renamed.head._2
+    else {
+      val counts = renamed.map { case (name, df) => name -> df.count() }
+      val maxRows = counts.values.max
+      val spine = renamed(counts.find(_._2 == maxRows).get._1).select("idx")
+      renamed.map { case (name, df) =>
+        counts(name) match {
+          case n if n == maxRows => df
+          case 1L =>
+            df.drop("idx").crossJoin(spine).select(col("idx"), col(name))
+          case _ =>
+            val lastVal = df.orderBy(col("idx").desc).limit(1)
+              .select(col(name).as(s"__last_$name"))
+            spine.join(df, Seq("idx"), "left")
+              .crossJoin(broadcast(lastVal))
+              .select(col("idx"),
+                coalesce(col(name), col(s"__last_$name")).as(name))
+        }
+      }.reduce((a, b) => a.join(b, Seq("idx"), "inner"))
+    }
   }
 }

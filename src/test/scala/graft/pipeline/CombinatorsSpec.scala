@@ -39,12 +39,11 @@ class CombinatorsSpec extends AnyFunSuite {
     val texts = stage(0 -> "t0", 1 -> "t1", 2 -> "t2")
     val starts = stage(0 -> "0.0", 1 -> "2.0", 2 -> "4.0")
     val system = stage(0 -> "sys")
-    val (zipped, cleanup) = Wiring.zipByIdx(Map(
+    val zipped = Wiring.zipByIdx(Map(
         "text" -> texts, "start" -> starts, "system" -> system))
     val out = zipped.orderBy("idx").collect()
       .map(r => (r.getAs[String]("text"), r.getAs[String]("start"),
         r.getAs[String]("system"))).toSeq
-    cleanup()
     assert(out == Seq(("t0", "0.0", "sys"), ("t1", "2.0", "sys"), ("t2", "4.0", "sys")))
   }
 
@@ -55,10 +54,9 @@ class CombinatorsSpec extends AnyFunSuite {
     // agree instead of inner-join-dropping the longer frame's tail
     val texts = stage(0 -> "t0", 1 -> "t1")
     val marks = stage(0 -> "m0", 1 -> "m1", 2 -> "m2", 3 -> "m3")
-    val (zipped, cleanup) = Wiring.zipByIdx(Map("text" -> texts, "mark" -> marks))
+    val zipped = Wiring.zipByIdx(Map("text" -> texts, "mark" -> marks))
     val out = zipped.orderBy("idx").collect()
       .map(r => (r.getAs[String]("text"), r.getAs[String]("mark"))).toSeq
-    cleanup()
     assert(out == Seq(("t0", "m0"), ("t1", "m1"), ("t1", "m2"), ("t1", "m3")))
     // control-plane agreement on the same shape (text wired first)
     val cp = Wiring.mergeMaps(Seq(
