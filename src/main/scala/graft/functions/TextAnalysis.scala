@@ -152,9 +152,10 @@ object TextAnalysis {
     // hash-aggregated it back per doc TWICE — once for the tf branch,
     // once for the aux constants, whose differing column pruning
     // defeats exchange reuse — so two full explode+shuffle passes paid
-    // for what a projection computes in zero. Null texts are excluded
-    // explicitly (the explode dropped them implicitly: no tokens → no
-    // rows); empty text still tokenizes to [""] in both shapes. The
+    // for what a projection computes in zero. A null text has no
+    // tokens (NULL `dl`, no tf above 0): it counts toward N, as in the
+    // oracle's count(*) over documents, but not toward avgdl, and it
+    // scores nothing; empty text still tokenizes to [""]. The
     // per-row form coincides with the old per-doc_id grouping under
     // the corpus key contract (doc_id unique and non-null — verified
     // at every driver SF, and the same assumption every per-doc ta_*
@@ -162,17 +163,19 @@ object TextAnalysis {
     val toks = tokens(lower(col("text")))
     def tfOf(qt: String): Column = size(filter(toks, _ === lit(qt))).cast("long")
     val perDoc = t(spark, dir, "documents")
-      .where(col("text").isNotNull)
-      .select(col("doc_id") +: size(toks).cast("long").as("dl") +:
+      .select(col("doc_id") +:
+        when(col("text").isNotNull, size(toks)).cast("long").as("dl") +:
         queryTerms.map(qt => tfOf(qt).as(s"tf_$qt")): _*)
-    // The 1-row corpus-constants aggregate (sumdl, ndocs, per-term df)
-    // now rides a SCAN-LEVEL map-side aggregate of the same projection
-    // — one extra parquet read but no explode and no doc-keyed shuffle
-    // (its exchange carries exactly one row of partial aggregates).
+    // The 1-row corpus-constants aggregate (sumdl, ntexts, ndocs,
+    // per-term df) now rides a SCAN-LEVEL map-side aggregate of the same
+    // projection — one extra parquet read but no explode and no
+    // doc-keyed shuffle (its exchange carries exactly one row of
+    // partial aggregates).
     val aux = perDoc.agg(sum(col("dl")).as("sumdl"),
-      (count(col("doc_id")).as("ndocs") +: queryTerms.map(qt =>
-        sum(when(col(s"tf_$qt") > 0, 1L).otherwise(0L)).as(s"df_$qt"))): _*)
-    val avgdl = col("sumdl").cast("double") / col("ndocs")
+      (count(col("dl")).as("ntexts") +: count(lit(1)).as("ndocs") +:
+        queryTerms.map(qt =>
+          sum(when(col(s"tf_$qt") > 0, 1L).otherwise(0L)).as(s"df_$qt"))): _*)
+    val avgdl = col("sumdl").cast("double") / col("ntexts")
     def idfOf(qt: String): Column =
       log((col("ndocs").cast("double") - col(s"df_$qt") + lit(0.5)) /
         (col(s"df_$qt") + lit(0.5)) + lit(1.0))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType}
 import org.apache.spark.sql.functions._
 
 /** Data-plane pipeline executor: every stage output IS a DataFrame
-  * `(idx INT, value BINARY)` — nothing is ever collected to the driver.
+  * `(idx BIGINT, value BINARY)` — nothing is ever collected to the driver.
   *
   * The control-plane [[Runner]] replicates the reference's execution
   * model faithfully (driver-resident buffers, moderation, retry,
@@ -75,7 +75,7 @@ object BulkRunner {
       fps(blockSpec.slug) = fp
       val ckpt = conf.checkpointDir.map(r => s"$r/${spec.slug}/${blockSpec.slug}")
       val finished = conf.resume && ckpt.exists(p => checkpointCurrent(conf, p, fp))
-      if (finished) stages(blockSpec.slug) = conf.spark.read.parquet(ckpt.get)
+      if (finished) stages(blockSpec.slug) = normalize(conf.spark.read.parquet(ckpt.get))
       else stages(blockSpec.slug) = runBlock(spec, blockSpec, stages, conf, fp)
     }
     stages.toMap
@@ -169,7 +169,7 @@ object BulkRunner {
       }
 
       val in =
-        if (propFrames.isEmpty) conf.spark.range(1).select(lit(0).as("idx"))
+        if (propFrames.isEmpty) conf.spark.range(1).select(col("id").as("idx"))
         else Wiring.zipByIdx(propFrames)
 
       val out = execute(op, blockSpec, in, propFrames.keys.toSeq, conf)
@@ -185,15 +185,9 @@ object BulkRunner {
       }
   }
 
-  /** Resume: hydrate stage frames from a previous run's parquet
-    * checkpoints (the E12 analogue at data scale). */
-  def load(spark: SparkSession, root: String, pipelineSlug: String,
-      blockSlug: String): DataFrame =
-    spark.read.parquet(s"$root/$pipelineSlug/$blockSlug")
-
   // ------------------------------------------------------------------
   private def normalize(df: DataFrame): DataFrame =
-    df.select(col("idx").cast("int").as("idx"), col("value").cast("binary").as("value"))
+    df.select(col("idx").cast("long").as("idx"), col("value").cast("binary").as("value"))
 
   /** One stage row, built and run as the Runner builds and runs it: the
     * `literal` inputs overridden by the row's non-NULL `wired` values,
@@ -202,8 +196,8 @@ object BulkRunner {
     * literal or default to fill it, yields a NULL output (None) and the
     * block is not called; any other `prepare` failure throws, failing
     * the stage. */
-  def runRow(op: BlockOp, literal: Map[String, PValue], wired: Map[String, PValue],
-      idx: Int, ctx: BlockCtx, slug: String): Option[BlockResult] = {
+  private def runRow(op: BlockOp, literal: Map[String, PValue], wired: Map[String, PValue],
+      idx: Long, ctx: BlockCtx, slug: String): Option[BlockResult] = {
     val row = literal ++ wired.filter(_._2 != PNull)
     def unfilled(p: PropSpec): Boolean = p.required && p.default.isEmpty &&
       wired.get(p.name).contains(PNull) &&
@@ -243,15 +237,15 @@ object BulkRunner {
           name -> Wiring.typeWired(op.propsByName.get(name), v,
             v.asSeq.headOption.fold(Array.emptyByteArray)(_.asBytes))
         }.toMap
-        runRow(op, literal, wired, r.getInt(0), ctx, slug) match {
+        runRow(op, literal, wired, r.getLong(0), ctx, slug) match {
           case None                 => Seq(null)
           case Some(res) if isArray => Seq(res.outputs.headOption.getOrElse(Array.emptyByteArray))
           case Some(res)            => res.outputs
         }
       }
     }, ArrayType(BinaryType))
-    val raw = in.select(col("idx").cast("int").as("src_idx"),
-      outputs(struct((col("idx").cast("int") +: wiredNames.map(col(_))): _*)).as("values"))
+    val raw = in.select(col("idx").as("src_idx"),
+      outputs(struct((col("idx") +: wiredNames.map(col(_))): _*)).as("values"))
     // E13 at frame scale (Runner.scala's sortedResults loop): fan-out
     // mode keeps output[0] at the input index; otherwise every buffer
     // becomes an independent row, re-indexed contiguously by

@@ -1,43 +1,49 @@
 package graft.pipeline
 
 import graft.Tables.t
-import graft.pipeline.blocks.TextBlocks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-gate queries that put the pipeline BLOCK semantics under the
-  * DuckDB hash-compare: text_replace and wrap_text (reference blocks
-  * #17/#18) run per document through [[BulkRunner.runRow]], the row
-  * function every BulkRunner stage runs, and the JsonPathExtract
-  * Catalyst expression behind E2 wiring, applied corpus-wide. One
-  * parquet scan and no shuffle before the final sort — at 100 TB these
-  * are embarrassingly parallel map stages. */
+  * DuckDB hash-compare: block specs run corpus-wide by the data-plane
+  * [[BulkRunner]] (text_replace and wrap_text, reference blocks
+  * #17/#18), and the JsonPathExtract Catalyst expression behind E2
+  * wiring. One parquet scan and no shuffle before the final sort — at
+  * 100 TB these are embarrassingly parallel map stages. */
 object PipelineQueries {
 
+  /** A fan-out block whose `text` is wired from stage `origin`. */
+  private def textStage(id: String, slug: String, origin: String,
+      input: Map[String, PValue]): BlockSpec =
+    BlockSpec(id, slug, s"$id over every document", input = input,
+      inputConfig = Some(InputConfig(isArray = true,
+        property = Map("text" -> PropertyWiring(origin)))))
+
+  /** Runs `blocks` through [[BulkRunner]] over the documents corpus as
+    * the initial stage `src` (`idx` = `doc_id`, `value` = `text`):
+    * `(doc_id, rendered)`, the last block's output per document. */
+  private def runOverDocuments(spark: SparkSession, dir: String, slug: String,
+      blocks: Seq[BlockSpec]): DataFrame = {
+    val initial = t(spark, dir, "documents")
+      .select(col("doc_id").as("idx"), col("text").cast("binary").as("value"))
+    val out = BulkRunner.run(PipelineSpec(slug, "t", "corpus-wide text blocks", blocks),
+      Map("src" -> initial),
+      BulkRunner.BulkConfig(spark, BlockRegistry.standard(), Clients.mockCtx()))
+    out(blocks.last.slug)
+      .select(col("idx").as("doc_id"), col("value").cast("string").as("rendered"))
+  }
+
   /** Blocks #17+#18 composed over every document: wrap_text(prefix/
-    * suffix) of text_replace(text, "data", "[data]"), one UDF over the
-    * scan (no stage frames, zip or count). */
-  def plTextOps(spark: SparkSession, dir: String): DataFrame = {
-    val replace = Map[String, PValue]("old" -> PStr("data"), "new" -> PStr("data"),
-      "prefix" -> PStr("["), "suffix" -> PStr("]"))
-    val wrap = Map[String, PValue]("prefix" -> PStr("<<"), "suffix" -> PStr(">>"))
-    val ctx = Clients.mockCtx()
-    def step(op: BlockOp, lits: Map[String, PValue], text: PValue): PValue =
-      BulkRunner.runRow(op, lits, Map("text" -> text), 0, ctx, op.id)
-        .fold[PValue](PNull)(res => PBytes(res.outputs.head))
-    val render = udf { (text: String) =>
-      step(TextBlocks.WrapText, wrap,
-        step(TextBlocks.TextReplace, replace, Option(text).fold[PValue](PNull)(PStr))) match {
-        case PNull => null
-        case out   => out.asString
-      }
-    }
-    t(spark, dir, "documents")
-      .select(col("doc_id"), render(col("text")).as("rendered"))
+    * suffix) of text_replace(text, "data", "[data]"). */
+  def plTextOps(spark: SparkSession, dir: String): DataFrame =
+    runOverDocuments(spark, dir, "pl-text-ops", Seq(
+      textStage("text_replace", "replace", "src", Map("old" -> PStr("data"),
+        "new" -> PStr("data"), "prefix" -> PStr("["), "suffix" -> PStr("]"))),
+      textStage("wrap_text", "wrap", "replace",
+        Map("prefix" -> PStr("<<"), "suffix" -> PStr(">>")))))
       .withColumn("n_marks",
         size(split(col("rendered"), "\\[data\\]", -1)) - 1)
       .orderBy("doc_id")
-  }
 
   /** E2 wiring over `events.props`: the JsonPathExtract expression
     * (scalar path) against DuckDB's JSON extraction. */
@@ -53,32 +59,15 @@ object PipelineQueries {
       .where(col("k") % 7 === 0)
       .orderBy("event_id")
 
-  /** The ENGINE itself under the oracle: a two-block pipeline spec
-    * (wrap_text → text_replace) executed by the data-plane BulkRunner
-    * over the whole documents corpus as the initial stage — spec
-    * parsing, wiring, zip, and the row executor all sit inside the
-    * hash-compared result. */
-  def plBulkPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val spec = PipelineSpec("pl-bulk", "t",
-      "corpus-wide wrap+replace via the data-plane executor", Seq(
-        BlockSpec("wrap_text", "wrap", "wrap every document text",
-          input = Map("prefix" -> PStr("<"), "suffix" -> PStr(">")),
-          inputConfig = Some(InputConfig(isArray = true,
-            property = Map("text" -> PropertyWiring("src"))))),
-        BlockSpec("text_replace", "mark", "mark the data token",
-          input = Map("old" -> PStr("data"), "new" -> PStr("DATA")),
-          inputConfig = Some(InputConfig(isArray = true,
-            property = Map("text" -> PropertyWiring("wrap")))))))
-    val initial = t(spark, dir, "documents")
-      .select(col("doc_id").cast("int").as("idx"),
-        col("text").cast("binary").as("value"))
-    val out = BulkRunner.run(spec, Map("src" -> initial),
-      BulkRunner.BulkConfig(spark, BlockRegistry.standard(), Clients.mockCtx()))
-    out("mark")
-      .select(col("idx").cast("long").as("doc_id"),
-        col("value").cast("string").as("rendered"))
+  /** The ENGINE itself under the oracle: wrap_text then text_replace,
+    * so the replace also searches the wrap markers. */
+  def plBulkPipeline(spark: SparkSession, dir: String): DataFrame =
+    runOverDocuments(spark, dir, "pl-bulk", Seq(
+      textStage("wrap_text", "wrap", "src",
+        Map("prefix" -> PStr("<"), "suffix" -> PStr(">"))),
+      textStage("text_replace", "mark", "wrap",
+        Map("old" -> PStr("data"), "new" -> PStr("DATA")))))
       .orderBy("doc_id")
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pl_text_ops"      -> plTextOps _,

@@ -29,7 +29,7 @@ import scala.util.Try
   */
 object Runner {
 
-  sealed trait RunStatus { def isTerminal: Boolean = true }
+  sealed trait RunStatus
   case object Completed extends RunStatus
   case object Stopped extends RunStatus
   case class StoppedForRegeneration(target: String, idx: Int) extends RunStatus
@@ -298,7 +298,7 @@ object Runner {
         .getOrElse(op.retryCount)
       val interval = r.props.get("retry_interval_ms").map(_.asLong)
         .getOrElse(op.retryIntervalMs)
-      val rowCtx = ctx.copy(inputIndex = r.idx)
+      val rowCtx = ctx.copy(inputIndex = r.idx.toInt)
       var attempt = 0
       var last: Try[BlockResult] = null
       while (attempt <= retries) {
@@ -330,13 +330,13 @@ object Runner {
       (1 until rows.size).foreach(_ => ExecutionContext.global.execute(() => drain()))
       drain()
       done.foreach(_.await())
-      rows.indices.map(i => (rows(i).idx, Option(out(i)).getOrElse(
+      rows.indices.map(i => (rows(i).idx.toInt, Option(out(i)).getOrElse(
         scala.util.Failure(new IllegalStateException("row worker died")))))
     } else {
       val acc = scala.collection.mutable.ArrayBuffer[(Int, Try[BlockResult])]()
       rows.foreach { r =>
         val res = runOne(r)
-        acc += ((r.idx, res))
+        acc += ((r.idx.toInt, res))
         res match {
           case scala.util.Failure(_) => return acc.toSeq // early abort
           case scala.util.Success(b) if b.stop => return acc.toSeq

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Engine dataflow operators E1–E6 (SURVEY §2.1): origin resolution,
   * JSONPath projection, fan-out, fan-in, zip-merge, input-priority
@@ -186,7 +186,7 @@ object Wiring {
       JsonPathExtract.json_path_extract(col("value").cast("string"), path).as("values")))
 
   /** One row per element of `values` in a frame `(src_idx, values)`, as
-    * `(idx INT, value)` with the element type of `values`, ordered by
+    * `(idx BIGINT, value)` with the element type of `values`, ordered by
     * (src_idx, position) and indexed contiguously from 0.
     *
     * The global index comes from `zipWithIndex` over a range-partitioned,
@@ -199,16 +199,16 @@ object Wiring {
       .repartitionByRange(col("src_idx"), col("pos"))
       .sortWithinPartitions("src_idx", "pos")
       .select("value")
-    val indexed = exploded.rdd.zipWithIndex.map { case (r, i) => Row(i.toInt, r.get(0)) }
+    val indexed = exploded.rdd.zipWithIndex.map { case (r, i) => Row(i, r.get(0)) }
     arrays.sparkSession.createDataFrame(indexed, StructType(Seq(
-      StructField("idx", IntegerType), StructField("value", exploded.schema("value").dataType))))
+      StructField("idx", LongType), StructField("value", exploded.schema("value").dataType))))
   }
 
   /** E4: fan-in — all rows of a stage as ONE array value (ordered by
     * idx), the DataFrame form of `array_input: true`. */
   def fanIn(stage: DataFrame): DataFrame =
     stage.select(collect_list(struct(col("idx"), col("value"))).as("xs"))
-      .select(lit(0).as("idx"),
+      .select(lit(0L).as("idx"),
         transform(array_sort(col("xs")), x => x("value")).as("value"))
 
   /** E5: positional zip of property frames on idx, each property's value

@@ -4,7 +4,7 @@ import graft.pipeline._
 
 /** Pure-text operators (reference blocks #17-20). `process` is the one
   * implementation: the Runner calls it per fan-out row, and BulkRunner
-  * and the `pl_text_ops` gate query call it per DataFrame row.
+  * per DataFrame row.
   */
 object TextBlocks {
 

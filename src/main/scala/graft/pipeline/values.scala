@@ -103,8 +103,9 @@ object PropSpec {
 }
 
 /** One resolved input row of a block execution: `idx` is the fan-out
-  * position (the reference's blockInputIndex). */
-case class InputRow(idx: Int, props: Map[String, PValue]) extends Serializable {
+  * position (the reference's blockInputIndex). The Runner's positions
+  * fit an Int; a BulkRunner row carries its stage idx, a BIGINT. */
+case class InputRow(idx: Long, props: Map[String, PValue]) extends Serializable {
   def str(name: String): String = props.get(name).map(_.asString).getOrElse("")
   def bytes(name: String): Array[Byte] =
     props.get(name).map(_.asBytes).getOrElse(Array.empty)

@@ -128,7 +128,7 @@ class BulkRunnerSpec extends AnyFunSuite {
         "image" -> initial.where(col("idx") === 1 || col("idx") === 3)),
       BulkRunner.BulkConfig(spark, registry, Clients.mockCtx()))
     def rows(slug: String) = out(slug).orderBy("idx").collect().toSeq
-      .map(r => r.getInt(0) -> Option(r.getAs[Array[Byte]]("value")))
+      .map(r => r.getLong(0) -> Option(r.getAs[Array[Byte]]("value")))
 
     assert(rows("wrap").map { case (i, v) => i -> v.map(new String(_, "UTF-8")) } ==
       Seq(0 -> Some("<a x>"), 1 -> None, 2 -> Some("<b>")))
@@ -196,7 +196,7 @@ class BulkRunnerSpec extends AnyFunSuite {
       val bulk = BulkRunner.run(chunkSpec, Map.empty,
         BulkRunner.BulkConfig(spark, registry, Clients.mockCtx()))
       val bulkChunks = bulk("chunks").orderBy("idx").collect()
-        .map(r => (r.getInt(0), new String(r.getAs[Array[Byte]]("value"), "UTF-8")))
+        .map(r => (r.getLong(0), new String(r.getAs[Array[Byte]]("value"), "UTF-8")))
       assert(bulkChunks.toSeq ==
         Seq((0, audio), (1, audio), (2, audio)),
         "each stub segment must be an independent contiguous-idx row")
@@ -212,6 +212,43 @@ class BulkRunnerSpec extends AnyFunSuite {
       assert(runnerChunks == bulkChunks.toSeq,
         "bulk E13 explode must agree with the control-plane Runner")
     } finally java.nio.file.Files.delete(stub)
+  }
+
+  test("a BIGINT idx past 2^31 flows through fan-out, explode and fan-in stages") {
+    val wide = Seq(1L << 31, 1L << 40)
+    val initial = spark.createDataFrame(java.util.List.of(
+        org.apache.spark.sql.Row(wide(0), "a".getBytes("UTF-8")),
+        org.apache.spark.sql.Row(wide(1), "b".getBytes("UTF-8"))),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("idx",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("value",
+          org.apache.spark.sql.types.BinaryType))))
+    val wideSpec = PipelineSpec("bulk-wide-idx", "t", "d", Seq(
+      BlockSpec("wrap_text", "wrap", "fan-out keeps the wide idx",
+        input = Map("prefix" -> PStr("<"), "suffix" -> PStr(">")),
+        inputConfig = Some(InputConfig(isArray = true, property = Map(
+          "text" -> PropertyWiring("src"))))),
+      BlockSpec("text_replace", "replace", "outputs explode to fresh rows",
+        input = Map("old" -> PStr("<"), "new" -> PStr("(")),
+        inputConfig = Some(InputConfig(property = Map(
+          "text" -> PropertyWiring("wrap"))))),
+      BlockSpec("join_strings", "join", "fan-in ordered by the wide idx",
+        input = Map("separator" -> PStr("|")),
+        inputConfig = Some(InputConfig(property = Map(
+          "strings" -> PropertyWiring("wrap", arrayInput = true)))))))
+    val out = BulkRunner.run(wideSpec, Map("src" -> initial),
+      BulkRunner.BulkConfig(spark, registry, Clients.mockCtx()))
+    def rows(slug: String) = out(slug).orderBy("idx").collect().toSeq
+      .map(r => r.getLong(0) -> new String(r.getAs[Array[Byte]]("value"), "UTF-8"))
+
+    Seq("wrap", "replace", "join").foreach { slug =>
+      assert(out(slug).schema("idx").dataType == org.apache.spark.sql.types.LongType,
+        s"$slug: ${out(slug).schema}")
+    }
+    assert(rows("wrap") == Seq(wide(0) -> "<a>", wide(1) -> "<b>"))
+    assert(rows("replace") == Seq(0L -> "(a>", 1L -> "(b>"))
+    assert(rows("join") == Seq(0L -> "<a>|<b>"))
   }
 
   test("TArr fan-in reaches the generic path with bytes intact (join_videos)") {
@@ -282,7 +319,7 @@ class BulkRunnerSpec extends AnyFunSuite {
     val sample = out("wrap").where(col("idx") === 12345).collect()(0)
     assert(new String(sample.getAs[Array[Byte]]("value"), "UTF-8") == "<doc-12345>")
     // checkpoint is a real parquet stage dir, reloadable (E12 at scale)
-    val reloaded = BulkRunner.load(spark, root, "bulk-wide", "wrap")
+    val reloaded = spark.read.parquet(s"$root/bulk-wide/wrap")
     assert(reloaded.count() == n)
     // and the plan is a distributed select, not a driver loop
     assert(out("wrap").queryExecution.executedPlan.toString.contains("FileScan parquet"))

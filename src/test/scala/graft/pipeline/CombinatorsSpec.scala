@@ -19,7 +19,7 @@ class CombinatorsSpec extends AnyFunSuite {
       0 -> """{"segments":[{"t":"a"},{"t":"b"}]}""",
       1 -> """{"segments":[{"t":"c"}]}""")
     val out = Wiring.jsonPathExplode(in, "$.segments[*].t")
-      .orderBy("idx").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+      .orderBy("idx").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(out == Seq((0, "a"), (1, "b"), (2, "c")))
   }
 
@@ -31,7 +31,7 @@ class CombinatorsSpec extends AnyFunSuite {
 
   test("fanIn collapses a stage to one ordered array row") {
     val out = Wiring.fanIn(stage(2 -> "c", 0 -> "a", 1 -> "b")).collect()(0)
-    assert(out.getInt(0) == 0)
+    assert(out.getLong(0) == 0)
     assert(out.getSeq[String](1) == Seq("a", "b", "c"))
   }
 
@@ -76,7 +76,7 @@ class CombinatorsSpec extends AnyFunSuite {
     val rows = df.orderBy("idx").collect()
     assert(rows.length == 128)
     // contiguous global index, ordered by (src, match position)
-    assert(rows.map(_.getInt(0)).toSeq == (0 until 128))
+    assert(rows.map(_.getLong(0)).toSeq == (0 until 128))
     assert(rows(0).getString(1) == "a0" && rows(1).getString(1) == "b0")
     assert(rows(127).getString(1) == "b63")
   }

@@ -229,7 +229,7 @@ class DifferentialSpec extends AnyFunSuite {
           val r = ctrl.outputs.getOrElse(b.slug, Nil).sortBy(_._1)
             .map { case (i, v) => (i, v.toSeq) }
           val s = bulk(b.slug).orderBy("idx").collect().toSeq
-            .map(row => (row.getInt(0),
+            .map(row => (row.getLong(0),
               Option(row.getAs[Array[Byte]]("value"))
                 .getOrElse(Array.empty[Byte]).toSeq))
           if (r == s) None

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A text block that throws on fan-out row 2 and records the rows it ran. */
 private class FailOnRow2(override val id: String, override val mode: ExecMode)
     extends BlockOp {
-  val invoked = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  val invoked = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
   override val props = Seq(PropSpec("text", TString, required = true))
   override def process(row: InputRow, ctx: BlockCtx): BlockResult = {
     invoked.add(row.idx)

@@ -4,7 +4,9 @@
 The driver's sf corpora contain no null/empty/whitespace-only texts, so
 oracle parity on those paths is otherwise untested. This writes a
 documents.parquet of nasty edge docs and symlinks the remaining tables
-from an sf dir, so the NORMAL gate tooling runs unchanged:
+from an sf dir, so the NORMAL gate tooling runs unchanged. One document
+carries a doc_id past 2^31, so a query that narrows the id to INT fails
+on it:
 
     python3 tools/make_edge_corpus.py /tmp/edgedir
     sbt "runMain graft.Verify /tmp/edgedir /tmp/qe <documents-only query names>"
@@ -35,7 +37,8 @@ COPY (
     (9, E'\\tq r s t u v w x ', 'en', 'edge', 17),
     (10, 'Foo BAR baz qux quux corge grault garply waldo fred', 'en', 'other', 52),
     (11, 'numbers 123 456.789 and emails a@b.co plus http://x.io/z', 'en', 'other', 57),
-    (12, NULL, 'en', 'edge', NULL)
+    (12, NULL, 'en', 'edge', NULL),
+    (2147483661, 'wide id data past 2^31', 'en', 'edge', 22)
   ) t(doc_id, text, lang, source, n_chars)
 ) TO '{out}' (FORMAT PARQUET)
 """

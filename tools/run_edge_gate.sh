@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # One-command degenerate-corpus oracle gate: builds the edge corpus
-# (null/empty/tab-edged docs, zero embeddings, null/malformed-JSON
-# events), dumps every registered query through Verify, and
-# hash-compares against DuckDB with the same checker the driver uses.
+# (null/empty/tab-edged docs, a doc_id past 2^31, zero embeddings,
+# null/malformed-JSON events), dumps every registered query through
+# Verify, and hash-compares against DuckDB with
+# tools/check_correctness.py.
 # Relational q1-q9/q13 read only the symlinked TPC-H tables, so on
 # this corpus they repeat the standard gate.
 #
